@@ -1262,22 +1262,19 @@ def _savgol_oracle_sql(width: int, order: int, deriv: int) -> str:
 
 @register("w_savgol_interior", None)
 def w_savgol_interior(spark, sf_dir):
-    """Native Savitzky-Golay (width 11, order 2, smooth) over the event
-    value channel — interior rows, oracle-checked against a
-    machine-generated lag/lead dot product (reference W5 semantics;
-    the interp edges are covered by the numpy-parity unit tests)."""
+    """Savitzky-Golay (width 11, order 2, smooth) over the event value
+    channel — interior rows, oracle-checked against a machine-generated
+    lag/lead dot product (reference W5 semantics; the interp edges are
+    covered by w_indicator_full and the numpy-parity unit tests)."""
     from tabata_spark.operators.positions import record_frame
-    from tabata_spark.operators.savgol import savgol_native
+    from tabata_spark.operators.savgol import savgol
 
-    sig = _signals(spark, sf_dir)
-    # edges=False: the interior filter below makes the 2*width edge
-    # window aggregates dead weight — don't compute them
-    out = savgol_native(sig, "value", "sg", 11, 2, 0, edges=False)
+    # record length before the Arrow pass: its window shares the
+    # signals' record_id exchange, after it would need a second one
     n = F.count(F.lit(1)).over(record_frame())
-    return (
-        out.withColumn("__n", n)
-        .filter((F.col("seq") >= 5) & (F.col("seq") <= F.col("__n") - 6))
-        .select("record_id", "seq", F.round("sg", 6).alias("sg"))
+    out = savgol(_signals(spark, sf_dir).withColumn("__n", n), "value", "sg", 11, 2, 0)
+    return out.filter((F.col("seq") >= 5) & (F.col("seq") <= F.col("__n") - 6)).select(
+        "record_id", "seq", F.round("sg", 6).alias("sg")
     )
 
 
@@ -2477,13 +2474,15 @@ ORACLES["sim_lsh_ann"] = _sim_lsh_oracle()
 
 
 def _savgol_full_sql_expr(width: int, order: int, deriv: int) -> tuple[str, str]:
-    """Machine-generate the exact SQL mirror of savgol_native —
-    including the mode='interp' edge maps — over column ``value``.
+    """Machine-generate a SQL mirror of savgol_filter_np — including
+    the mode='interp' edge maps — over column ``value``.
 
     Returns (window_cols_sql, case_expr_sql): per-position head/tail
     probe columns and the CASE expression combining head, tail, and
-    interior, with the n >= width guard. Term order matches the Spark
-    expression tree so the doubles are bit-identical."""
+    interior, with the n >= width guard (records shorter than
+    ``width`` are not modelled). The dot products sum in a different
+    order from the numpy kernel, so values agree to rounding, not bit
+    for bit; the queries compare them rounded to 6 digits."""
     from tabata_spark.operators.savgol import savgol_coeffs, savgol_edge_matrix
 
     h = width // 2
@@ -2582,7 +2581,7 @@ def _indicator_full_oracle(width: int, order: int, sigma: float, deg: int) -> st
 @register("w_indicator_full", None)
 def w_indicator_full(spark, sf_dir):
     """The reference's core feature operator end-to-end (W5+W6,
-    instants.py:45-93): native SG derivative (width 11, deg 2,
+    instants.py:45-93): SG derivative (width 11, deg 2,
     deriv 1, interp edges) -> threshold at sigma -> crossing
     segmentation -> per-segment linspace ramp. Oracle is the
     machine-generated SQL mirror, edge maps included."""

@@ -196,8 +196,7 @@ class Tube:
         w = self.tube_params["filter_width"]
         if w > 0:
             width = 2 * w + 1
-            out = savgol(out, "zmin", "zmin", width, 2, 0)
-            out = savgol(out, "zmax", "zmax", width, 2, 0)
+            out = savgol(out, ["zmin", "zmax"], ["zmin", "zmax"], width, 2, 0)
         return out.drop(*[c for c in SYNTH if c in out.columns and c not in data.columns])
 
     # -------------------------------------------------------------- scores

@@ -8,111 +8,57 @@ to base+1, with the base incrementing by one per segment (the first
 base is 0 if the first crossing is rising, else 1; a record with no
 crossing is all zeros).
 
-Spark-native formulation (no Python in the hot path):
-
-    b        = x > sigma                   (x < sigma for negative)
-    chg[r]   = b[r] != b[r-1]              (lag)
-    seg(p)   = sum(chg) over rows [start, p+1]   <- the reference's
-               diff-index convention: the crossing row itself still
-               belongs to the *next* segment's count frame
-               (z[i0:i] excludes row i, instants.py:89-92)
-    m, pos   = segment size / offset  (window over (record, seg))
-    ramp     = base + pos/(m-1)            (linspace semantics, m>1)
-
-All windows share the record_id partitioning — one shuffle, codegen.
-The numpy twin ``indicator_np`` is the parity oracle.
+``indicator_np = segment_ramp_np(savgol_filter_np(...))`` are the numpy
+kernels. ``indicator_col`` and ``segment_ramp`` run them per record in
+one Arrow grouped-map pass each (the savgol module's ``_per_record``);
+``reversed_indicator`` is one native window.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from tabata_spark.operators.savgol import savgol, savgol_filter_np
+# ``savgol`` is re-exported: callers reach it as ``indicator.savgol``
+from tabata_spark.operators.savgol import _per_record, savgol, savgol_filter_np  # noqa: F401
+
+
+def segment_ramp_np(x: np.ndarray, sigma: float) -> np.ndarray:
+    """Threshold-crossing segmentation + per-segment linspace ramp of an
+    already-filtered signal (instants.py:82-93).
+
+    A crossing between rows r and r+1 (diff index r) starts a segment at
+    row r; segment j ramps from base+j to base+j+1 over its rows."""
+    x = np.asarray(x, dtype=float)
+    b = x > sigma if sigma > 0 else x < sigma
+    dp = np.diff(b.astype(int))
+    k = np.flatnonzero(dp)
+    n = len(x)
+    if not len(k):
+        return np.zeros(n)
+    base = 1.0 - float(dp[k[0]] == 1)
+    r = np.arange(n)
+    seg = np.searchsorted(k, r, side="right")
+    start = np.concatenate(([0], k))[seg]
+    m = np.concatenate((k, [n]))[seg] - start
+    ramp = np.where(m > 1, (r - start) / np.maximum(m - 1, 1), 0.0)
+    return base + seg + ramp
 
 
 def indicator_np(
     y: np.ndarray, width: int, order: int, sigma: float, deg: int = 2
 ) -> np.ndarray:
-    """Numpy oracle with the reference's exact semantics
-    (instants.py:45-93), built on our scipy-free SG kernel."""
-    x = savgol_filter_np(np.asarray(y, dtype=float), width, deg, deriv=order)
-    b = x > sigma if sigma > 0 else x < sigma
-    dp = np.diff(b.astype(int))
-    k = list(np.argwhere(dp).ravel())
-    z = np.zeros(len(y))
-    if not k:
-        return z
-    base = 1.0 - float(dp[k[0]] == 1)
-    i0 = 0
-    for i in k + [len(y)]:
-        if i > i0:
-            z[i0:i] = np.linspace(base, base + 1.0, i - i0)
-        base += 1.0
-        i0 = i
-    return z
+    """The reference's indicator (instants.py:45-93) on our scipy-free
+    SG kernel."""
+    return segment_ramp_np(savgol_filter_np(y, width, deg, deriv=order), sigma)
 
 
 def segment_ramp(df: DataFrame, filtered: str, sigma: float, out: str) -> DataFrame:
-    """Threshold-crossing segmentation + per-segment linspace ramp over
-    an already-filtered column (the indicator minus the SG step).
-
-    Everything stays partitioned by ``record_id`` alone: the segment
-    size/offset come from running aggregates in the ascending and
-    descending seq orders (an extra in-partition SORT, but NO second
-    shuffle on (record_id, segment) — at 10M+ rows the re-shuffle was
-    the dominant cost of this operator). Relies on the engine invariant
-    that ``seq`` is dense 0..n-1 within each record (segment sizes are
-    seq differences)."""
-    w = Window.partitionBy("record_id").orderBy("seq")
-    frame = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    w_desc = Window.partitionBy("record_id").orderBy(F.desc("seq"))
-    x = F.col(f"`{filtered}`")
-    b = (x > F.lit(sigma)) if sigma > 0 else (x < F.lit(sigma))
-    prev = F.lag(b).over(w)
-    chg = F.when(prev.isNotNull() & (b != prev), F.lit(1)).otherwise(F.lit(0))
-
-    df = df.withColumn("__b", b).withColumn("__chg", chg)
-    # seg(p) = #crossings with diff-index <= p  (crossing at row r has
-    # diff-index r-1, so include one following row in the frame)
-    df = df.withColumn(
-        "__seg",
-        F.sum("__chg").over(w.rowsBetween(Window.unboundedPreceding, 1)),
-    )
-    df = df.withColumn("__nchg", F.sum("__chg").over(frame))
-    # base of segment 0: 0 if the first crossing is rising (False->True)
-    first_rising = F.first(
-        F.when(F.col("__chg") == 1, F.col("__b")), ignorenulls=True
-    ).over(frame)
-    z0 = F.when(first_rising, F.lit(0.0)).otherwise(F.lit(1.0))
-
-    # segment bounds from record-local running aggs (no re-partition):
-    # a row starts a segment when its seg differs from the previous row's
-    is_start = F.coalesce(F.col("__seg") != F.lag("__seg").over(w), F.lit(True))
-    df = df.withColumn("__start_seq", F.max(F.when(is_start, F.col("seq"))).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)
-    ))
-    # next segment's start: min start-marker among rows AFTER this one
-    # (descending order => "preceding, -1" frame = higher seq rows)
-    next_start = F.min(
-        F.when(F.col("__start_seq") == F.col("seq"), F.col("seq"))
-    ).over(w_desc.rowsBetween(Window.unboundedPreceding, -1))
-    n_rec = F.count(F.lit(1)).over(frame)
-    first_seq = F.min("seq").over(frame)
-    df = df.withColumn("__end_seq", F.coalesce(next_start, first_seq + n_rec))
-
-    m = F.col("__end_seq") - F.col("__start_seq")
-    pos = F.col("seq") - F.col("__start_seq")
-    ramp = F.when(m > 1, pos.cast("double") / (m - F.lit(1)).cast("double")).otherwise(
-        F.lit(0.0)
-    )
-    z = F.when(F.col("__nchg") == 0, F.lit(0.0)).otherwise(
-        z0 + F.col("__seg").cast("double") + ramp
-    )
-    return df.withColumn(out, z).drop(
-        "__b", "__chg", "__seg", "__nchg", "__start_seq", "__end_seq"
-    )
+    """``segment_ramp_np`` of an already-filtered column, per record."""
+    return _per_record(df, [(filtered, out, partial(segment_ramp_np, sigma=sigma))])
 
 
 def indicator_col(
@@ -124,12 +70,10 @@ def indicator_col(
     sigma: float,
     deg: int = 2,
 ) -> DataFrame:
-    """Full indicator: SG-derivative + segmentation ramp (reference
-    ``indicator``, instants.py:45-93)."""
-    tmp = f"__sg_{out}"
-    df = savgol(df, col, tmp, width, polyorder=deg, deriv=order)
-    df = segment_ramp(df, tmp, sigma, out)
-    return df.drop(tmp)
+    """Full indicator: SG-derivative + segmentation ramp in one pass
+    (reference ``indicator``, instants.py:45-93)."""
+    kernel = partial(indicator_np, width=width, order=order, sigma=sigma, deg=deg)
+    return _per_record(df, [(col, out, kernel)])
 
 
 def reversed_indicator(df: DataFrame, col: str, out: str) -> DataFrame:

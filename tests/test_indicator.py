@@ -43,14 +43,16 @@ def test_segment_ramp_matches_np(spark, sigma):
     import pandas as pd
 
     rng = np.random.default_rng(7)
-    rows = []
-    for rid in ["a", "b", "c"]:
-        x = np.sin(np.linspace(0, 20, 400)) + rng.normal(0, 0.05, 400)
-        for i, v in enumerate(x):
-            rows.append((rid, i, float(v)))
+    records = {
+        rid: np.sin(np.linspace(0, 20, 400)) + rng.normal(0, 0.05, 400)
+        for rid in ["a", "b", "c"]
+    }
+    records["none"] = np.zeros(50)  # never crosses: all zeros
+    records["every"] = np.tile([2.0, -2.0], 25)  # crosses between every row
+    rows = [(rid, i, float(v)) for rid, x in records.items() for i, v in enumerate(x)]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["record_id", "seq", "x"]))
     out = segment_ramp(df, "x", sigma, "z")
-    for rid in ["a", "b", "c"]:
+    for rid in records:
         pdf = out.filter(F.col("record_id") == rid).orderBy("seq").toPandas()
         x = pdf["x"].to_numpy()
         # numpy twin of the ramp logic (reference instants.py:82-93)

@@ -2,12 +2,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tabata_spark.operators.savgol import (
-    savgol_apply,
-    savgol_coeffs,
-    savgol_filter_np,
-    savgol_native,
-)
+from tabata_spark.operators.savgol import savgol, savgol_coeffs, savgol_filter_np
 
 
 def _poly(n, coefs):
@@ -61,10 +56,42 @@ def test_short_record_global_fit():
     np.testing.assert_allclose(out, y, atol=1e-8)
 
 
-@pytest.mark.parametrize("width,order,deriv", [(11, 2, 0), (11, 2, 1), (21, 3, 2)])
-def test_native_matches_np(sset, flights, width, order, deriv):
-    df = savgol_native(sset.df, "ALT[m]", "sg", width, order, deriv)
-    for name in [sset.records[0], sset.records[4]]:  # normal + short record
+def _lengths_frame(spark, width, long=300, seed=0):
+    """One record per edge-case length: 1, 2, width-1, width, long."""
+    import pandas as pd
+
+    rng = np.random.default_rng(seed)
+    ys = {
+        f"n{n}": np.cumsum(rng.normal(0, 1, n)) for n in (1, 2, width - 1, width, long)
+    }
+    rows = [(rid, i, float(v), float(-v)) for rid, y in ys.items() for i, v in enumerate(y)]
+    pdf = pd.DataFrame(rows, columns=["record_id", "seq", "y", "v"])
+    # shuffled rows: the operator must order each record by seq itself
+    return spark.createDataFrame(pdf.sample(frac=1.0, random_state=seed)), ys
+
+
+def _per_record_values(df, cols):
+    pdf = df.toPandas().sort_values(["record_id", "seq"])
+    return {rid: g[cols].to_numpy(dtype=float) for rid, g in pdf.groupby("record_id")}
+
+
+@pytest.mark.parametrize(
+    "width,order,deriv", [(11, 2, 0), (11, 2, 1), (21, 3, 2), (9, 4, 0), (9, 4, 1)]
+)
+def test_native_matches_np(spark, sset, flights, width, order, deriv):
+    """``savgol`` equals the numpy kernel on every record length —
+    short records (n < width) get the kernel's global polynomial fit,
+    at every order, never nulls."""
+    df, ys = _lengths_frame(spark, width)
+    got = _per_record_values(savgol(df, "y", "sg", width, order, deriv), ["sg"])
+    assert set(got) == set(ys)
+    for rid, y in ys.items():
+        np.testing.assert_allclose(
+            got[rid][:, 0], savgol_filter_np(y, width, order, deriv), rtol=1e-9, atol=1e-9
+        )
+    # and on the flight fixture (normal + short record)
+    df = savgol(sset.df, "ALT[m]", "sg", width, order, deriv)
+    for name in [sset.records[0], sset.records[4]]:
         got = (
             df.filter(F.col("record_id") == name)
             .orderBy("seq")
@@ -72,28 +99,29 @@ def test_native_matches_np(sset, flights, width, order, deriv):
             .toPandas()["sg"]
             .to_numpy()
         )
-        y = flights[name]["ALT[m]"].to_numpy()
-        # short records (n < width) degrade to the same global
-        # polynomial fit as the numpy oracle — no nulls anywhere
-        want = savgol_filter_np(y, width, order, deriv)
-        np.testing.assert_allclose(
-            got.astype(float), want, rtol=1e-9, atol=1e-9
-        )
+        want = savgol_filter_np(flights[name]["ALT[m]"].to_numpy(), width, order, deriv)
+        np.testing.assert_allclose(got.astype(float), want, rtol=1e-9, atol=1e-9)
 
 
-def test_apply_matches_np(sset, flights):
-    specs = [("ALT[m]", "sg0", 21, 2, 0), ("Vz[m/s]", "sg1", 11, 2, 1)]
-    df = savgol_apply(sset.df, specs)
-    name = sset.records[1]
-    got = (
-        df.filter(F.col("record_id") == name)
-        .orderBy("seq")
-        .select("sg0", "sg1")
-        .toPandas()
-    )
-    np.testing.assert_allclose(
-        got["sg0"], savgol_filter_np(flights[name]["ALT[m]"].to_numpy(), 21, 2, 0)
-    )
-    np.testing.assert_allclose(
-        got["sg1"], savgol_filter_np(flights[name]["Vz[m/s]"].to_numpy(), 11, 2, 1)
-    )
+def test_apply_matches_np(spark):
+    """Several columns in one pass, one of them replaced in place; the
+    output keeps the input's column order."""
+    width = 11
+    df, ys = _lengths_frame(spark, width, seed=1)
+    for order in (2, 4):
+        out = savgol(df, ["y", "v"], ["sg", "v"], width, order, 1)
+        assert out.columns == ["record_id", "seq", "y", "v", "sg"]
+        got = _per_record_values(out, ["sg", "v"])
+        for rid, y in ys.items():
+            for j, sign in ((0, 1.0), (1, -1.0)):
+                np.testing.assert_allclose(
+                    got[rid][:, j],
+                    savgol_filter_np(sign * y, width, order, 1),
+                    rtol=1e-9,
+                    atol=1e-9,
+                )
+
+
+def test_savgol_rejects_even_width(spark, sset):
+    with pytest.raises(ValueError):
+        savgol(sset.df, "ALT[m]", "sg", 10)

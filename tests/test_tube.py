@@ -87,3 +87,18 @@ def test_app_tube_overlay(fitted_tube, sset):
 def test_describe_counts(fitted_tube):
     d = fitted_tube.describe()["Tisa[K]"]
     assert sum(d.values()) >= 1
+
+
+def test_scores_with_wide_filter(fitted_tube):
+    """filter_width=40 smooths the bounds with an 81-wide SG filter
+    written back into zmin/zmax — the bounds are replaced in place, so
+    scores() resolves them unambiguously and still covers every row."""
+    import copy
+
+    tube = copy.copy(fitted_tube)
+    tube.tube_params = dict(fitted_tube.tube_params, filter_width=40)
+    est = tube.estimate_frame("Tisa[K]")
+    assert est.columns.count("zmin") == 1 and est.columns.count("zmax") == 1
+    rows = tube.scores().collect()
+    assert sorted(r["record_id"] for r in rows) == sorted(tube.sset.records)
+    assert all(0 <= r["score_Tisa[K]"] <= r["N"] for r in rows)

@@ -29,7 +29,7 @@ def main():
     from tabata_spark.operators.flight import cruise_summary
     from tabata_spark.operators.indicator import indicator_col
     from tabata_spark.operators.positions import with_positions
-    from tabata_spark.operators.savgol import savgol_apply, savgol_native
+    from tabata_spark.operators.savgol import savgol
     from tabata_spark.operators.slicing import left_of
     from tabata_spark.session import get_spark
     from tabata_spark.sources.generator import make_flights_distributed
@@ -63,21 +63,15 @@ def main():
         with_positions(df),
         ["LEN[pts]", "REV[pts]", "PERCENT[%]"],
     )
-    probe("savgol_native_w11", savgol_native(df, "ALT[m]", "sg", 11, 2, 1), ["sg"])
+    probe("savgol_w11", savgol(df, "ALT[m]", "sg", 11, 2, 1), ["sg"])
+    probe("savgol_w21", savgol(df, "ALT[m]", "sg", 21, 2, 0), ["sg"])
     probe(
-        "savgol_apply_4specs",
-        savgol_apply(
-            df,
-            [
-                ("ALT[m]", "s0", 21, 2, 0),
-                ("ALT[m]", "s1", 21, 2, 1),
-                ("Tisa[K]", "s2", 11, 2, 0),
-                ("Vz[m/s]", "s3", 11, 2, 1),
-            ],
-        ),
-        ["s0", "s1", "s2", "s3"],
+        "savgol_2cols_w21",
+        savgol(df, ["ALT[m]", "Tisa[K]"], ["s0", "s1"], 21, 2, 0),
+        ["s0", "s1"],
     )
     probe("indicator_w11", indicator_col(df, "ALT[m]", "ind", 11, 1, 1.0), ["ind"])
+    probe("indicator_w41", indicator_col(df, "ALT[m]", "ind", 41, 1, 1.0), ["ind"])
     probe("cruise_summary", cruise_summary(df), ["conso_kg_h", "alt_max"])
     instants = df.groupBy("record_id").agg(
         F.expr("min_by(seq, struct(`ALT[m]` * -1, seq))").alias("seq")
