@@ -11,7 +11,8 @@ From-scratch reimplementation of the capabilities of jee51/tabata
   ``Window.partitionBy('record_id').orderBy('seq')`` expression or one
   ``groupBy('record_id')`` aggregation, so the same code path scales
   from 52 flight records to 100 TB;
-- learned components (instant detection, confidence tubes) use MLlib;
+- learned components (instant detection, confidence tubes) fit on the
+  driver from a few Spark jobs of sampled rows or moments;
 - the slow path (scipy parity for Savitzky-Golay edges) is confined to
   Arrow-batched ``applyInPandas`` and is opt-in.
 """

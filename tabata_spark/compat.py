@@ -361,18 +361,10 @@ class Selector(Opset):
     def belief(self, pos: int | None = None):
         """Belief curve for the current (or given) record, in seq
         order (instants.py:483-549) — numpy array."""
-        from pyspark.sql import functions as F
-
         if pos is not None:
             self.sigpos = pos % max(len(self.records), 1)
         rec = self.records[self.sigpos]
-        pdf = (
-            self._engine.belief_frame()
-            .filter(F.col("record_id") == rec)
-            .orderBy("seq")
-            .select("p")
-            .toPandas()
-        )
+        pdf = self._engine.record_belief(rec).select("p").toPandas()
         return pdf["p"].to_numpy()
 
     def load(self, storename: str) -> "Selector":

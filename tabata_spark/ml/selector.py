@@ -21,13 +21,16 @@ Spark-first design:
 - the noise-scale pass (epsilon, instants.py:269-295) is a grouped
   aggregation: per-record std of the difference of two SG filterings,
   then a global max per (width, order, variable);
-- tree fitting is MLlib (``DecisionTreeClassifier`` on assembled
-  vectors) in a driver loop over ``retry_number`` — control flow on
-  the driver, every data pass distributed;
-- belief/predict runs set-oriented over ALL records at once:
-  indicator recompute (retained codes only) → model.transform →
-  SG-derivative smooth → clip/normalize (native window expressions) →
-  per-record argmax via ``max_by``;
+- trees are fitted on the driver, like the reference's sklearn trees:
+  each tree's with-replacement row sample of the cached grid is
+  collected in one job (``samples_percent`` of the labeled rows) and
+  grown by a small numpy CART (``_fit_tree``) that reproduces MLlib's
+  ``DecisionTreeClassifier`` split finding, stopping and pruning; the
+  fitted tree is plain arrays;
+- belief/predict runs set-oriented over ALL records at once: one
+  grouped ``applyInPandas`` per record recomputes the retained
+  indicators, takes the tree vote, SG-derivative smooths it and
+  clips/normalizes; the per-record argmax is one ``max_by``;
 - all randomness is seeded (the reference uses unseeded np.random —
   deliberate determinism divergence, SURVEY §7).
 """
@@ -35,10 +38,10 @@ Spark-first design:
 from __future__ import annotations
 
 import math
-from collections.abc import Iterable
+from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -106,6 +109,165 @@ def _indicator_frame_fn(idcodes, deg_poly, struct_cols):
     return fn
 
 
+# ------------------------------------------------------------------ trees
+
+_MAX_DEPTH = 5
+_MAX_BINS = 32
+
+
+class _Tree(NamedTuple):
+    """A fitted binary tree as flat arrays, root at 0. A row goes left
+    when ``x[feature] <= threshold``; a leaf has ``feature == -1``."""
+
+    feature: np.ndarray
+    threshold: np.ndarray
+    left: np.ndarray
+    right: np.ndarray
+    prediction: np.ndarray
+
+    def predict(self, X: np.ndarray) -> np.ndarray:
+        node = np.zeros(len(X), dtype=np.int64)
+        rows = np.arange(len(X))
+        while True:
+            f = self.feature[node]
+            inner = f >= 0
+            if not inner.any():
+                return self.prediction[node]
+            x = X[rows, np.where(inner, f, 0)]
+            nxt = np.where(x <= self.threshold[node], self.left[node], self.right[node])
+            node = np.where(inner, nxt, node)
+
+    def rules(self, names: list[str]) -> list[str]:
+        """If/Else rules, one line per node, indented by depth."""
+        lines: list[str] = []
+
+        def walk(i, ind):
+            if self.feature[i] < 0:
+                lines.append(f"{ind}Predict: {self.prediction[i]:.1f}")
+                return
+            name, t = names[self.feature[i]], self.threshold[i]
+            lines.append(f"{ind}If ({name} <= {t!r})")
+            walk(self.left[i], ind + " ")
+            lines.append(f"{ind}Else ({name} > {t!r})")
+            walk(self.right[i], ind + " ")
+
+        walk(0, "  ")
+        return lines
+
+
+def _split_thresholds(x: np.ndarray, n_splits: int) -> np.ndarray:
+    """MLlib's continuous split candidates for one feature over all
+    rows (RandomForest.findSplitsForContinuousFeature): with at most
+    ``n_splits`` candidates, the midpoints of adjacent distinct values;
+    above that, the value-count stride rule."""
+    vals, counts = np.unique(np.where(x == 0.0, 0.0, x), return_counts=True)
+    if len(vals) - 1 <= n_splits:
+        return (vals[:-1] + vals[1:]) / 2.0
+    stride = len(x) / (n_splits + 1)
+    out = []
+    current, target = float(counts[0]), stride
+    for i in range(1, len(vals)):
+        previous = current
+        current += counts[i]
+        if abs(previous - target) < abs(current - target):
+            out.append((vals[i - 1] + vals[i]) / 2.0)
+            target += stride
+    return np.array(out)
+
+
+def _gini(c0, c1):
+    # an empty side (t == 0) gives NaN; such splits are invalid anyway
+    t = c0 + c1
+    with np.errstate(divide="ignore", invalid="ignore"):
+        f0, f1 = c0 / t, c1 / t
+        return 1.0 - f0 * f0 - f1 * f1
+
+
+def _fit_tree(X: np.ndarray, y: np.ndarray, min_instances: int) -> tuple[_Tree, np.ndarray]:
+    """Grow one gini tree the way MLlib's ``DecisionTreeClassifier``
+    does as the Selector calls it (maxDepth 5, maxBins 32, minInfoGain
+    0): thresholds from :func:`_split_thresholds`, ``x <= threshold``
+    left, ``min_instances`` rows required in each child, the first
+    best split by feature then threshold, a leaf at gain <= 0 or depth
+    5 predicting the majority class (ties to 0), sibling leaves with
+    equal predictions pruned. Returns the tree and its feature
+    importances (gain x rows per feature, normalised to sum to 1)."""
+    n, n_feat = X.shape
+    if n == 0:
+        raise ValueError("empty tree sample: raise samples_percent")
+    n_splits = min(_MAX_BINS, n) - 1
+    thresholds = [_split_thresholds(X[:, f], n_splits) for f in range(n_feat)]
+    # bin b of feature f holds the rows with threshold[b-1] < x <=
+    # threshold[b]; offsets lay every feature's bins out in one flat
+    # histogram, and split s of f is the cumulative count up to bin s
+    nbins = np.array([len(t) + 1 for t in thresholds], dtype=np.int64)
+    offset = np.cumsum(nbins) - nbins
+    binned = np.empty((n, n_feat), dtype=np.int64)
+    for f, t in enumerate(thresholds):
+        binned[:, f] = np.searchsorted(t, X[:, f], side="left") + offset[f]
+    n_bins = int(nbins.sum())
+    is_split = np.ones(n_bins, dtype=bool)
+    is_split[offset + nbins - 1] = False  # a feature's last bin splits nothing
+    cand_bin = np.flatnonzero(is_split)  # MLlib's search order: feature, then split
+    cand_f = np.repeat(np.arange(n_feat), nbins - 1)
+    seg_start = np.repeat(offset, nbins)
+    y1 = y.astype(np.int64)
+    importance = np.zeros(n_feat)
+
+    def grow(rows, depth):
+        """A leaf's prediction, or (f, threshold, gain, rows, left, right)."""
+        c1 = int(y1[rows].sum())
+        c0 = len(rows) - c1
+        pred = 0.0 if c0 >= c1 else 1.0
+        if depth == _MAX_DEPTH or len(cand_f) == 0:
+            return pred
+        b = binned[rows].ravel()
+        tot = np.bincount(b, minlength=n_bins).cumsum()
+        pos = np.bincount(b[np.repeat(y1[rows], n_feat) == 1], minlength=n_bins).cumsum()
+        # cumulative counts within each feature's bins
+        lt = (tot - np.concatenate([[0], tot])[seg_start])[cand_bin].astype(float)
+        l1 = (pos - np.concatenate([[0], pos])[seg_start])[cand_bin].astype(float)
+        l0 = lt - l1
+        t = float(len(rows))
+        r0, r1 = c0 - l0, c1 - l1
+        rt = r0 + r1
+        gain = _gini(float(c0), float(c1)) - (lt / t) * _gini(l0, l1) - (rt / t) * _gini(r0, r1)
+        gain[(lt < min_instances) | (rt < min_instances)] = -np.inf
+        best = int(np.argmax(gain))
+        if not gain[best] > 0:
+            return pred
+        f = int(cand_f[best])
+        thr = float(thresholds[f][cand_bin[best] - offset[f]])
+        go_left = X[rows, f] <= thr
+        left = grow(rows[go_left], depth + 1)
+        right = grow(rows[~go_left], depth + 1)
+        if isinstance(left, float) and left == right:
+            return left
+        return (f, thr, float(gain[best]), t, left, right)
+
+    nodes: list[list] = []  # per node: feature, threshold, left, right, prediction
+
+    def flatten(node):
+        i = len(nodes)
+        if isinstance(node, float):
+            nodes.append([-1, 0.0, -1, -1, node])
+            return i
+        f, thr, gain, count, left, right = node
+        importance[f] += gain * count
+        nodes.append([f, thr, -1, -1, 0.0])
+        nodes[i][2] = flatten(left)
+        nodes[i][3] = flatten(right)
+        return i
+
+    flatten(grow(np.arange(n), 0))
+    if importance.sum() > 0:
+        # MLlib normalises per tree, then the ensemble of one
+        importance /= importance.sum()
+        importance /= importance.sum()
+    tree = _Tree(*(np.array(column) for column in zip(*nodes)))
+    return tree, importance
+
+
 class Selector:
     """Instant detector over a :class:`SignalSet`.
 
@@ -122,8 +284,9 @@ class Selector:
         self._dsi: DataFrame | None = None
         self._dsi_key: tuple | None = None
         self._grid_codes: list[tuple] = []
+        self._n_labeled_rows = 0
         self._kept_names: list[str] = []
-        self._model = None
+        self._model: _Tree | None = None
         self.learn_params = dict(
             retry_number=10,
             retry_percentile=80,
@@ -260,6 +423,11 @@ class Selector:
             [base.schema[c] for c in struct_cols]
             + [T.StructField(nm, T.DoubleType()) for nm in idcodes]
         )
+        if self._dsi is not None:
+            # release the previous grid first: caching an identical
+            # plan would share its cache entry, and unpersisting the
+            # old frame afterwards would drop the new one's too
+            self._dsi.unpersist()
         fn = _indicator_frame_fn(idcodes, self._deg_poly, struct_cols)
         dsi = base.groupBy("record_id").applyInPandas(fn, schema)
         if path:
@@ -267,6 +435,7 @@ class Selector:
             dsi = base.sparkSession.read.parquet(path)
         else:
             dsi = dsi.cache()
+        self._n_labeled_rows = sum(lengths.values())
         self.idcodes = list(idcodes.values())
         self._grid_codes = list(idcodes.values())
         self._dsi = dsi
@@ -278,10 +447,9 @@ class Selector:
     def fit(self) -> "Selector":
         """Reference fit (instants.py:363-466): retry_number sampled
         trees accumulate feature importances; percentile-prune; refit
-        on kept columns until every feature is used."""
-        from pyspark.ml.classification import DecisionTreeClassifier
-        from pyspark.ml.feature import VectorAssembler
-
+        on kept columns until every feature is used. Each tree costs
+        one Spark job, collecting its row sample of the cached grid;
+        the tree itself is grown on the driver (:func:`_fit_tree`)."""
         key = (tuple(sorted(self.variables)), tuple(sorted(self.selected.items())))
         if self._dsi is None or self._dsi_key != key:
             self.make_indicators()
@@ -289,38 +457,24 @@ class Selector:
         all_codes = list(self._grid_codes)
         feat_names = [c for c in dsi.columns if c not in ("record_id", "seq")]
 
-        instants = F.broadcast(self._instants_df(self.selected))
-        labeled = dsi.join(instants, "record_id").withColumn(
-            # instants.py:390: y = 1 - 2*(pos <= ind); MLlib wants {0,1}
-            "label",
-            F.when(F.col("seq") <= F.col("instant"), F.lit(0.0)).otherwise(F.lit(1.0)),
-        )
-        labeled = labeled.cache()
-        n_total = labeled.count()
-
         p = self.learn_params["samples_percent"]
         split_frac = self.learn_params["min_samples_split"]
         rn = self.learn_params["retry_number"]
 
         def fit_tree(fraction: float, cols: list[str], seed: int):
-            sample = labeled.sample(withReplacement=True, fraction=fraction, seed=seed)
-            asm = VectorAssembler(inputCols=cols, outputCol="features")
-            n_sample = max(int(n_total * fraction), 1)
-            clf = DecisionTreeClassifier(
-                labelCol="label",
-                featuresCol="features",
-                # sklearn min_samples_split=frac gates node *splits* at
-                # ceil(frac*n); MLlib gates per-child instance counts —
-                # half the split threshold approximates it
-                minInstancesPerNode=max(1, int(math.ceil(split_frac * n_sample / 2))),
-                seed=seed,
+            pdf = (
+                dsi.sample(withReplacement=True, fraction=fraction, seed=seed)
+                .select("record_id", "seq", *cols)
+                .toPandas()
             )
-            model = clf.fit(asm.transform(sample).select("features", "label"))
-            fi = np.zeros(len(cols))
-            imp = model.featureImportances
-            for i, v in zip(imp.indices, imp.values):
-                fi[i] = v
-            return model, fi
+            # instants.py:390: y = 1 - 2*(pos <= ind), here as {0, 1}
+            instant = pdf["record_id"].map(self.selected).to_numpy()
+            y = (pdf["seq"].to_numpy() > instant).astype(np.int64)
+            n_sample = max(int(self._n_labeled_rows * fraction), 1)
+            # sklearn min_samples_split=frac gates node *splits* at
+            # ceil(frac*n); here each child needs half that many rows
+            min_rows = max(1, int(math.ceil(split_frac * n_sample / 2)))
+            return _fit_tree(pdf[cols].to_numpy(dtype=float), y, min_rows)
 
         fi = np.zeros(len(feat_names))
         for k in range(rn):
@@ -330,16 +484,20 @@ class Selector:
         seuil = np.percentile(fi, self.learn_params["retry_percentile"])
         keep = [i for i in range(len(feat_names)) if fi[i] > seuil]
         p1 = min(0.5, p * rn)
-        model, fi2 = fit_tree(p1, [feat_names[i] for i in keep], self.seed + rn)
-        while np.sum(fi2 == 0) > 0:
-            keep = [keep[i] for i in range(len(keep)) if fi2[i] > 0]
+        while True:
+            if not keep:
+                raise ValueError(
+                    "the trees found no split: label more records or raise samples_percent"
+                )
             model, fi2 = fit_tree(p1, [feat_names[i] for i in keep], self.seed + rn)
+            if np.all(fi2 > 0):
+                break
+            keep = [keep[i] for i in range(len(keep)) if fi2[i] > 0]
 
         self._kept_names = [feat_names[i] for i in keep]
         self.idcodes = [all_codes[i] for i in keep]
         self._model = model
         self.computed = {}
-        labeled.unpersist()
         return self
 
     def describe(self) -> str:
@@ -350,64 +508,55 @@ class Selector:
         lines = ["Feature (Name, Filter, Order, Sigma, Std):"]
         for i, c in enumerate(self.idcodes):
             lines.append(f"  {i}: {c}")
-        lines.append(self._model.toDebugString)
+        lines.append(f"Decision tree, {len(self._model.feature)} nodes:")
+        lines.extend(self._model.rules(self._kept_names))
         return "\n".join(lines)
 
     # -------------------------------------------------------------- belief
 
     def belief_frame(self, df: DataFrame | None = None) -> DataFrame:
         """Per-row belief for every record at once (reference belief,
-        instants.py:483-549, set-oriented): recompute retained
-        indicators → tree vote ±1 → SG first-derivative smooth →
-        clip ≥ 0 → normalize per record. Returns
-        (record_id, seq, p)."""
-        from pyspark.ml.feature import VectorAssembler
-
+        instants.py:483-549, set-oriented), one grouped pass per
+        record: recompute retained indicators → tree vote ±1 → SG
+        first-derivative smooth → clip ≥ 0 → normalize (Z == 0 → 1).
+        Returns (record_id, seq, p)."""
         if self._model is None:
             raise ValueError("fit() first")
         data = df if df is not None else self.sset.df
         colnames = sorted(
             {c[0] for c in self.idcodes} - {"LEN", "REV", "PERCENT"}
         )
-        struct_cols = ["record_id", "seq"]
         idcodes = dict(zip(self._kept_names, self.idcodes))
-        base = data.select(*struct_cols, *colnames)
-        schema = T.StructType(
-            [base.schema[c] for c in struct_cols]
-            + [T.StructField(nm, T.DoubleType()) for nm in idcodes]
-        )
-        fn = _indicator_frame_fn(idcodes, self._deg_poly, struct_cols)
-        feats = base.groupBy("record_id").applyInPandas(fn, schema)
+        features = _indicator_frame_fn(idcodes, self._deg_poly, [])
+        tree = self._model
+        width = 2 * self.predict_params["filter_width"] + 1
 
-        asm = VectorAssembler(inputCols=list(idcodes), outputCol="features")
-        pred = self._model.transform(asm.transform(feats)).select(
-            "record_id",
-            "seq",
-            (F.col("prediction") * 2 - 1).alias("ip"),  # back to ±1
-        )
+        def fn(pdf):
+            import pandas as pd
 
-        fw = self.predict_params["filter_width"]
-        width = 2 * fw + 1
-
-        # SG derivative of the vote sequence, per record (Arrow path —
-        # width ~201 is beyond the sane native-expression regime)
-        def smooth(pdf):
             pdf = pdf.sort_values("seq")
-            pdf["p"] = savgol_filter_np(pdf["ip"].to_numpy(), width, 2, deriv=1)
-            return pdf[["record_id", "seq", "p"]]
+            vote = tree.predict(features(pdf).to_numpy(dtype=float)) * 2 - 1
+            p = np.maximum(savgol_filter_np(vote, width, 2, deriv=1), 0.0)
+            z = p.sum()
+            return pd.DataFrame(
+                {
+                    "record_id": pdf["record_id"].to_numpy(),
+                    "seq": pdf["seq"].to_numpy(),
+                    "p": p / (z if z != 0.0 else 1.0),
+                }
+            )
 
-        sm_schema = "record_id string, seq long, p double"
-        p = pred.groupBy("record_id").applyInPandas(smooth, sm_schema)
-
-        # clip + normalize (instants.py:539-543, incl. the Z==0 -> 1 guard)
-        w_rec = (
-            Window.partitionBy("record_id")
-            .orderBy("seq")
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        base = data.select("record_id", "seq", *colnames)
+        return base.groupBy("record_id").applyInPandas(
+            fn, "record_id string, seq long, p double"
         )
-        pc = F.greatest(F.col("p"), F.lit(0.0))
-        z = F.sum(pc).over(w_rec)
-        return p.withColumn("p", pc / F.when(z == 0.0, F.lit(1.0)).otherwise(z))
+
+    def record_belief(self, name: str) -> DataFrame:
+        """One record's belief curve, (record_id, seq, p) in seq order:
+        the record's rows are filtered BEFORE the grouped pass, so only
+        that record is scored."""
+        rows = self.sset.df.filter(F.col("record_id") == name)
+        return self.belief_frame(rows).orderBy("seq")
 
     def predict_df(self, df: DataFrame | None = None) -> DataFrame:
         """Predicted instant per record as a DataFrame — the
@@ -490,9 +639,8 @@ class Selector:
 
 
 def save_selector(sel: Selector, path: str) -> None:
-    """Persist learned state: JSON for labels/params/idcodes + MLlib
-    model directory (reference uses pickle, instants_doc cell 74 —
-    MLlib native persistence survives cluster/driver restarts)."""
+    """Persist learned state as JSON: labels, params, idcodes and the
+    fitted tree's arrays (reference uses pickle, instants_doc cell 74)."""
     import json
     import os
 
@@ -510,11 +658,12 @@ def save_selector(sel: Selector, path: str) -> None:
         },
         "predict_params": sel.predict_params,
         "seed": sel.seed,
+        "tree": None if sel._model is None else {
+            k: v.tolist() for k, v in sel._model._asdict().items()
+        },
     }
     with open(os.path.join(path, "selector.json"), "w") as f:
         json.dump(state, f, indent=1)
-    if sel._model is not None:
-        sel._model.write().overwrite().save(os.path.join(path, "tree_model"))
 
 
 def load_selector(sset: SignalSet, path: str) -> Selector:
@@ -523,6 +672,11 @@ def load_selector(sset: SignalSet, path: str) -> Selector:
 
     with open(os.path.join(path, "selector.json")) as f:
         state = json.load(f)
+    if state.get("tree") is None and os.path.exists(os.path.join(path, "tree_model")):
+        raise ValueError(
+            f"{path} holds an MLlib tree_model/ from an older version; "
+            "refit the Selector and save it again"
+        )
     sel = Selector(sset, seed=state["seed"])
     sel.selected = {k: int(v) for k, v in state["selected"].items()}
     sel.variables = set(state["variables"])
@@ -532,9 +686,6 @@ def load_selector(sset: SignalSet, path: str) -> Selector:
     sel.learn_params = state["learn_params"]
     sel.feature_params = state["feature_params"]
     sel.predict_params = state["predict_params"]
-    model_dir = os.path.join(path, "tree_model")
-    if os.path.exists(model_dir):
-        from pyspark.ml.classification import DecisionTreeClassificationModel
-
-        sel._model = DecisionTreeClassificationModel.load(model_dir)
+    if state.get("tree") is not None:
+        sel._model = _Tree(**{k: np.array(v) for k, v in state["tree"].items()})
     return sel

@@ -19,6 +19,12 @@ Spark-first design:
   ``rand()`` column per iteration: train = u < p, test = p ≤ u < 2p —
   without-replacement stratification instead of the reference's
   with-replacement choice (deterministic, one pass, no anti-join);
+- the whole ensemble is ONE Spark job: every iteration's train and
+  test moments (count, means, centred cross-products of target and
+  factors) are accumulated per partition and merged on the driver
+  (Chan et al.'s pairwise update), then each regression is solved by
+  least squares on the driver (minimum-norm when rank-deficient) and
+  scored by its test R² = 1 − SSE/SST from the test moments;
 - each kept model is stored as plain (intercept, coefs, cols, r2), so
   ``estimate`` is K inline linear expressions + least/greatest/avg per
   row — pure codegen, no model.transform, no UDF;
@@ -28,7 +34,6 @@ Spark-first design:
 
 from __future__ import annotations
 
-import math
 import random
 
 import numpy as np
@@ -39,6 +44,91 @@ from tabata_spark.core.signalset import SignalSet
 from tabata_spark.operators.savgol import savgol
 
 SYNTH = ("TIME", "MEDIAN", "CAUSAL")
+
+
+def _moments(Z: np.ndarray) -> tuple:
+    """(n, column means, centred cross-product matrix) of the rows of Z."""
+    n = len(Z)
+    if n == 0:
+        k = Z.shape[1]
+        return 0, np.zeros(k), np.zeros((k, k))
+    mean = Z.mean(axis=0)
+    D = Z - mean
+    return n, mean, D.T @ D
+
+
+def _merge(a: tuple, b: tuple) -> tuple:
+    """Moments of the union of two row sets (Chan, Golub & LeVeque)."""
+    na, ma, Ma = a
+    nb, mb, Mb = b
+    if na == 0 or nb == 0:
+        return b if na == 0 else a
+    n = na + nb
+    d = mb - ma
+    return n, ma + d * (nb / n), Ma + Mb + np.outer(d, d) * (na * nb / n)
+
+
+def _split_moments(base: DataFrame, cols: list[str], seeds: list[int], p: float) -> list:
+    """Moments of ``[__y, *cols]`` over each split's train rows
+    (``rand(seed) < p``) and test rows (``p <= rand(seed) < 2p``), all
+    splits in one job. Returns ``[(train, test)]`` in ``seeds`` order."""
+    import pandas as pd
+
+    names = ["__y", *cols]
+    k = len(names)
+
+    def fn(batches):
+        acc = {}
+        for pdf in batches:
+            Z = pdf[names].to_numpy(dtype=float)
+            for i in range(len(seeds)):
+                u = pdf[f"__u{i}"].to_numpy()
+                for part, mask in ((0, u < p), (1, (u >= p) & (u < 2 * p))):
+                    m = _moments(Z[mask])
+                    acc[i, part] = _merge(acc[i, part], m) if (i, part) in acc else m
+        # packed as raw float64 bytes: Arrow would turn a NaN (a null
+        # factor value) in an array column into a null
+        yield pd.DataFrame(
+            [
+                (i, part, np.concatenate([[n], mean, m2.ravel()]).tobytes())
+                for (i, part), (n, mean, m2) in acc.items()
+            ],
+            columns=["i", "part", "m"],
+        )
+
+    us = [F.rand(seed=s).alias(f"__u{i}") for i, s in enumerate(seeds)]
+    rows = base.select(*names, *us).mapInPandas(fn, "i int, part int, m binary").collect()
+    out = [[(0, np.zeros(k), np.zeros((k, k)))] * 2 for _ in seeds]
+    for r in rows:
+        v = np.frombuffer(r["m"], dtype=np.float64)
+        m = (int(v[0]), v[1 : k + 1], v[k + 1 :].reshape(k, k))
+        out[r["i"]][r["part"]] = _merge(out[r["i"]][r["part"]], m)
+    return out
+
+
+def _ols(train: tuple, test: tuple, sel: list[int]) -> tuple[float, np.ndarray, float]:
+    """Least-squares fit of column 0 on columns ``sel`` from the train
+    moments (minimum-norm coefficients when the factors are
+    rank-deficient), and its R² on the test moments. Returns
+    (intercept, coefficients, r2)."""
+    n, mean, M = train
+    if n == 0:
+        raise ValueError("a regression drew no training rows: raise samples_percent")
+    idx = [0, *sel]
+    if np.isnan(M[np.ix_(idx, idx)]).any() or np.isnan(test[2][np.ix_(idx, idx)]).any():
+        raise ValueError("a regression's sampled rows hold null or NaN values")
+    Sxx, Sxy = M[np.ix_(sel, sel)], M[sel, 0]
+    scale = np.sqrt(np.diag(Sxx))
+    scale[scale == 0] = 1.0  # a constant factor: its row is zero anyway
+    beta = np.linalg.lstsq(Sxx / np.outer(scale, scale), Sxy / scale, rcond=None)[0] / scale
+    b0 = mean[0] - mean[sel] @ beta
+    nt, mt, Mt = test
+    w = np.concatenate([[1.0], -beta])
+    resid_mean = mt[0] - b0 - mt[sel] @ beta
+    sse = w @ Mt[np.ix_(idx, idx)] @ w + nt * resid_mean**2
+    with np.errstate(divide="ignore", invalid="ignore"):
+        r2 = 1.0 - np.float64(sse) / Mt[0, 0]
+    return float(b0), beta, float(r2)
 
 
 def _with_synthetic(df: DataFrame, target: str) -> DataFrame:
@@ -85,45 +175,32 @@ class Tube:
     def build_tube(self, target: str) -> list[tuple]:
         """One target's regression population (tubes.py:177-271):
         random factor subsets, disjoint samples, keep-best-K with
-        early stop after K consecutive misses."""
-        from pyspark.ml.evaluation import RegressionEvaluator
-        from pyspark.ml.feature import VectorAssembler
-        from pyspark.ml.regression import LinearRegression
-
+        early stop after K consecutive misses. Every candidate's
+        moments come from one Spark job; the fits are driver math."""
         lp = self.learn_params
         cols = self._candidate_factors(target)
         if not cols:
             return []
         rng = random.Random(f"{self.seed}:{target}")
-        p = lp["samples_percent"]
+        draws = []
+        for _ in range(lp["retry_number"]):
+            k = min(rng.randint(1, len(cols)), lp["max_features"], len(cols))
+            draws.append(rng.sample(cols, k))
         base = _with_synthetic(self.sset.df, target).select(
             "record_id", "seq", F.col(f"`{target}`").alias("__y"),
             *[F.col(f"`{c}`").alias(c) for c in cols],
-        ).cache()
+        ).cache()  # each rand() split must see the same rows in the same order
+        try:
+            seeds = [self.seed * 1000 + i for i in range(len(draws))]
+            moments = _split_moments(base, cols, seeds, lp["samples_percent"])
+        finally:
+            base.unpersist()
 
         pop: list[tuple] = []  # (intercept, {col: coef}, r2)
         miss = 0
-        evaluator = RegressionEvaluator(
-            labelCol="__y", predictionCol="prediction", metricName="r2"
-        )
-        for i in range(lp["retry_number"]):
-            k = min(rng.randint(1, len(cols)), lp["max_features"], len(cols))
-            cc = rng.sample(cols, k)
-            u = F.rand(seed=self.seed * 1000 + i)
-            tagged = base.withColumn("__u", u)
-            train = tagged.filter(F.col("__u") < p)
-            test = tagged.filter((F.col("__u") >= p) & (F.col("__u") < 2 * p))
-            asm = VectorAssembler(inputCols=cc, outputCol="features")
-            lr = LinearRegression(featuresCol="features", labelCol="__y")
-            model = lr.fit(asm.transform(train).select("features", "__y"))
-            r2 = evaluator.evaluate(
-                model.transform(asm.transform(test).select("features", "__y"))
-            )
-            entry = (
-                float(model.intercept),
-                dict(zip(cc, [float(v) for v in model.coefficients])),
-                float(r2),
-            )
+        for i, (cc, (train, test)) in enumerate(zip(draws, moments)):
+            b0, beta, r2 = _ols(train, test, [1 + cols.index(c) for c in cc])
+            entry = (b0, dict(zip(cc, beta.tolist())), r2)
             if i < lp["keep_best_number"]:
                 pop.append(entry)
             else:
@@ -135,7 +212,6 @@ class Tube:
                     miss += 1
                     if miss == lp["keep_best_number"]:
                         break
-        base.unpersist()
         return pop
 
     def fit(self) -> "Tube":

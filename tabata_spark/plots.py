@@ -503,13 +503,7 @@ def instants_figure(selector, pos: int | str = 0, variable: str | None = None) -
         .orderBy("seq")
         .toPandas()
     )
-    bf = (
-        selector.belief_frame()
-        .filter(F.col("record_id") == name)
-        .orderBy("seq")
-        .select("seq", "p")
-        .toPandas()
-    )
+    bf = selector.record_belief(name).select("seq", "p").toPandas()
     instants = selector.predict() if not selector.computed else selector.computed
     spec = FigureSpec(
         traces=[

@@ -100,13 +100,7 @@ def scores_plot_data(tube) -> Any:
 def belief_plot_data(selector, pos: int | str = 0) -> Any:
     """Belief-curve payload (reference belief display)."""
     name = selector.sset._resolve(pos)
-    return (
-        selector.belief_frame()
-        .filter(F.col("record_id") == name)
-        .orderBy("seq")
-        .toPandas()
-        .set_index("seq")
-    )
+    return selector.record_belief(name).toPandas().set_index("seq")
 
 
 def _require_plotly():

@@ -48,3 +48,15 @@ def test_selector_save_load_roundtrip(tmp_path, spark, sset, flights):
     assert sel2.idcodes == sel.idcodes
     pred2 = sel2.predict()
     assert pred1 == pred2
+
+
+def test_selector_load_rejects_mllib_tree_dir(tmp_path, sset):
+    """A selector saved with an MLlib ``tree_model/`` directory and no
+    tree in its JSON must be refitted, not loaded half-empty."""
+    from tabata_spark.ml.selector import Selector, load_selector, save_selector
+
+    path = tmp_path / "old_sel"
+    save_selector(Selector(sset), str(path))
+    (path / "tree_model").mkdir()
+    with pytest.raises(ValueError, match="refit"):
+        load_selector(sset, str(path))

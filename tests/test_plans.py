@@ -106,6 +106,41 @@ def test_indicator_single_exchange(spark, sf):
     _assert_one_arrow_pass(battery.QUERIES["w_indicator_full"](spark, sf))
 
 
+def test_record_belief_filters_below_grouped_map(spark, sset, tmp_path):
+    """A per-record belief view of a stored set scores only that
+    record: its record_id predicate sits below the
+    FlatMapGroupsInPandas (here as a partition filter of the scan), and
+    the values equal the whole-set belief of that record."""
+    from tabata_spark.core.signalset import SignalSet
+    from tabata_spark.ml.selector import Selector
+    from tabata_spark.plans.inspect import explain_str
+
+    sset.save(str(tmp_path / "set"))
+    stored = SignalSet.load(spark, str(tmp_path / "set"))
+    sel = Selector(stored, seed=5)
+    sel.variables = {"ALT[m]"}
+    sel.feature_params = dict(range_width=[10], range_sigma=[5], max_order=1)
+    sel.learn_params = dict(
+        retry_number=1, retry_percentile=50, samples_percent=0.2, min_samples_split=0.05
+    )
+    names = stored.records
+    sel.selected = {names[0]: 200, names[1]: 250}
+    sel.fit()
+    name = names[2]
+    df = sel.record_belief(name)
+    lines = explain_str(df, "simple").splitlines()
+    grouped = [i for i, ln in enumerate(lines) if "FlatMapGroupsInPandas" in ln]
+    predicate = [i for i, ln in enumerate(lines) if name in ln]
+    assert len(grouped) == 1 and predicate, lines
+    assert all(i > grouped[0] for i in predicate), lines  # printed deeper = runs first
+    one = df.toPandas()
+    whole = (
+        sel.belief_frame().filter(F.col("record_id") == name).orderBy("seq").toPandas()
+    )
+    assert one["seq"].tolist() == whole["seq"].tolist()
+    assert one["p"].tolist() == whole["p"].tolist()
+
+
 def test_cruise_flag_uses_ordered_frame(spark, sf):
     """with_cruise_flag must not use the unordered whole-group window
     path (4x slower at 10M rows): its plan shows an ordered Sort under

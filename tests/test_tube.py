@@ -102,3 +102,122 @@ def test_scores_with_wide_filter(fitted_tube):
     rows = tube.scores().collect()
     assert sorted(r["record_id"] for r in rows) == sorted(tube.sset.records)
     assert all(0 <= r["score_Tisa[K]"] <= r["N"] for r in rows)
+
+
+# ---------------------------------------------------- MLlib as the oracle
+
+
+def _mllib_population(tube, target):
+    """The regression population as the Tube built it with MLlib: per
+    draw a LinearRegression fit on the train rows and a
+    RegressionEvaluator R² on the test rows of the same cached base,
+    then keep-best with early stop. Returns (population, base)."""
+    import random
+
+    from pyspark.ml.evaluation import RegressionEvaluator
+    from pyspark.ml.feature import VectorAssembler
+    from pyspark.ml.regression import LinearRegression
+
+    from tabata_spark.ml.tube import _with_synthetic
+
+    lp = tube.learn_params
+    cols = tube._candidate_factors(target)
+    rng = random.Random(f"{tube.seed}:{target}")
+    p = lp["samples_percent"]
+    base = _with_synthetic(tube.sset.df, target).select(
+        "record_id", "seq", F.col(f"`{target}`").alias("__y"),
+        *[F.col(f"`{c}`").alias(c) for c in cols],
+    ).cache()
+    evaluator = RegressionEvaluator(labelCol="__y", predictionCol="prediction", metricName="r2")
+    pop, miss = [], 0
+    for i in range(lp["retry_number"]):
+        k = min(rng.randint(1, len(cols)), lp["max_features"], len(cols))
+        cc = rng.sample(cols, k)
+        tagged = base.withColumn("__u", F.rand(seed=tube.seed * 1000 + i))
+        train = tagged.filter(F.col("__u") < p)
+        test = tagged.filter((F.col("__u") >= p) & (F.col("__u") < 2 * p))
+        asm = VectorAssembler(inputCols=cc, outputCol="features")
+        model = LinearRegression(featuresCol="features", labelCol="__y").fit(
+            asm.transform(train).select("features", "__y")
+        )
+        r2 = evaluator.evaluate(model.transform(asm.transform(test).select("features", "__y")))
+        entry = (model.intercept, dict(zip(cc, model.coefficients.toArray().tolist())), r2)
+        if i < lp["keep_best_number"]:
+            pop.append(entry)
+        else:
+            worst = min(range(len(pop)), key=lambda j: pop[j][2])
+            if r2 > pop[worst][2]:
+                pop[worst] = entry
+                miss = 0
+            else:
+                miss += 1
+                if miss == lp["keep_best_number"]:
+                    break
+    return pop, base
+
+
+@pytest.mark.parametrize(
+    "target,factors,learn",
+    [
+        ("Tisa[K]", {"ALT[m]", "TAS[m/s]", "Masse[kg]"},
+         dict(retry_number=6, keep_best_number=3, samples_percent=0.05, max_features=3)),
+        ("ALT[m]", {"Tisa[K]", "TAS[m/s]", "Vz[m/s]", "Masse[kg]"},
+         dict(retry_number=4, keep_best_number=2, samples_percent=0.002, max_features=2)),
+        # one factor of mean/std ~ 200: raw normal equations lose digits
+        ("Tisa[K]", {"Masse[kg]"},
+         dict(retry_number=3, keep_best_number=2, samples_percent=0.05, max_features=1)),
+    ],
+    ids=["three_factors", "samples_0.002", "ill_conditioned"],
+)
+def test_population_matches_mllib(sset, target, factors, learn):
+    tube = Tube(sset, seed=42)
+    tube.variables = {target}
+    tube.factors = factors | {target}
+    tube.learn_params = learn
+    want, base = _mllib_population(tube, target)
+    try:
+        got = tube.build_tube(target)
+    finally:
+        base.unpersist()
+    assert [list(c) for _, c, _ in got] == [list(c) for _, c, _ in want]
+    for (b0, coefs, r2), (w0, wcoefs, wr2) in zip(got, want):
+        assert b0 == pytest.approx(w0, rel=1e-8)
+        assert r2 == pytest.approx(wr2, rel=1e-8)
+        for c in coefs:
+            assert coefs[c] == pytest.approx(wcoefs[c], rel=1e-8)
+
+
+def test_rank_deficient_draw_is_min_norm(spark, flights):
+    """Two collinear factors (ALT2 = 2·ALT): the draw that takes both
+    must not raise; it gets the minimum-norm solution, which splits
+    the slope evenly over the standardized factors and fits its train
+    rows as well as ALT alone does."""
+    from tabata_spark.ml.tube import _with_synthetic
+
+    recs = {k: v.assign(**{"ALT2[m]": 2.0 * v["ALT[m]"]}) for k, v in flights.items()}
+    tube = Tube(SignalSet.from_records(spark, recs), seed=42)
+    tube.variables = {"Tisa[K]"}
+    tube.factors = {"ALT[m]", "ALT2[m]"}
+    p = 0.05
+    tube.learn_params = dict(retry_number=4, keep_best_number=4, samples_percent=p, max_features=2)
+    base = _with_synthetic(tube.sset.df, "Tisa[K]").select(
+        "record_id", "seq", F.col("`Tisa[K]`").alias("__y"), "`ALT[m]`", "`ALT2[m]`"
+    ).cache()
+    try:
+        pop = tube.build_tube("Tisa[K]")  # every draw kept, in draw order
+        both = [i for i, (_, coefs, _) in enumerate(pop) if len(coefs) == 2]
+        assert both
+        for i in both:
+            b0, coefs, r2 = pop[i]
+            assert np.isfinite([b0, r2, *coefs.values()]).all()
+            assert coefs["ALT[m]"] == pytest.approx(2.0 * coefs["ALT2[m]"], rel=1e-9)
+            train = (
+                base.withColumn("__u", F.rand(seed=tube.seed * 1000 + i))
+                .filter(F.col("__u") < p)
+                .toPandas()
+            )
+            slope, icpt = np.polyfit(train["ALT[m]"], train["__y"], 1)
+            assert coefs["ALT[m]"] + 2.0 * coefs["ALT2[m]"] == pytest.approx(slope, rel=1e-8)
+            assert b0 == pytest.approx(icpt, rel=1e-8)
+    finally:
+        base.unpersist()

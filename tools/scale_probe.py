@@ -1,12 +1,22 @@
-"""Scale probe: run the core signal operators at multi-million-row
-scale (distributed generation, no driver pandas) and report wall
-times + rows/sec. Evidence for the 100 TB design claims:
+"""Scale probe: run the core signal operators and the models at
+multi-million-row scale (distributed generation, no driver pandas)
+and report wall times + rows/sec. Evidence for the 100 TB design
+claims:
 
     python tools/scale_probe.py [n_records] [n_rows]
 
 Defaults 2,000 records x 5,000 rows = 10M rows (~0.5 GB in memory).
 Everything measured AFTER the data is materialized to Parquet, so
 times are operator cost, not generation.
+
+The model probes fit a Selector on 64 labelled records (the
+benchmark's small indicator grid and sampling) and predict every
+record, then fit a Tube on ALT[m] and score every record. They report
+the Spark jobs each fit runs and the rows each Selector tree collects
+to the driver: a tree collects its with-replacement sample of the
+labelled rows, ``samples_percent`` of them for the first
+``retry_number`` trees and ``min(0.5, samples_percent *
+retry_number)`` for the refits.
 """
 
 from __future__ import annotations
@@ -77,6 +87,7 @@ def main():
         F.expr("min_by(seq, struct(`ALT[m]` * -1, seq))").alias("seq")
     )
     probe("slice_left_argmax", left_of(df, instants), ["ALT[m]"])
+    out.update(model_probes(spark, df, instants))
 
     out.update(
         {
@@ -87,6 +98,74 @@ def main():
         }
     )
     print(json.dumps(out))
+
+
+def model_probes(spark, df, instants, n_labeled: int = 64) -> dict:
+    """Selector fit/predict and Tube fit/scores on the probe's set."""
+    from pyspark.sql import functions as F
+
+    from tabata_spark.core.signalset import SignalSet
+    from tabata_spark.ml import selector as selector_mod
+    from tabata_spark.ml.tube import Tube
+
+    sc = spark.sparkContext
+    out: dict = {}
+
+    def jobs(group):
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def timed(name, fn):
+        sc.setJobGroup(name, name)
+        t = time.perf_counter()
+        result = fn()
+        out[f"{name}_s"] = round(time.perf_counter() - t, 2)
+        out[f"{name}_jobs"] = jobs(name)
+        print(f"# {name}: {out[name + '_s']}s, {out[name + '_jobs']} jobs", file=sys.stderr)
+        return result
+
+    sset = SignalSet(df)
+    names = sset.records
+    labeled = names[:: max(1, len(names) // n_labeled)][:n_labeled]
+    peaks = {
+        r["record_id"]: int(r["seq"])
+        for r in instants.filter(F.col("record_id").isin(labeled)).collect()
+    }
+    sel = selector_mod.Selector(sset, seed=1)
+    sel.variables = {"ALT[m]"}
+    sel.feature_params = dict(range_width=(10, 30), range_sigma=[5, 15], max_order=2)
+    sel.learn_params = dict(
+        retry_number=2, retry_percentile=80, samples_percent=0.05, min_samples_split=0.05
+    )
+    sel.predict_params = dict(filter_width=40)
+    sel.selected = peaks
+    tree_rows = []
+    fit_tree = selector_mod._fit_tree
+
+    def counting_fit_tree(X, y, min_instances):
+        tree_rows.append(len(X))
+        return fit_tree(X, y, min_instances)
+
+    selector_mod._fit_tree = counting_fit_tree
+    try:
+        timed("selector_fit", sel.fit)
+    finally:
+        selector_mod._fit_tree = fit_tree
+    out["selector_labeled_rows"] = sel._n_labeled_rows
+    out["selector_tree_rows"] = tree_rows
+    pred = timed("selector_predict", sel.predict)
+    out["selector_predicted_records"] = len(pred)
+
+    tube = Tube(sset, seed=1)
+    tube.variables = {"ALT[m]"}
+    tube.learn_params = dict(
+        retry_number=2, keep_best_number=1, samples_percent=0.05, max_features=5
+    )
+    tube.tube_params = dict(tube_factor=10.0, filter_width=5)
+    timed("tube_fit", tube.fit)
+    scores = timed("tube_scores", lambda: tube.scores().collect())
+    out["tube_scored_records"] = len(scores)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    return out
 
 
 if __name__ == "__main__":
