@@ -1456,7 +1456,8 @@ def dedup_containment(spark, sf_dir):
 )
 def dedup_clusters(spark, sf_dir):
     """Pairs → transitive clusters → canonical survivor: connected
-    components (iterative min-label propagation) over the exact-Jaccard
+    components (star-contraction rounds, finished on the driver once
+    the edges are broadcast-sized) over the exact-Jaccard
     near-dup edges of the two-snapshot corpus, every doc assigned a
     cluster id (= min reachable doc_id) and cluster size. The oracle is
     a DuckDB recursive-CTE transitive closure — the clustering itself
@@ -12574,7 +12575,7 @@ def q_dedup_keep_best(spark, sf_dir):
     quality score in production) instead of the min-id survivor
     dedup_clusters defaults to. One row per cluster: the kept doc and
     how many near-dups it displaced. Same audited pipeline as
-    dedup_clusters (exact-Jaccard pairs → min-label components, the
+    dedup_clusters (exact-Jaccard pairs → min-id components, the
     oracle replays the transitive closure as a recursive CTE), then a
     per-cluster argmax — clusters are near-cliques of bounded size,
     so the `Window.partitionBy(comp)` here is the MANY-SMALL-GROUPS

@@ -22,8 +22,11 @@ Five tiers, all designed for the 100 TB regime:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def _materialize(df: DataFrame, mode: str | None) -> DataFrame:
@@ -74,7 +77,13 @@ def bind1(value: Column, f) -> Column:
     work"). ``transform`` over a one-element array binds the value to
     a lambda variable, which element evaluations read in O(1); the
     emitted values are bit-identical (r17 probe: 4.4× on the sf0.1
-    shingle scan, 0 mismatching rows)."""
+    shingle scan, 0 mismatching rows).
+
+    ``bind1(value, f) == f(value)`` holds only when ``value`` is
+    deterministic: ``f`` sees one evaluation of ``value``, while
+    ``f(value)`` inlines the expression at every use, so a
+    nondeterministic ``value`` (``rand()``, ``uuid()``) would differ
+    between uses there and agree here."""
     return F.element_at(F.transform(F.array(value), f), 1)
 
 
@@ -1008,86 +1017,166 @@ def connected_components(
     max_iter: int = 25,
     materialize: str | None = "persist",
 ) -> DataFrame:
-    """Resolve near-dup PAIRS into CLUSTERS: connected components by
-    iterative min-label propagation — the last step of a real dedup
-    pipeline (pairs → transitive cluster → one canonical survivor,
-    which is ``comp`` itself since labels are min-ids).
+    """Resolve near-dup PAIRS into CLUSTERS: connected components —
+    the last step of a real dedup pipeline (pairs → transitive cluster
+    → one canonical survivor, which is ``comp`` itself since labels
+    are min-ids).
 
     ``pairs``: (id_a, id_b) undirected edges (e.g. from
     :func:`near_dup_pairs` / :func:`simhash_near_pairs`).
-    ``nodes``: optional (id_col) frame of ALL corpus ids; docs with no
-    edge become singleton clusters (comp = own id). Default: edge
-    endpoints only.
+    ``nodes``: optional (id_col) frame of ALL corpus ids; labels are
+    restricted to it and docs with no edge become singleton clusters
+    (comp = own id). Default: edge endpoints only.
 
-    Scale: each round is one equi-join + one map-side-combinable min
-    aggregation on uniform id keys; labels decrease monotonically, so
-    rounds needed = graph diameter. LSH dup clusters are near-cliques
-    (diameter ≤ 2-3 in practice), so the loop converges in a handful
-    of rounds — the convergence check (one count per round) stops it
-    exactly; ``max_iter`` is the adversarial-chain backstop. For
-    graphs with genuinely long chains, swap in the
-    large-star/small-star alternation (Kiveris et al., "Connected
-    Components in MapReduce"), which converges in O(log n) rounds with
-    the same join-shaped rounds.
+    The edges are kept canonical: (a, b) with a < b, self-loops
+    dropped, distinct. While that set has more than L rows, the
+    components contract by large-star/small-star rounds (Kiveris et
+    al., "Connected Components in MapReduce and Beyond"), O(log n)
+    rounds even on chain graphs:
 
-    Each round references the previous labels twice (propagation +
-    convergence check), so the logical plan would DOUBLE per round —
-    the iterative-algorithm lineage explosion. Unless
-    ``materialize=None``, every round's labels are therefore
-    checkpointed eagerly (lineage truncated; this is the legitimate
-    localCheckpoint case — plan growth, not recompute, is the enemy).
-    Production clusters with a checkpoint dir configured can swap in
-    reliable ``.checkpoint()``.
+    - large-star: m(u) = min(Γ(u) ∪ {u}); connect every bigger
+      neighbor of u to m(u). Computed WITHOUT neighbor-list collects:
+      one map-side-combinable min per node + one equi-join back — a
+      billion-degree hub never materializes its adjacency in one task;
+    - small-star: orient each edge to its larger endpoint b;
+      m(b) = min of b's smaller neighbors; connect b and each smaller
+      neighbor to m(b). Same agg+join shape.
 
-    Returns (id, comp) — comp = min id reachable, fully deterministic
-    (DuckDB recursive-CTE oracle-able).
+    Unless ``materialize`` is None/'none', every round is eagerly
+    checkpointed (lineage cut — plan growth, not recompute, is the
+    enemy of iterative algorithms). After each round one scalar
+    aggregate reads the edge count and an order-free xxhash64 sum:
+    an unchanged signature is the fixed point, where every component
+    is a star rooted at its min id and the labels read off the edges.
+
+    Once the edge set has at most L rows it is collected in one query
+    and finished on the driver by a numpy union-find. Before the first
+    round the collect is the size test (it fetches at most L + 1 rows);
+    after a round the signature's count decides, so no round adds a
+    count job. L is
+    ``spark.sql.autoBroadcastJoinThreshold`` bytes / 16 (two longs per
+    edge): about 655k edges at the default 10 MB, and a threshold <= 0
+    keeps every round distributed. A dedup graph of LSH clusters
+    usually fits at once: then the call is that one query.
+
+    Raises RuntimeError when ``max_iter`` rounds end before either
+    finish. Returns (id, comp), comp = min id reachable, fully
+    deterministic (DuckDB recursive-CTE oracle-able).
     """
-    sym = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+    spark = pairs.sparkSession
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold() // 16
+    ce = (
+        pairs.select(
+            F.least("id_a", "id_b").alias("a"), F.greatest("id_a", "id_b").alias("b")
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
     )
-    edges = _materialize(sym.distinct(), materialize)
-    if nodes is None:
-        base = edges.select(F.col("src").alias("id")).distinct()
-    else:
-        base = nodes.select(F.col(id_col).alias("id")).distinct()
 
     def cut(df: DataFrame) -> DataFrame:
         return df if materialize in (None, "none") else df.localCheckpoint(eager=True)
 
-    labels = cut(base.withColumn("comp", F.col("id")))
+    def signature(df: DataFrame) -> tuple[int, int]:
+        # decimal(38,0) accumulator: ANSI-safe (no long overflow)
+        row = df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(
+                F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")), F.lit(0)
+            ).alias("h"),
+        ).collect()[0]
+        return (row["n"], row["h"])
+
+    sig = None  # (rows, hash) of ce, once the rounds have started
     for _ in range(max_iter):
-        prop = (
-            edges.join(
-                labels.select(
-                    F.col("id").alias("src"), F.col("comp").alias("c")
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("c").alias("nc"))
+        if limit > 0 and (sig is None or sig[0] <= limit):
+            edges = ce.limit(limit + 1).toPandas()
+            if len(edges) <= limit:
+                ids, comp = _min_id_labels(edges["a"].to_numpy(), edges["b"].to_numpy())
+                t = ce.schema["a"].dataType
+                labels = spark.createDataFrame(
+                    pd.DataFrame({"id": ids, "comp": comp}),
+                    StructType([StructField("id", t), StructField("comp", t)]),
+                )
+                break
+        if sig is None:
+            ce = cut(ce)
+            sig = signature(ce)
+        # large-star
+        sym = ce.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
+            ce.select(F.col("b").alias("src"), F.col("a").alias("dst"))
         )
-        new_labels = cut(
-            labels.join(prop, "id", "left").select(
-                "id",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("nc"), F.col("comp"))
-                ).alias("comp"),
-            )
+        m = sym.groupBy("src").agg(F.min("dst").alias("mn"))
+        m = m.select("src", F.least("mn", F.col("src")).alias("m"))
+        large = (
+            sym.join(m, "src")
+            .filter(F.col("dst") > F.col("src"))
+            .select(F.col("m").alias("a"), F.col("dst").alias("b"))
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .count()
+        ce = cut(large)
+        # small-star: key = larger endpoint b, m(b) = min smaller neighbor
+        mb = ce.groupBy("b").agg(F.min("a").alias("m"))
+        from_edges = (
+            ce.join(mb, "b")
+            .filter(F.col("a") != F.col("m"))
+            .select(F.col("m").alias("a"), F.col("a").alias("b"))
         )
-        labels = new_labels
-        if changed == 0:
+        from_roots = mb.select(F.col("m").alias("a"), F.col("b").alias("b"))
+        small = (
+            from_edges.unionByName(from_roots)
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
+        )
+        ce = cut(small)
+        new_sig = signature(ce)
+        if new_sig == sig:
+            # fixed point: stars (root=a, member=b)
+            member = ce.groupBy(F.col("b").alias("id")).agg(F.min("a").alias("comp"))
+            roots = ce.select(F.col("a").alias("id")).distinct().withColumn("comp", F.col("id"))
+            labels = member.unionByName(roots).groupBy("id").agg(F.min("comp").alias("comp"))
             break
-    if materialize == "persist":
-        edges.unpersist()
+        sig = new_sig
+    else:
+        # An unconverged edge set is not guaranteed to be a star forest;
+        # reading labels off it would return silently-wrong components.
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds; "
+            "raise max_iter (star contraction needs O(log n) rounds, so a "
+            "miss usually means the edge input is unstable between scans)"
+        )
+    if nodes is not None:
+        base = nodes.select(F.col(id_col).alias("id")).distinct()
+        labels = (
+            base.join(labels, "id", "left")
+            .select("id", F.coalesce("comp", F.col("id")).alias("comp"))
+        )
     return labels
+
+
+def _min_id_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Driver finish of :func:`connected_components`: (ids, comp) for
+    the graph with edges (a[i], b[i]), comp = least id of the
+    component. Union-find by hooking and pointer jumping over indices
+    into the sorted ids: every root that is the larger end of an edge
+    between two trees hooks onto the least root it meets, then every
+    node jumps to its root. Pointers only ever decrease, so each root
+    is its tree's min id; each pass removes at least one root."""
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = inv[: len(a)], inv[len(a):]
+    parent = np.arange(len(ids))
+    while True:
+        pu, pv = parent[u], parent[v]
+        cross = pu != pv
+        if not cross.any():
+            return ids, ids[parent]
+        pu, pv = pu[cross], pv[cross]
+        lo = np.minimum(pu, pv)
+        np.minimum.at(parent, pu, lo)
+        np.minimum.at(parent, pv, lo)
+        up = parent[parent]
+        while (up != parent).any():
+            parent, up = up, up[up]
 
 
 def dedup_cluster_assignments(
@@ -1503,119 +1592,6 @@ def strip_duplicate_spans(
             F.array_join(kept, " ").alias("kept_text"),
         )
     )
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    nodes: DataFrame | None = None,
-    id_col: str = "id",
-    max_iter: int = 50,
-    materialize: str | None = "persist",
-) -> DataFrame:
-    """Connected components by large-star/small-star alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the O(log n)-round swap-in for :func:`connected_components` when
-    the dup graph has long chains (min-label propagation needs
-    diameter rounds; near-clique LSH clusters don't, adversarial
-    chain graphs do).
-
-    Edge set maintained canonically as (a, b) with a < b. Per round:
-
-    - large-star: m(u) = min(Γ(u) ∪ {u}); connect every bigger
-      neighbor of u to m(u). Computed WITHOUT neighbor-list collects:
-      one map-side-combinable min per node + one equi-join back — a
-      billion-degree hub never materializes its adjacency in one task;
-    - small-star: orient each edge to its larger endpoint b;
-      m(b) = min of b's smaller neighbors; connect b and each smaller
-      neighbor to m(b). Same agg+join shape.
-
-    Convergence = edge set stable (count + order-free xxhash64 sum —
-    one tiny scalar aggregate per round, no set diff join). At the
-    fixed point every component is a star rooted at its min id, so
-    labels read directly off the edges. Rounds are eagerly
-    checkpointed (lineage cut — plan growth, not recompute, is the
-    enemy of iterative algorithms).
-
-    Returns (id, comp), identical to min-label propagation.
-    """
-    ce = (
-        pairs.select(
-            F.least("id_a", "id_b").alias("a"), F.greatest("id_a", "id_b").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-    def cut(df: DataFrame) -> DataFrame:
-        return df if materialize in (None, "none") else df.localCheckpoint(eager=True)
-
-    def signature(df: DataFrame) -> tuple[int, int]:
-        # decimal(38,0) accumulator: ANSI-safe (no long overflow)
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    ce = cut(ce)
-    sig = signature(ce)
-    converged = False
-    for _ in range(max_iter):
-        # large-star
-        sym = ce.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-            ce.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-        )
-        m = sym.groupBy("src").agg(F.min("dst").alias("mn"))
-        m = m.select("src", F.least("mn", F.col("src")).alias("m"))
-        large = (
-            sym.join(m, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("m").alias("a"), F.col("dst").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        ce = cut(large)
-        # small-star: key = larger endpoint b, m(b) = min smaller neighbor
-        mb = ce.groupBy("b").agg(F.min("a").alias("m"))
-        from_edges = (
-            ce.join(mb, "b")
-            .filter(F.col("a") != F.col("m"))
-            .select(F.col("m").alias("a"), F.col("a").alias("b"))
-        )
-        from_roots = mb.select(F.col("m").alias("a"), F.col("b").alias("b"))
-        small = (
-            from_edges.unionByName(from_roots)
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        ce = cut(small)
-        new_sig = signature(ce)
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if not converged:
-        # An unconverged edge set is not guaranteed to be a star forest;
-        # the min() fold below would return silently-wrong labels.
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds; raise max_iter (star contraction needs O(log n) "
-            "rounds — 50 covers any realistic graph, so a miss here "
-            "usually means the edge input is unstable between scans)"
-        )
-    # fixed point: stars (root=a, member=b)
-    member = ce.groupBy(F.col("b").alias("id")).agg(F.min("a").alias("comp"))
-    roots = ce.select(F.col("a").alias("id")).distinct().withColumn("comp", F.col("id"))
-    labels = member.unionByName(roots).groupBy("id").agg(F.min("comp").alias("comp"))
-    if nodes is not None:
-        base = nodes.select(F.col(id_col).alias("id")).distinct()
-        labels = (
-            base.join(labels, "id", "left")
-            .select("id", F.coalesce("comp", F.col("id")).alias("comp"))
-        )
-    return labels
 
 
 # ---------------------------------------------------------------------------

@@ -82,9 +82,10 @@ def tube_plot_data(tube, target: str, pos: int | str = 0) -> Any:
     """Tube overlay payload (reference plot/estimate display,
     tubes.py:306-356): y, z, zmin, zmax for one record."""
     name = tube.sset._resolve(pos)
-    est = tube.estimate_frame(target).filter(F.col("record_id") == name)
+    rows = tube.sset.df.filter(F.col("record_id") == name)
     return (
-        est.select("seq", F.col(f"`{target}`").alias("y"), "z", "zmin", "zmax")
+        tube.estimate_frame(target, rows)
+        .select("seq", F.col(f"`{target}`").alias("y"), "z", "zmin", "zmax")
         .orderBy("seq")
         .toPandas()
         .set_index("seq")

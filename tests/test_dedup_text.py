@@ -1,3 +1,6 @@
+import contextlib
+import itertools
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -470,52 +473,78 @@ def test_repetition_columns(spark):
     assert rows[3]["dbf"] == 0.6  # 2 distinct bigrams of 5
 
 
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value):
+    """Set spark.sql.autoBroadcastJoinThreshold for one block: -1 keeps
+    every connected_components round distributed (no driver finish)."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _union_find_labels(edges, nodes=None):
+    """Driver oracle: {id: least id of its component} over the edge
+    endpoints (self-loops alone do not make a node), or over ``nodes``."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    ids = {v for a, b in edges if a != b for v in (a, b)} if nodes is None else set(nodes)
+    return {x: find(x) if x in parent else x for x in ids}
+
+
 def test_connected_components_matches_union_find(spark):
     """Property: component assignment equals a driver union-find on
-    random graphs (seeded), including min-id canonical labels."""
+    random graphs (seeded), including min-id canonical labels, on both
+    paths: the default threshold (the edge set fits, so one collect and
+    the driver finish) and threshold -1 (star rounds to the fixed
+    point). Inputs carry self-loops, duplicate and reversed edges and
+    negative ids; ``nodes=`` adds singletons; empty pairs give no rows."""
     import random
 
+    from tabata_spark.operators.dedup import connected_components
+
     rng = random.Random(42)
-    for trial in range(3):
+    cases = []
+    for _ in range(3):
         n = 60
-        edges = sorted(
-            {
-                tuple(sorted(rng.sample(range(n), 2)))
-                for _ in range(rng.randint(10, 80))
+        edges = [tuple(rng.sample(range(-20, n - 20), 2)) for _ in range(rng.randint(10, 80))]
+        edges += [(b, a) for a, b in edges[:5]] + edges[5:10] + [(7, 7), (-3, -3)]
+        cases.append(edges)
+    cases.append([])
+    default = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    for threshold, trial in itertools.product([default, "-1"], range(len(cases))):
+        edges = cases[trial]
+        with _broadcast_threshold(spark, threshold):
+            pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+            # persist matters here: without it every round recomputes
+            # the whole lineage and chain-heavy random graphs go
+            # superlinear
+            got = {
+                r["id"]: r["comp"]
+                for r in connected_components(pairs, materialize="persist").collect()
             }
-        )
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        expected = {}
-        for x in {v for e in edges for v in e}:
-            # canonical min id: root found by union-by-min
-            r = find(x)
-            expected[x] = min(
-                y for y in range(n) if find(y) == r
-            )
-        from tabata_spark.operators.dedup import connected_components
-
-        pairs = spark.createDataFrame(
-            [(a, b) for a, b in edges], "id_a long, id_b long"
-        )
-        # persist matters here: without it every propagation round
-        # recomputes the whole lineage and chain-heavy random graphs
-        # go superlinear
-        got = {
-            r["id"]: r["comp"]
-            for r in connected_components(pairs, materialize="persist").collect()
-        }
-        assert got == expected, f"trial {trial}"
+            assert got == _union_find_labels(edges), (threshold, trial)
+            node_ids = list(range(-25, 45))
+            nodes = spark.createDataFrame([(i,) for i in node_ids], "doc_id long")
+            got = {
+                r["id"]: r["comp"]
+                for r in connected_components(pairs, nodes=nodes, id_col="doc_id").collect()
+            }
+            assert got == _union_find_labels(edges, node_ids), (threshold, trial, "nodes")
 
 
 def test_lsh_neardup_planted_duplicate_recall(spark):
@@ -838,10 +867,9 @@ def test_semantic_dedup_blocked_equals_expression_path(spark):
 
 
 def test_star_cc_equals_label_propagation(spark):
-    from tabata_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """The driver finish (default threshold) and the distributed star
+    rounds (threshold -1) give the same components."""
+    from tabata_spark.operators.dedup import connected_components
     import random
 
     rng = random.Random(7)
@@ -864,37 +892,39 @@ def test_star_cc_equals_label_propagation(spark):
             pairs, nodes=nodes, id_col="doc_id"
         ).collect()
     }
-    b = {
-        (r["id"], r["comp"])
-        for r in connected_components_star(
-            pairs, nodes=nodes, id_col="doc_id"
-        ).collect()
-    }
+    with _broadcast_threshold(spark, "-1"):
+        b = {
+            (r["id"], r["comp"])
+            for r in connected_components(
+                pairs, nodes=nodes, id_col="doc_id"
+            ).collect()
+        }
     assert a == b
 
 
 def test_star_cc_converges_on_chain_where_label_prop_cannot(spark):
-    from tabata_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """A 200-node chain (diameter 199) resolves exactly on both paths
+    within 12 rounds; star rounds that run out of ``max_iter`` raise
+    instead of returning partial labels."""
+    from tabata_spark.operators.dedup import connected_components
 
-    # 200-node chain: diameter 199. Label propagation moves the min
-    # one hop per round — at max_iter=12 it CANNOT have finished.
     n = 200
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     star = {
         (r["id"], r["comp"])
-        for r in connected_components_star(pairs, max_iter=12).collect()
-    }
-    assert star == {(i, 0) for i in range(n)}
-    prop = {
-        (r["id"], r["comp"])
         for r in connected_components(pairs, max_iter=12).collect()
     }
-    assert prop != star  # the diameter-bound algorithm is still mid-flight
+    assert star == {(i, 0) for i in range(n)}
+    with _broadcast_threshold(spark, "-1"):
+        rounds = {
+            (r["id"], r["comp"])
+            for r in connected_components(pairs, max_iter=12).collect()
+        }
+        assert rounds == star
+        with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+            connected_components(pairs, max_iter=2)
 
 
 def test_bm25_ranking_properties(spark):
@@ -970,7 +1000,7 @@ def test_session_sequences_gap_and_order(spark):
 
 def test_new_ops_empty_input_paths(spark, tmp_path):
     from tabata_spark.core.maintenance import zorder_write
-    from tabata_spark.operators.dedup import connected_components_star
+    from tabata_spark.operators.dedup import connected_components
     from tabata_spark.operators.sampling import domain_cap
     from tabata_spark.operators.text import bm25_rank, inverted_index
 
@@ -983,7 +1013,8 @@ def test_new_ops_empty_input_paths(spark, tmp_path):
     one = spark.createDataFrame([(1, "a"), (2, "a")], "doc_id long, source string")
     assert domain_cap(one, cap=1, shards=1).count() == 1
     empty_pairs = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components_star(empty_pairs).count() == 0
+    with _broadcast_threshold(spark, "-1"):
+        assert connected_components(empty_pairs).count() == 0
     zp = str(tmp_path / "z_empty")
     ze = spark.createDataFrame([], "rid long, x long, y long")
     assert zorder_write(ze, zp, cols=["x", "y"]) == {}

@@ -141,6 +141,53 @@ def test_record_belief_filters_below_grouped_map(spark, sset, tmp_path):
     assert one["p"].tolist() == whole["p"].tolist()
 
 
+def test_tube_plot_data_filters_below_grouped_map(spark, sset, tmp_path, monkeypatch):
+    """The tube overlay of one stored record scores only that record:
+    its record_id predicate sits below the FlatMapGroupsInPandas of the
+    bound smoothing, and the values equal the whole-set estimate rows
+    of that record."""
+    from tabata_spark import viz
+    from tabata_spark.core.signalset import SignalSet
+    from tabata_spark.ml.tube import Tube
+    from tabata_spark.plans.inspect import explain_str
+
+    sset.save(str(tmp_path / "set"))
+    stored = SignalSet.load(spark, str(tmp_path / "set"))
+    tube = Tube(stored, seed=42)
+    tube.variables = {"Tisa[K]"}
+    tube.factors = {"ALT[m]", "TAS[m/s]", "Tisa[K]"}
+    tube.learn_params = dict(
+        retry_number=2, keep_best_number=2, samples_percent=0.05, max_features=2
+    )
+    tube.tube_params = dict(tube_factor=10.0, filter_width=5)
+    tube.fit()
+    name = stored.records[2]
+    plans = []
+    to_pandas = type(stored.df).toPandas
+
+    def spy(df):
+        plans.append(explain_str(df, "simple"))
+        return to_pandas(df)
+
+    monkeypatch.setattr(type(stored.df), "toPandas", spy)
+    one = viz.tube_plot_data(tube, "Tisa[K]", name)
+    monkeypatch.undo()
+    lines = plans[0].splitlines()
+    grouped = [i for i, ln in enumerate(lines) if "FlatMapGroupsInPandas" in ln]
+    predicate = [i for i, ln in enumerate(lines) if name in ln]
+    assert len(grouped) == 1 and predicate, lines
+    assert all(i > grouped[0] for i in predicate), lines  # printed deeper = runs first
+    whole = (
+        tube.estimate_frame("Tisa[K]")
+        .filter(F.col("record_id") == name)
+        .orderBy("seq")
+        .toPandas()
+    )
+    assert one.index.tolist() == whole["seq"].tolist()
+    for col, src in [("y", "Tisa[K]"), ("z", "z"), ("zmin", "zmin"), ("zmax", "zmax")]:
+        assert one[col].tolist() == whole[src].tolist(), col
+
+
 def test_cruise_flag_uses_ordered_frame(spark, sf):
     """with_cruise_flag must not use the unordered whole-group window
     path (4x slower at 10M rows): its plan shows an ordered Sort under

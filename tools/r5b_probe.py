@@ -1,6 +1,7 @@
 """Scale probes for the round-5 session-2 operators: substring-span
 dedup, domain-cap sampling under skew, BM25, PQ encode/ADC, and
-large-star/small-star components on a chain graph. Distributed
+large-star/small-star components on a chain graph (broadcast
+threshold -1, so every round stays distributed). Distributed
 generation (no driver data), inputs materialized to Parquet before
 timing:
 
@@ -27,7 +28,7 @@ def main():
     from pyspark.sql import functions as F
 
     from tabata_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
         duplicate_span_stats,
         strip_duplicate_spans,
     )
@@ -141,8 +142,9 @@ def main():
     chain = spark.range(chain_n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     t0 = time.perf_counter()
-    labels = connected_components_star(chain, max_iter=30)
+    labels = connected_components(chain, max_iter=30)
     n_comp = labels.select("comp").distinct().count()
     out["star_cc_s"] = round(time.perf_counter() - t0, 2)
     out["star_cc_components"] = n_comp

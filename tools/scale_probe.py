@@ -17,6 +17,16 @@ to the driver: a tree collects its with-replacement sample of the
 labelled rows, ``samples_percent`` of them for the first
 ``retry_number`` trees and ``min(0.5, samples_percent *
 retry_number)`` for the refits.
+
+    python tools/scale_probe.py components [n_nodes] [chain_n]
+
+runs only the connected-components probe: planted cliques of 4 over
+``n_nodes`` ids (default 1M nodes, 1.5M edges, above the default
+driver-finish limit of about 655k edges) and a ``chain_n``-node chain
+(default 100k, diameter chain_n - 1). It reports wall time, Spark
+jobs, components found, and ``rounds`` = (checkpoints - 1) / 2: the
+canonical edges are checkpointed once, then the large-star and the
+small-star step of every round.
 """
 
 from __future__ import annotations
@@ -31,6 +41,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():
+    if sys.argv[1:2] == ["components"]:
+        n_nodes = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
+        chain_n = int(sys.argv[3]) if len(sys.argv) > 3 else 100_000
+        from tabata_spark.session import get_spark
+
+        out = components_probes(get_spark("scale-probe"), n_nodes, chain_n)
+        print(json.dumps(out))
+        return
     n_records = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
     n_rows = int(sys.argv[2]) if len(sys.argv) > 2 else 5000
 
@@ -164,6 +182,68 @@ def model_probes(spark, df, instants, n_labeled: int = 64) -> dict:
     timed("tube_fit", tube.fit)
     scores = timed("tube_scores", lambda: tube.scores().collect())
     out["tube_scored_records"] = len(scores)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    return out
+
+
+def components_probes(spark, n_nodes: int, chain_n: int) -> dict:
+    """connected_components on planted cliques of 4 and on a chain,
+    each read back from Parquet before timing."""
+    from pyspark.sql import functions as F
+
+    from tabata_spark.operators.dedup import connected_components
+
+    sc = spark.sparkContext
+    tmp = tempfile.mkdtemp(prefix="scale_probe_cc_")
+    c = F.col("id") * 4
+    graphs = {
+        "cc_cliques": spark.range(n_nodes // 4)
+        .select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct((c + i).alias("id_a"), (c + j).alias("id_b"))
+                        for i in range(4)
+                        for j in range(i + 1, 4)
+                    ]
+                )
+            ).alias("e")
+        )
+        .select("e.*"),
+        "cc_chain": spark.range(chain_n - 1).select(
+            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+        ),
+    }
+    out: dict = {"cc_nodes": n_nodes, "cc_chain_n": chain_n}
+    for name, g in graphs.items():
+        path = os.path.join(tmp, name)
+        g.write.mode("overwrite").parquet(path)
+        pairs = spark.read.parquet(path)
+        frame = type(pairs)
+        checkpoint = frame.localCheckpoint
+        out[f"{name}_edges"] = pairs.count()
+        cuts = []
+
+        def counting_checkpoint(df, *a, **k):
+            cuts.append(1)
+            return checkpoint(df, *a, **k)
+
+        frame.localCheckpoint = counting_checkpoint
+        sc.setJobGroup(name, name)
+        t = time.perf_counter()
+        try:
+            row = connected_components(pairs).agg(
+                F.count(F.lit(1)).alias("n"), F.countDistinct("comp").alias("k")
+            ).collect()[0]
+        finally:
+            frame.localCheckpoint = checkpoint
+        out[f"{name}_s"] = round(time.perf_counter() - t, 2)
+        out[f"{name}_jobs"] = len(sc.statusTracker().getJobIdsForGroup(name))
+        out[f"{name}_checkpoints"] = len(cuts)
+        out[f"{name}_rounds"] = (len(cuts) - 1) // 2 if cuts else 0
+        out[f"{name}_labelled"] = row["n"]
+        out[f"{name}_components"] = row["k"]
+        print(f"# {name}: {out[name + '_s']}s, {out[name + '_jobs']} jobs", file=sys.stderr)
     sc.setLocalProperty("spark.jobGroup.id", None)
     return out
 
