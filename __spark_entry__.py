@@ -1,9 +1,9 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check; each ``queries()[name]`` is
+compared against the matching ``oracle_sql()[name]`` run in DuckDB
+(row count, schema and order-insensitive values), which is what
+``tools/oracle_check.py`` does for every registered query.
 
 Implementation lives in ``tabata_spark.battery``; this module is the
 thin driver-facing adapter.

@@ -28,11 +28,8 @@ from tabata_spark.operators.slicing import highlight, left_of
 from tabata_spark.operators.timeutil import duration_h, epoch_diff_s, epoch_s, epoch_us
 from tabata_spark.sources.relational import SIGNALS_CTE, events_as_signals, load_table
 
-#: REGISTRATION ORDER MATTERS: the per-round correctness driver
-#: value-hashes exactly the FIRST 50 registered queries (verified r5:
-#: CORRECTNESS_r05.json keys == registration-order prefix). The
-#: first-50 window is pinned in tests/test_battery_window.py — reorder
-#: only deliberately, after a full local oracle sweep.
+#: Registry in source (decorator) order; ``__spark_entry__`` exposes
+#: both dicts, and ``tools/oracle_check.py`` checks every entry.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -171,7 +168,7 @@ def _signals(spark, sf_dir):
     scan reports ``hashpartitioning(record_id)`` as its output
     partitioning, which satisfies every record-window's required
     distribution — the one exchange every signal query pays on raw
-    parquet disappears (SCALE.md bucketed-bench pair). Row content and
+    parquet disappears (SCALE.md rule 8). Row content and
     schema are identical by construction (save_bucketed sorts by
     (record_id, seq), and seq was already materialized at save time)."""
     import os as _os
@@ -1838,7 +1835,7 @@ def dedup_minhash_staged(spark, sf_dir):
     with band_groups=4 and verify_slices=8 over the two-snapshot
     corpus plus planted 5-copy groups (every tenth document) — the
     production entry point whose staged seams the r15 20M-doc probes
-    measured (SCALE.md: per-pass working set ∝ 1/groups, verify 5.4×
+    measured (SCALE.md rule 31: per-pass working set ∝ 1/groups, verify 5.4×
     faster at flat RSS in 8 slices).
 
     What the hash-match certifies: the result set of the staged form
@@ -7014,117 +7011,6 @@ def q_gini_sources(spark, sf_dir):
     ).orderBy("source")
 
 
-# =====================================================================
-# Bench-only entries: production paths whose hash function DuckDB
-# cannot replay (no oracle possible), measured so the headline bench
-# reflects the production engine, not only the parity variant.
-# =====================================================================
-
-BENCH_EXTRA: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-
-def _bench_extra(name: str):
-    def deco(fn):
-        BENCH_EXTRA[name] = fn
-        return fn
-
-    return deco
-
-
-@_bench_extra("a_bootstrap_ci_prod")
-def a_bootstrap_ci_prod(spark, sf_dir):
-    """Production bootstrap: identical 50-replicate single-scan
-    machinery to a_bootstrap_ci but with xxhash64-derived uniforms
-    (one JVM hash per replicate vs the md5 hex-parse chain the oracle
-    needs). Benches what a deployment runs."""
-    from tabata_spark.operators.stats import bootstrap_means
-
-    ev = _t(spark, sf_dir, "events")
-    return bootstrap_means(
-        ev, n_replicates=50, salt="boot", decimals=6, hasher="xxhash64"
-    )
-
-
-@_bench_extra("dedup_simhash_prod")
-def dedup_simhash_prod(spark, sf_dir):
-    """Production SimHash: identical pipeline to dedup_simhash but with
-    the default seeded-xxhash64 token hash (one JVM hash call per token
-    vs md5's hex-parse round-trip). The md5 variant exists only for
-    DuckDB oracle parity; this entry benches what a deployment runs."""
-    from tabata_spark.operators.dedup import simhash, simhash_near_pairs
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = docs.unionByName(
-        docs.select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
-    )
-    fp = simhash(corpus)  # default token_hash = seeded xxhash64
-    return simhash_near_pairs(fp, max_hamming=3).orderBy("id_a", "id_b")
-
-
-@_bench_extra("dedup_minhash_salted_prod")
-def dedup_minhash_salted_prod(spark, sf_dir):
-    """Production salted MinHash: the same planted 8-copy corpus and
-    bands/rows/cap as dedup_minhash_salted, but through the fused
-    ``near_dup_pairs(hot_bucket='salt')`` entry point with the
-    default xxhash64 signature/shard hashes (the md5 chain in the
-    certified query exists only for DuckDB oracle replay). Benches
-    what a deployment runs on a boilerplate-heavy corpus."""
-    from tabata_spark.operators.dedup import near_dup_pairs
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = (
-        docs.filter(F.col("doc_id") % 5 == 0)
-        .select(
-            "doc_id", "text",
-            F.explode(F.sequence(F.lit(2), F.lit(7))).alias("k"),
-        )
-        .select(
-            (F.col("doc_id") + F.col("k") * 1000000).alias("doc_id"), "text"
-        )
-    )
-    corpus = docs.unionByName(
-        docs.select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
-    ).unionByName(planted)
-    return near_dup_pairs(
-        corpus,
-        num_hashes=8,
-        bands=4,
-        rows=2,
-        threshold=0.8,
-        max_bucket_size=6,
-        hot_bucket="salt",
-    ).orderBy("id_a", "id_b")
-
-
-@_bench_extra("dedup_simhash_salted_prod")
-def dedup_simhash_salted_prod(spark, sf_dir):
-    """Production salted SimHash: the same planted 8-copy corpus and
-    block cap as dedup_simhash_salted, but with the default xxhash64
-    token AND shard hashes (the md5 chain in the certified query
-    exists only for DuckDB oracle replay). Benches what a deployment
-    runs on a boilerplate-heavy corpus."""
-    from tabata_spark.operators.dedup import simhash, simhash_near_pairs
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = (
-        docs.filter(F.col("doc_id") % 5 == 0)
-        .select(
-            "doc_id", "text",
-            F.explode(F.sequence(F.lit(2), F.lit(7))).alias("k"),
-        )
-        .select(
-            (F.col("doc_id") + F.col("k") * 1000000).alias("doc_id"), "text"
-        )
-    )
-    corpus = docs.unionByName(
-        docs.select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
-    ).unionByName(planted)
-    fp = simhash(corpus)
-    return simhash_near_pairs(
-        fp, max_hamming=3, max_bucket_size=6, hot_block="salt"
-    ).orderBy("id_a", "id_b")
-
-
 @register(
     "mixture_temp",
     """
@@ -7917,7 +7803,7 @@ def q_pagerank(spark, sf_dir):
     the display labels are derived once at the boundary: hashing and
     broadcasting a 5-round rank vector on STRING keys measured 1.22×
     slower end-to-end at sf0.1 (4.58 s vs 3.76 s min-of-3, SCALE.md
-    round 13) — at web scale the per-round join key should always be
+    rule 22) — at web scale the per-round join key should always be
     a fixed-width integer."""
     from tabata_spark.operators.graph import pagerank
 
@@ -9819,7 +9705,7 @@ def q_heaps_fit(spark, sf_dir):
             F.sum(F.col("lx") * F.col("lx")).cast("double").alias("sxx"),
         )
 
-    # measured sf0.1 surprise (SCALE.md r12): pin_input=True costs a
+    # measured sf0.1 surprise (SCALE.md rule 25): pin_input=True costs a
     # flat ~0.45s here — the cache encode/decode exceeds one recompute
     # of even this tokenize chain; the double execution stays cheaper
     s = with_exact_cumsum(joined, ["doc_id"], ["nk", "nt"], fold=_ols_sums)
@@ -10729,41 +10615,6 @@ def q_shortest_paths(spark, sf_dir):
         F.col("p_partkey").alias("node")
     )
     return bounded_shortest_paths(edges, seeds, max_hops=3).orderBy("node")
-
-
-@_bench_extra("q_bloom_join_prod")
-def q_bloom_join_prod(spark, sf_dir):
-    """Production twin of q_bloom_join: xxhash64 probe positions (one
-    JVM hash per probe instead of an md5 + hex-conv chain — the
-    CMS/simhash prod/parity split). Same no-false-negative guarantee,
-    same result as the plain join; only the md5 variant is DuckDB-
-    replayable, so this one is bench-only."""
-    from tabata_spark.operators.sketch import bloom_filtered_join
-
-    o = (
-        _t(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderpriority") == "1-URGENT")
-            & (F.to_date("o_orderdate") >= F.lit("1997-03-01").cast("date"))
-            & (F.to_date("o_orderdate") < F.lit("1997-04-01").cast("date"))
-        )
-        .select(F.col("o_orderkey").alias("l_orderkey"))
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    j = bloom_filtered_join(
-        li, o, "l_orderkey", m_bits=1 << 18, k=5, hasher="xxhash64"
-    )
-    return j.agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.countDistinct("l_orderkey").alias("n_orders"),
-        F.sum(
-            (F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")))
-            .cast("decimal(18,4)")
-        )
-        .cast("decimal(28,4)")
-        .cast("double")
-        .alias("revenue"),
-    )
 
 
 @register(
@@ -12610,677 +12461,10 @@ def q_dedup_keep_best(spark, sf_dir):
     )
 
 
-# ---------------------------------------------------------------------------
-# Driver-audit window rotation (round 8).
-#
-# The per-round correctness driver value-hashes exactly the FIRST 50
-# entries of queries() in iteration order (verified r5:
-# CORRECTNESS_r05.json keys == registration-order prefix). Rounds 4-7
-# all audited the same first-50 slice; every one of those 50 is
-# hash-green in CORRECTNESS_r07.json, and all 201 oracles passed the
-# HUGEINT/DECIMAL type lint (ORACLE_LOCAL_r7.txt), so rotating is
-# zero-risk by the round-6 brief's own precondition. Rotate a SECOND,
-# fully DISJOINT 50-query slice into the driver's view so the battery's
-# long tail gets independent driver confirmation: txlog, KMV/sketches,
-# Bloom-prefiltered join, graph (PageRank/shortest-paths/LPA/triangles),
-# drift & eval stats, bitext mining, SCD2/PIT/CDC, as-of joins, and the
-# TPC-H long tail. Decorator source order is untouched — only the dict
-# iteration order rotates. Pinned in tests/test_battery_window.py.
-
-_DRIVER_WINDOW_R8 = [
-    # TPC-H long tail + relational surface never driver-hashed before
-    "q6_forecast_revenue",
-    "q18_large_orders",
-    "q2_min_cost_supp",
-    "q8_market_share",
-    "q9_nation_profit",
-    "q12_ship_delay",
-    "q13_order_distribution",
-    "q20_qualified_suppliers",
-    "q_pivot_orders",
-    "q_grouping_sets",
-    "q_quantiles",
-    "q_corr_stats",
-    "q_window_rank",
-    "a_salted_agg",
-    "a_normalize",
-    # as-of / interval joins
-    "j_asof_purchase",
-    "j_interval_attrib",
-    # transactional table log
-    "q_txlog_orders",
-    "q_txlog_merge",
-    # sketches + sketch-powered join
-    "q_kmv_overlap",
-    "q_bloom_join",
-    "sketch_cms_tokens",
-    "sketch_bloom_customers",
-    "sketch_dd_quantiles",
-    "sketch_join_cardinality",
-    # graph
-    "q_pagerank",
-    "q_pagerank_weighted",
-    "q_shortest_paths",
-    "q_label_propagation",
-    "q_triangles",
-    # drift / eval stats
-    "q_chi2_source_lang",
-    "q_psi_sources",
-    "q_ks_sources",
-    "q_mannwhitney_sources",
-    "q_gini_sources",
-    "q_mutual_info",
-    "q_conformal_coverage",
-    "q_quantile_normalize",
-    "a_theilsen_trend",
-    "a_bootstrap_ci",
-    # bitext mining
-    "q_bitext_margin",
-    # SCD2 / PIT / CDC
-    "q_scd2_customers",
-    "q_pit_orders",
-    "q_snapshot_diff",
-    # text retrieval / tokenization long tail
-    "text_bm25",
-    "text_inverted",
-    "text_decontaminate",
-    "text_bpe_merges",
-    # sampling + end-to-end pipeline
-    "sample_stratified",
-    "pipeline_end_to_end",
-]
-
-
-# Round 9: the THIRD disjoint 50-query slice (VERDICT r8 item 1).
-# Both prior windows (r4-r7 first-50 and the r8 rotation) are fully
-# hash-green in their CORRECTNESS artifacts, so rotating is zero-risk
-# by the same precondition. This slice drains the never-driver-checked
-# tail: the serving/ingest headliners (continuous dedup ingest, stored
-# signature index probe), association rules, k-core, survival (KM +
-# log-rank), RFM/Lorenz (now on the distributed exact ntile), PQ/ADC +
-# near-dup LSH serving, span/line/incremental dedup, text retrieval +
-# perplexity, sampling/mixture planning, Z-order clustering, the
-# time-series window tail (CUSUM/EWMA/ACF/rolling-median/M4/LTTB),
-# cohort/DAU analytics, and the entire remaining TPC-H tail
-# (q4/q7/q10/q11/q14/q15/q16/q17/q19/q21/q22). Pinned in
-# tests/test_battery_window.py alongside both prior windows.
-
-_DRIVER_WINDOW_R9 = [
-    # serving / ingest / storage headliners
-    "dedup_ingest_pipeline",
-    "q_sigidx_probe",
-    "q_txlog_zorder",
-    "q_zorder_key",
-    # analytics families added r8
-    "q_assoc_brands",
-    "q_kcore_parts",
-    "q_survival_km",
-    "q_logrank_segments",
-    "q_rfm_segments",
-    "q_lorenz_customers",
-    # similarity / embedding serving tail
-    "sim_pq_adc",
-    "sim_neardup_lsh",
-    "sim_neardup_pairs",
-    "sim_hard_negatives",
-    "sim_srp_project",
-    "emb_int8_quant",
-    "q_domain_similarity",
-    # dedup tail
-    "dedup_lines",
-    "dedup_incremental",
-    "dedup_span_stats",
-    "dedup_span_strip",
-    # text tail
-    "text_pii",
-    "text_index_search",
-    "text_repetition",
-    "text_fertility",
-    "text_unigram_ppl",
-    # sampling / mixture planning
-    "sample_domain_cap",
-    "sample_weighted",
-    "sample_pareto",
-    "mixture_uniform",
-    "q_mixing_plan",
-    # time-series window tail
-    "w_cusum",
-    "w_ewma",
-    "w_acf",
-    "w_rolling_median",
-    "w_m4_downsample",
-    "w_lttb_downsample",
-    # product analytics
-    "q_cohort_retention",
-    "q_dau_wau",
-    # TPC-H tail — the last driver-unchecked TPC-H shapes
-    "q4_priority_check",
-    "q7_volume_shipping",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_counts",
-    "q17_small_quantity",
-    "q19_discounted_revenue",
-    "q21_waiting_supplier",
-    "q22_global_sales",
-]
-
-
-# Round 10: the FOURTH rotation (VERDICT r9 item 1). Candidate list
-# diffed against the UNION of ALL prior CORRECTNESS_r1-r9 artifacts
-# (not just recent rounds — r9 burned a slot on sim_neardup_pairs,
-# already hashed in r1/r2; pinned against repeating that in
-# tests/test_battery_window.py::test_r10_window_is_never_before_checked).
-# Exactly 58 queries had never been driver-hashed after r9; this slice
-# takes 50 of them — the a_* analytics tail, packing, vocab/splitting,
-# event-sequence analytics, corpus-statistics fits (Heaps/Zipf/keyness),
-# crawl pipeline + URL/HTML normalization, eval/QA reports, and the
-# gap-fill/rolling-time window tail. The 8 deferred are all variants
-# whose sibling is certified this round or earlier
-# (sample_domain_cap_weighted, a_winsorize_events, mixture_temp,
-# text_bpe_tokens, q_histogram_depth, a_quadratic_trend,
-# q_type_crosscorr, decontaminate); they plus post-conversion re-checks
-# fill the fifth window.
-
-_DRIVER_WINDOW_R10 = [
-    # analytics tail over events/signals
-    "a_attrib_summary",
-    "a_winsorize",
-    "a_quantile_transform",
-    "a_funnel_depth",
-    "a_label_centroids",
-    "a_bootstrap_by_type",
-    "a_robust_zscore",
-    "a_label_dispersion",
-    "a_conversion_latency",
-    "a_record_trend",
-    # training-data packing / splitting / vocab
-    "pack_chunks",
-    "pack_length_batches",
-    "split_assign",
-    "vocab_topk",
-    "sample_cluster_cap",
-    "quality_topfrac",
-    # event-sequence product analytics
-    "q_event_transitions",
-    "q_session_sequences",
-    "q_last_touch",
-    "q_streaks",
-    "q_markov_transitions",
-    "q_purchase_cadence",
-    "q_type_entropy_daily",
-    "q_revenue_growth",
-    "q_seasonal_anomaly",
-    "q_ab_test",
-    # corpus statistics / fits
-    "q_heaps_fit",
-    "q_zipf_fit",
-    "q_keyness_llr",
-    "q_skew_report",
-    "q_weighted_median",
-    "q_histogram_value",
-    "q_oov_rate",
-    "q_ppl_buckets",
-    # text long tail
-    "text_collocations",
-    "text_bigram_ppl",
-    "text_novelty",
-    "q_langid_eval",
-    "q_label_confusability",
-    # retrieval fusion + fuzzy matching
-    "q_rrf_fusion",
-    "q_fuzzy_parts",
-    # dataset QA / governance reports
-    "q_dataset_card",
-    "q_dataset_fingerprint",
-    "q_k_anonymity",
-    "q_eval_slices",
-    # crawl pipeline + web normalization
-    "q_url_canonical",
-    "q_html_extract",
-    "pipeline_crawl",
-    # time-window tail
-    "w_gapfill",
-    "w_rolling_time",
-]
-
-
-# Round 11: the FIFTH rotation (VERDICT r10 item 2) — the ledger
-# CLOSES this round: after four disjoint slices, exactly 10 queries
-# have never hash-greened (the 8 deliberate deferrals plus the two r10
-# reds, both fixed this round), so this window is composed as
-#   (a) all 10 never-certified queries,
-#   (b) every query whose CODE changed after its latest green hash —
-#       the six exact-rank/ntile/cumsum consumers (the ranking module
-#       was rewritten lazy this round), the k-core and assoc gate
-#       consumers, the five txlog/sigidx-backed queries (log-store
-#       seam), and text_collocations (assoc import),
-#   (c) 26 re-checks of the OLDEST certifications (the r7 cohort plus
-#       q_string_funcs, green only in r2) — deepest-staleness first:
-#       the dedup/similarity/text LLM-pipeline headliners, the
-#       streaming twins, and the relational anchors.
-# Unlike windows 2-4 this slice deliberately REPEATS prior greens:
-# every repeat is either changed-code (must re-hash) or the stalest
-# cohort (defense in depth); the never-before-checked invariant is
-# replaced by an all-never-certified-covered invariant in
-# tests/test_battery_window.py.
-
-_DRIVER_WINDOW_R11 = [
-    # (a) never driver-certified: the two fixed r10 reds first
-    "q_eval_slices",
-    "a_label_centroids",
-    # ... then the 8 deliberate deferrals
-    "a_quadratic_trend",
-    "a_winsorize_events",
-    "decontaminate",
-    "mixture_temp",
-    "q_histogram_depth",
-    "q_type_crosscorr",
-    "sample_domain_cap_weighted",
-    "text_bpe_tokens",
-    # (b) code changed after latest hash — ranking-module consumers
-    "a_conversion_latency",
-    "q_rfm_segments",
-    "q_lorenz_customers",
-    "q_heaps_fit",
-    "q_skew_report",
-    "pack_length_batches",
-    # ... k-core / assoc consumers
-    "q_kcore_parts",
-    "q_assoc_brands",
-    "text_collocations",
-    # ... txlog / sigidx consumers (log-store seam landed this round)
-    "q_txlog_orders",
-    "q_txlog_merge",
-    "q_txlog_zorder",
-    "dedup_ingest_pipeline",
-    "q_sigidx_probe",
-    # (c) stalest certifications — r2/r7 cohort
-    "q_string_funcs",
-    "dedup_exact",
-    "dedup_norm_hash",
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "dedup_clusters",
-    "dedup_minhash_sig",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "sim_topk_cosine",
-    "sim_knn_join",
-    "sim_lsh_ann",
-    "sim_ivf_ann",
-    "sim_ivf_knn_batch",
-    "sim_semantic_dedup",
-    "text_langid",
-    "text_quality",
-    "text_gopher",
-    "text_tokens",
-    "text_fingerprint",
-    "text_chunks",
-    "multimodal_features",
-    "w_tumbling",
-    "w_sessionize",
-    "q1_pricing_summary",
-    "q_json_events",
-]
-
-
-# Round 12: the SIXTH rotation — staleness-only (VERDICT r11 item 4:
-# the ledger is closed at 209/209, so this window chases no reds).
-# Composition:
-#   (a) every query whose CODE changed this round after its latest
-#       green hash — the five ranking-rewrite consumers (q_rfm now on
-#       the melted grouped ntile; lorenz/skew/conversion/heaps on the
-#       fold fast path), pack_length_batches (with_exact_ntile
-#       internals), q_kcore_parts (k_core checkpoint freeing),
-#       a_winsorize_events / sketch_dd_quantiles / quality_topfrac
-#       (exact_rank_of_quantile now computes its product in
-#       DECIMAL(38,0) behind a short-decimal guard),
-#       multimodal_features (PNG filter arithmetic de-warned), and
-#       vocab_topk (re-registered via the decorator idiom);
-#   (b) the entire 25-query r7 cohort — the oldest certifications in
-#       the ledger (five rounds stale);
-#   (c) 13 r8-cohort fills, oldest-first weighted by shared-helper
-#       churn since r8: the sketch family (DDSketch ranks moved to
-#       exact integers r11), the graph headliners (graph.py churned
-#       r11+r12), the quantile/rank/gini analytics, and the
-#       end-to-end pipeline integration query.
-# Pinned in tests/test_battery_window.py.
-
-_DRIVER_WINDOW_R12 = [
-    # (a) changed code this round
-    "q_rfm_segments",
-    "q_lorenz_customers",
-    "q_heaps_fit",
-    "q_skew_report",
-    "a_conversion_latency",
-    "pack_length_batches",
-    "q_kcore_parts",
-    "a_winsorize_events",
-    "sketch_dd_quantiles",
-    "quality_topfrac",
-    "multimodal_features",
-    "vocab_topk",
-    # (b) the r7 cohort — stalest certifications
-    "a_detect_error",
-    "a_out_of_tube",
-    "a_standardize",
-    "a_user_summary",
-    "j_highlight",
-    "j_slice_left",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "q_anti_parts",
-    "q_cube_orders",
-    "q_distinct_parts",
-    "q_except_customers",
-    "q_month_revenue",
-    "q_rollup_nation",
-    "q_semi_customers",
-    "q_setops_customers",
-    "q_topk_orders",
-    "sample_dsir",
-    "w_indicator_full",
-    "w_positions",
-    "w_rev_indicator",
-    "w_running",
-    "w_savgol_interior",
-    "w_segment_ramp",
-    "w_sliding",
-    # (c) r8 fills — helper-churn-weighted
-    "q_bloom_join",
-    "q_kmv_overlap",
-    "sketch_cms_tokens",
-    "sketch_bloom_customers",
-    "sketch_join_cardinality",
-    "q_pagerank",
-    "q_shortest_paths",
-    "q_label_propagation",
-    "q_triangles",
-    "q_quantiles",
-    "q_window_rank",
-    "q_gini_sources",
-    "pipeline_end_to_end",
-]
-
-
-# The r13 window — the SEVENTH rotation. Head: the queries with NO
-# driver hash ever (q_lang_length_deciles, added after the r12 run —
-# VERDICT r12 next-round #1 — plus this round's four additions), then
-# every query whose executed code changed this round (the ranking
-# module's fold/guard/registry changes and its fold consumers, the
-# k_core reliable/pin change, the q_skew_report empty guard), then the
-# ENTIRE 34-query r8 cohort (the stalest certifications — five rounds
-# old), then two r9 fills weighted by shared-helper families
-# (sampling). Pinned in tests/test_battery_window.py.
-_DRIVER_WINDOW_R13 = [
-    # (a) never driver-certified
-    "q_lang_length_deciles",
-    "q_good_turing",
-    "q_ttr_sources",
-    "q_emb_isotropy",
-    "q_trimmed_mean_events",
-    "q_dedup_keep_best",
-    # (b) changed code this round
-    "q_rfm_segments",
-    "q_lorenz_customers",
-    "q_heaps_fit",
-    "q_skew_report",
-    "a_conversion_latency",
-    "pack_length_batches",
-    "q_kcore_parts",
-    "q_pagerank",
-    # (c) the r8 cohort — stalest certifications
-    "q6_forecast_revenue",
-    "q18_large_orders",
-    "q_pivot_orders",
-    "q_grouping_sets",
-    "q_corr_stats",
-    "j_asof_purchase",
-    "j_interval_attrib",
-    "sample_stratified",
-    "a_salted_agg",
-    "a_normalize",
-    "q8_market_share",
-    "q2_min_cost_supp",
-    "q9_nation_profit",
-    "q12_ship_delay",
-    "q13_order_distribution",
-    "q20_qualified_suppliers",
-    "text_bm25",
-    "text_inverted",
-    "text_bpe_merges",
-    "a_bootstrap_ci",
-    "q_ks_sources",
-    "q_mannwhitney_sources",
-    "q_chi2_source_lang",
-    "q_psi_sources",
-    "text_decontaminate",
-    "q_scd2_customers",
-    "q_pit_orders",
-    "q_snapshot_diff",
-    "q_pagerank_weighted",
-    "q_bitext_margin",
-    "q_conformal_coverage",
-    "q_mutual_info",
-    "q_quantile_normalize",
-    "a_theilsen_trend",
-    # (d) r9 fills — shared-helper families
-    "sample_weighted",
-    "sample_domain_cap",
-]
-
-
-# The r14 window — the EIGHTH rotation. Head: the one query with no
-# driver hash ever (dedup_minhash_salted, new this round), then the
-# two certified queries whose executed code changed this round
-# (bucket_candidate_pairs gained the pluggable salt_hash and the
-# exact-integer shard count; dedup_minhash_lsh and dedup_containment
-# run through it via minhash_candidates), then the ENTIRE 41-query r9
-# cohort (the stalest certifications — five rounds old), then 6 r10
-# fills weighted by shared-helper families (sampling, text-ngram,
-# time-window gapfill). After a green run the oldest certification
-# moves to r10. Pinned in tests/test_battery_window.py.
-_DRIVER_WINDOW_R14 = [
-    # (a) never driver-certified
-    "dedup_minhash_salted",
-    "q_dp_counts",
-    # (b) changed code this round
-    "dedup_minhash_lsh",
-    "dedup_containment",
-    # (c) the r9 cohort — stalest certifications
-    "dedup_incremental",
-    "dedup_lines",
-    "dedup_span_stats",
-    "dedup_span_strip",
-    "emb_int8_quant",
-    "mixture_uniform",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_counts",
-    "q17_small_quantity",
-    "q19_discounted_revenue",
-    "q21_waiting_supplier",
-    "q22_global_sales",
-    "q4_priority_check",
-    "q7_volume_shipping",
-    "q_cohort_retention",
-    "q_dau_wau",
-    "q_domain_similarity",
-    "q_logrank_segments",
-    "q_mixing_plan",
-    "q_survival_km",
-    "q_zorder_key",
-    "sample_pareto",
-    "sim_hard_negatives",
-    "sim_neardup_lsh",
-    "sim_neardup_pairs",
-    "sim_pq_adc",
-    "sim_srp_project",
-    "text_fertility",
-    "text_index_search",
-    "text_pii",
-    "text_repetition",
-    "text_unigram_ppl",
-    "w_acf",
-    "w_cusum",
-    "w_ewma",
-    "w_lttb_downsample",
-    "w_m4_downsample",
-    "w_rolling_median",
-    # (d) r10 fills — shared-helper families
-    "split_assign",
-    "sample_cluster_cap",
-    "text_novelty",
-    "text_bigram_ppl",
-    "w_gapfill",
-]
-
-
-# Round-15 window: (a) the one never-certified query (this round's
-# dedup_simhash_salted), (b) changed-code re-checks (q_dp_counts —
-# self-delimiting noise keys; dedup_simhash — simhash_near_pairs grew
-# the salt_hash seam), (c) the ENTIRE r10 cohort (the stalest
-# certifications — five rounds old), then 11 r11 fills weighted toward
-# the dedup/text families that share helpers with this round's changed
-# module. After a green run the oldest certification moves to r11.
-# Pinned in tests/test_battery_window.py.
-_DRIVER_WINDOW_R15 = [
-    # (a) never driver-certified
-    "dedup_simhash_salted",
-    # (b) changed code this round
-    "q_dp_counts",
-    "dedup_simhash",
-    # (c) the r10 cohort — stalest certifications
-    "a_attrib_summary",
-    "a_bootstrap_by_type",
-    "a_funnel_depth",
-    "a_label_dispersion",
-    "a_quantile_transform",
-    "a_record_trend",
-    "a_robust_zscore",
-    "a_winsorize",
-    "pack_chunks",
-    "pipeline_crawl",
-    "q_ab_test",
-    "q_dataset_card",
-    "q_dataset_fingerprint",
-    "q_event_transitions",
-    "q_fuzzy_parts",
-    "q_histogram_value",
-    "q_html_extract",
-    "q_k_anonymity",
-    "q_keyness_llr",
-    "q_label_confusability",
-    "q_langid_eval",
-    "q_last_touch",
-    "q_markov_transitions",
-    "q_oov_rate",
-    "q_ppl_buckets",
-    "q_purchase_cadence",
-    "q_revenue_growth",
-    "q_rrf_fusion",
-    "q_seasonal_anomaly",
-    "q_session_sequences",
-    "q_streaks",
-    "q_type_entropy_daily",
-    "q_url_canonical",
-    "q_weighted_median",
-    "q_zipf_fit",
-    "w_rolling_time",
-    # (d) r11 fills — dedup/text families sharing this round's module
-    "dedup_exact",
-    "dedup_norm_hash",
-    "dedup_ngram_jaccard",
-    "dedup_clusters",
-    "dedup_minhash_sig",
-    "text_tokens",
-    "text_langid",
-    "text_quality",
-    "text_fingerprint",
-    "w_tumbling",
-    "w_sessionize",
-]
-
-
-_DRIVER_WINDOW_R16 = [
-    # (a) never driver-certified — the r16 addition
-    "dedup_minhash_staged",
-    # (b) changed code this round: NONE of the 218 previously
-    # registered queries' code paths changed in r16 (near_dup_pairs_
-    # staged gained unpersists + sig_store and is used only by the new
-    # query above; stats.dp_budget and compat.Selector are not in any
-    # query path; bench.py is not correctness)
-    # (c) the r11 cohort — stalest certifications (VERDICT r15 #1)
-    "a_label_centroids",
-    "a_quadratic_trend",
-    "decontaminate",
-    "dedup_ingest_pipeline",
-    "mixture_temp",
-    "q1_pricing_summary",
-    "q_assoc_brands",
-    "q_eval_slices",
-    "q_histogram_depth",
-    "q_json_events",
-    "q_sigidx_probe",
-    "q_string_funcs",
-    "q_txlog_merge",
-    "q_txlog_orders",
-    "q_txlog_zorder",
-    "q_type_crosscorr",
-    "sample_domain_cap_weighted",
-    "sim_ivf_ann",
-    "sim_ivf_knn_batch",
-    "sim_knn_join",
-    "sim_lsh_ann",
-    "sim_semantic_dedup",
-    "sim_topk_cosine",
-    "text_bpe_tokens",
-    "text_chunks",
-    "text_collocations",
-    "text_gopher",
-    # (d) r12 fills to 50 — first 22 of the 42-query r12 cohort in
-    # alphabetical order (deterministic, auditable rule; the remaining
-    # 20 form the r17 staleness floor)
-    "a_detect_error",
-    "a_out_of_tube",
-    "a_standardize",
-    "a_user_summary",
-    "a_winsorize_events",
-    "j_highlight",
-    "j_slice_left",
-    "multimodal_features",
-    "pipeline_end_to_end",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "q_anti_parts",
-    "q_bloom_join",
-    "q_cube_orders",
-    "q_distinct_parts",
-    "q_except_customers",
-    "q_gini_sources",
-    "q_kmv_overlap",
-    "q_label_propagation",
-    "q_month_revenue",
-    "q_quantiles",
-    "q_rollup_nation",
-]
-
-
-def _rotate_driver_window(window: list[str]) -> None:
-    missing = [n for n in window if n not in QUERIES]
-    if missing:
-        raise AssertionError(f"driver-window names not registered: {missing}")
-    head = set(window)
-    order = list(window) + [n for n in QUERIES if n not in head]
-    for d in (QUERIES, ORACLES):
-        snapshot = {n: d[n] for n in order if n in d}
-        d.clear()
-        d.update(snapshot)
-
-
-_rotate_driver_window(_DRIVER_WINDOW_R16)
+# A few oracles are assigned below their query (their SQL builder is
+# defined further down); put ORACLES back in registration order.
+_by_name = dict(ORACLES)
+ORACLES.clear()
+ORACLES.update({n: _by_name.pop(n) for n in QUERIES if n in _by_name})
+ORACLES.update(_by_name)
+del _by_name

@@ -251,7 +251,11 @@ class SignalSet:
 
         Path-backed sets use dynamic partition overwrite — only the
         written record's partition is replaced, an O(record) write even
-        on a 100 TB set. In-memory sets rebuild the union lazily.
+        on a 100 TB set; a record carrying a channel the store lacks
+        raises ``OpsetError`` rather than losing that channel. In-memory
+        sets rebuild the union lazily. The returned set's record list is
+        this set's plus ``name``, so it costs no scan when this set's
+        list is known.
         """
         pd = _pandas()
         spark = self.df.sparkSession
@@ -275,9 +279,15 @@ class SignalSet:
             if "seq" not in new.columns:
                 w = Window.partitionBy("record_id").orderBy(F.monotonically_increasing_id())
                 new = new.withColumn("seq", F.row_number().over(w) - F.lit(1))
+        records = sorted({*self.records, name})
         if self.path:
-            # align to existing schema (missing channels -> null)
             existing = set(self.df.columns)
+            extra = [c for c in new.columns if c not in existing]
+            if extra:
+                raise OpsetError(
+                    self.path, f"record {name!r} has channels the store lacks: {extra}"
+                )
+            # align to existing schema (missing channels -> null)
             for c in existing - set(new.columns):
                 new = new.withColumn(c, F.lit(None).cast(self.df.schema[c].dataType))
             # per-write option (not session conf): with Spark's default
@@ -288,13 +298,15 @@ class SignalSet:
                 "partitionOverwriteMode", "dynamic"
             ).partitionBy("record_id").mode("overwrite").parquet(self.path)
             out = SignalSet.load(spark, self.path, phase=self.phase)
+            out._records = records
         else:
             kept = self.df.filter(F.col("record_id") != name)
             out = SignalSet(
                 kept.unionByName(new, allowMissingColumns=True),
                 phase=self.phase,
+                records=records,
             )
-        out.sigpos = out.records.index(name)
+        out.sigpos = records.index(name)
         out.colname = get_colname(out.channels, self.colname)
         return out
 

@@ -325,7 +325,6 @@ def minhash_candidates(
     bands: int = 8,
     rows: int = 4,
     max_bucket_size: int = 100,
-    materialize: str | None = "persist",
     precap: bool = False,
     hot_bucket: str = "drop",
     salt_hash=None,
@@ -338,9 +337,7 @@ def minhash_candidates(
     Probability a pair with Jaccard s collides: 1-(1-s^rows)^bands.
     ``hot_bucket="salt"`` shard-splits over-cap buckets instead of
     dropping them (partial recall on low-entropy corpora — the salt
-    hash includes the band, so shard assignment re-rolls per band).
-    ``materialize`` is unused here (the banded frame is consumed once)
-    and kept for signature compatibility."""
+    hash includes the band, so shard assignment re-rolls per band)."""
     banded = sig.select(
         F.col(id_col).alias("__id"),
         F.posexplode(_band_hash_array(bands, rows)).alias("band", "bh"),
@@ -648,7 +645,6 @@ def near_dup_pairs(
         bands=bands,
         rows=rows,
         max_bucket_size=max_bucket_size,
-        materialize=materialize,
         hot_bucket=hot_bucket,
     ).select(F.col("id_a"), F.col("id_b"))
     return ngram_jaccard_pairs(
@@ -680,7 +676,7 @@ def near_dup_pairs_staged(
 ) -> DataFrame:
     """:func:`near_dup_pairs` executed as SEQUENTIAL bounded-memory
     passes — the single-node (or per-executor-group) form of the
-    measured 100 TB recipe (SCALE.md r15 probes):
+    measured 100 TB recipe (SCALE.md rule 31):
 
     1. shingle arrays + signature table built once and persisted;
     2. the banded bucket aggregation runs as ``band_groups``

@@ -681,7 +681,7 @@ def with_exact_ntiles(
     :func:`release` on the result frees all the slim checkpoints at
     once.
 
-    HONEST COST NOTE (measured, SCALE.md round 12): at entity counts
+    HONEST COST NOTE (measured, SCALE.md rule 25): at entity counts
     where per-job scheduling dominates (~15k rows, sf0.1), this is NOT
     faster than the chain — both pay ~3 jobs per spec, and the extra
     reassembly joins make it measurably slower (3.7 s vs 3.0 s for the

@@ -24,7 +24,7 @@ on compaction — which buys three things:
   (``txlog.tx_added_files``). Exactly-once guarantees live in the
   CORPUS table alone; the index is reconstructible at any time.
 
-Scale honesty (measured in SCALE.md): file pruning wins when probe
+Scale honesty (measured in SCALE.md rule 28): file pruning wins when probe
 keys are few relative to file count — a single-doc probe (``bands``
 keys) touches ≤ bands files however large the index, but a 100k-doc
 bulk batch carries ~1.6M effectively-random bucket hashes and touches

@@ -653,7 +653,7 @@ def semantic_dedup_blocked(
     ``mapInPandas`` computes the full cosine submatrix with a numpy
     matmul. Each vector crosses the Python boundary once per PARTNER
     BLOCK instead of once per candidate pair — a factor ``block_size``
-    less serialization than a per-pair UDF (measured loser, SCALE.md)
+    less serialization than a per-pair UDF (measured loser, SCALE.md rule 30)
     while keeping the O(n²/k) arithmetic in BLAS.
 
     Same keep semantics as semantic_dedup (lowest id survives). Float
@@ -834,7 +834,7 @@ def pq_encode(
     # each subspace's argmin is ONE SQL string parsed JVM-side: the
     # Column-by-Column build (m·ksub·sub literals through py4j) cost
     # ~4 s of driver time per query construction — the savgol lesson
-    # (SCALE.md round-5 root cause) applied here. `{v!r}D` literals
+    # (SCALE.md rule 27) applied here. `{v!r}D` literals
     # round-trip doubles exactly; x1 + x2 + ... left-assoc matches the
     # previous fold's (0.0 + x1) + x2 bit-for-bit.
     out = df.withColumn("__v", F.col(vec_col).cast("array<double>"))

@@ -1,450 +1,32 @@
-"""Pin the driver-audited query window and the output-encoding lint.
+"""Pin the battery registry and its output-encoding lint.
 
-The per-round correctness driver value-hashes exactly the FIRST 50
-entries of queries() in iteration order (verified round 5:
-CORRECTNESS_r05.json keys == registration-order prefix). Rounds 4-7
-audited the same first-50 slice (all 50 hash-green in
-CORRECTNESS_r07.json); round 8 rotates a DISJOINT second slice into
-the window (battery._rotate_driver_window) so the long tail gets
-independent driver confirmation — VERDICT r7 item 1. Both windows are
-pinned here: the r8 window as the current first-50, the r7 window for
-the disjointness guarantee. Change only deliberately, after a full
-local oracle sweep.
+``battery.QUERIES`` and ``battery.ORACLES`` hold every registered
+query in source order; ``tools/oracle_check.py`` runs each one against
+its DuckDB oracle.
 """
 
 from __future__ import annotations
 
 from tabata_spark.battery import ORACLES, QUERIES
 
-# The r4-r7 driver-audited window (CORRECTNESS_r07.json key order) —
-# SURVEY §2's relational/window/signal core plus the
-# dedup/similarity/text headliners. All 50 driver-hash-green in r7.
-R7_WINDOW = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "q_cube_orders",
-    "q_rollup_nation",
-    "q_distinct_parts",
-    "q_topk_orders",
-    "q_setops_customers",
-    "q_except_customers",
-    "q_month_revenue",
-    "q_json_events",
-    "w_positions",
-    "w_running",
-    "a_user_summary",
-    "a_standardize",
-    "a_out_of_tube",
-    "j_highlight",
-    "j_slice_left",
-    "w_segment_ramp",
-    "dedup_exact",
-    "text_tokens",
-    "sim_topk_cosine",
-    "text_chunks",
-    "sim_knn_join",
-    "sim_ivf_knn_batch",
-    "q_anti_parts",
-    "q_semi_customers",
-    "w_tumbling",
-    "w_sliding",
-    "w_sessionize",
-    "w_savgol_interior",
-    "dedup_norm_hash",
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "dedup_clusters",
-    "dedup_minhash_lsh",
-    "dedup_minhash_sig",
-    "dedup_simhash",
-    "text_langid",
-    "text_quality",
-    "text_gopher",
-    "sample_dsir",
-    "text_fingerprint",
-    "multimodal_features",
-    "sim_lsh_ann",
-    "sim_ivf_ann",
-    "sim_semantic_dedup",
-    "w_indicator_full",
-    "w_rev_indicator",
-    "a_detect_error",
-]
-
-# The r8 rotated window (battery._DRIVER_WINDOW_R8): txlog, sketches/
-# KMV, Bloom join, graph, drift/eval stats, bitext, SCD2/PIT/CDC,
-# as-of joins, TPC-H long tail. All 50 driver-hash-green in r8.
-R8_WINDOW = [
-    "q6_forecast_revenue",
-    "q18_large_orders",
-    "q2_min_cost_supp",
-    "q8_market_share",
-    "q9_nation_profit",
-    "q12_ship_delay",
-    "q13_order_distribution",
-    "q20_qualified_suppliers",
-    "q_pivot_orders",
-    "q_grouping_sets",
-    "q_quantiles",
-    "q_corr_stats",
-    "q_window_rank",
-    "a_salted_agg",
-    "a_normalize",
-    "j_asof_purchase",
-    "j_interval_attrib",
-    "q_txlog_orders",
-    "q_txlog_merge",
-    "q_kmv_overlap",
-    "q_bloom_join",
-    "sketch_cms_tokens",
-    "sketch_bloom_customers",
-    "sketch_dd_quantiles",
-    "sketch_join_cardinality",
-    "q_pagerank",
-    "q_pagerank_weighted",
-    "q_shortest_paths",
-    "q_label_propagation",
-    "q_triangles",
-    "q_chi2_source_lang",
-    "q_psi_sources",
-    "q_ks_sources",
-    "q_mannwhitney_sources",
-    "q_gini_sources",
-    "q_mutual_info",
-    "q_conformal_coverage",
-    "q_quantile_normalize",
-    "a_theilsen_trend",
-    "a_bootstrap_ci",
-    "q_bitext_margin",
-    "q_scd2_customers",
-    "q_pit_orders",
-    "q_snapshot_diff",
-    "text_bm25",
-    "text_inverted",
-    "text_decontaminate",
-    "text_bpe_merges",
-    "sample_stratified",
-    "pipeline_end_to_end",
-]
-
-# The r9 rotated window (battery._DRIVER_WINDOW_R9): the third
-# disjoint slice — serving/ingest headliners (continuous dedup ingest,
-# signature-index probe, Z-order), assoc/k-core/survival/RFM/Lorenz,
-# PQ-ADC + near-dup serving, dedup/text/sampling tails, the
-# time-series window tail, and the last TPC-H shapes. 49/50 were
-# first-time checks; sim_neardup_pairs repeated r1/r2 (VERDICT r9
-# "what's wrong" item 1) — the r10 window is therefore diffed against
-# the union of ALL prior CORRECTNESS artifacts, not prior windows.
-R9_WINDOW = [
-    "dedup_ingest_pipeline",
-    "q_sigidx_probe",
-    "q_txlog_zorder",
-    "q_zorder_key",
-    "q_assoc_brands",
-    "q_kcore_parts",
-    "q_survival_km",
-    "q_logrank_segments",
-    "q_rfm_segments",
-    "q_lorenz_customers",
-    "sim_pq_adc",
-    "sim_neardup_lsh",
-    "sim_neardup_pairs",
-    "sim_hard_negatives",
-    "sim_srp_project",
-    "emb_int8_quant",
-    "q_domain_similarity",
-    "dedup_lines",
-    "dedup_incremental",
-    "dedup_span_stats",
-    "dedup_span_strip",
-    "text_pii",
-    "text_index_search",
-    "text_repetition",
-    "text_fertility",
-    "text_unigram_ppl",
-    "sample_domain_cap",
-    "sample_weighted",
-    "sample_pareto",
-    "mixture_uniform",
-    "q_mixing_plan",
-    "w_cusum",
-    "w_ewma",
-    "w_acf",
-    "w_rolling_median",
-    "w_m4_downsample",
-    "w_lttb_downsample",
-    "q_cohort_retention",
-    "q_dau_wau",
-    "q4_priority_check",
-    "q7_volume_shipping",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_counts",
-    "q17_small_quantity",
-    "q19_discounted_revenue",
-    "q21_waiting_supplier",
-    "q22_global_sales",
-]
-
-# The r10 rotated window (battery._DRIVER_WINDOW_R10): the fourth
-# slice — the a_* analytics tail, packing/splitting/vocab,
-# event-sequence analytics, corpus-statistic fits, text long tail,
-# dataset QA reports, crawl pipeline, gap-fill/rolling-time windows.
-# Every slot diffed against the union of ALL prior CORRECTNESS
-# artifacts (r1-r9) so no slot repeats a prior driver hash.
-R10_WINDOW = [
-    "a_attrib_summary",
-    "a_winsorize",
-    "a_quantile_transform",
-    "a_funnel_depth",
-    "a_label_centroids",
-    "a_bootstrap_by_type",
-    "a_robust_zscore",
-    "a_label_dispersion",
-    "a_conversion_latency",
-    "a_record_trend",
-    "pack_chunks",
-    "pack_length_batches",
-    "split_assign",
-    "vocab_topk",
-    "sample_cluster_cap",
-    "quality_topfrac",
-    "q_event_transitions",
-    "q_session_sequences",
-    "q_last_touch",
-    "q_streaks",
-    "q_markov_transitions",
-    "q_purchase_cadence",
-    "q_type_entropy_daily",
-    "q_revenue_growth",
-    "q_seasonal_anomaly",
-    "q_ab_test",
-    "q_heaps_fit",
-    "q_zipf_fit",
-    "q_keyness_llr",
-    "q_skew_report",
-    "q_weighted_median",
-    "q_histogram_value",
-    "q_oov_rate",
-    "q_ppl_buckets",
-    "text_collocations",
-    "text_bigram_ppl",
-    "text_novelty",
-    "q_langid_eval",
-    "q_label_confusability",
-    "q_rrf_fusion",
-    "q_fuzzy_parts",
-    "q_dataset_card",
-    "q_dataset_fingerprint",
-    "q_k_anonymity",
-    "q_eval_slices",
-    "q_url_canonical",
-    "q_html_extract",
-    "pipeline_crawl",
-    "w_gapfill",
-    "w_rolling_time",
-]
-
-
-# The r11 window — the FIFTH rotation, closing the ledger. Composed of
-# (a) ALL queries never hash-greened by any prior round (the 8
-# deliberate deferrals + the two r10 reds, fixed this round), (b) every
-# query whose code changed after its latest green hash (ranking-module
-# rewrite, k-core/assoc gates, txlog log-store seam), and (c) the 26
-# stalest certifications (r2/r7 cohort). Unlike windows 2-4 it
-# deliberately REPEATS prior greens — the invariants below check the
-# never-certified coverage and the changed-code re-checks instead of
-# disjointness.
-R11_WINDOW = [
-    "q_eval_slices",
-    "a_label_centroids",
-    "a_quadratic_trend",
-    "a_winsorize_events",
-    "decontaminate",
-    "mixture_temp",
-    "q_histogram_depth",
-    "q_type_crosscorr",
-    "sample_domain_cap_weighted",
-    "text_bpe_tokens",
-    "a_conversion_latency",
-    "q_rfm_segments",
-    "q_lorenz_customers",
-    "q_heaps_fit",
-    "q_skew_report",
-    "pack_length_batches",
-    "q_kcore_parts",
-    "q_assoc_brands",
-    "text_collocations",
-    "q_txlog_orders",
-    "q_txlog_merge",
-    "q_txlog_zorder",
-    "dedup_ingest_pipeline",
-    "q_sigidx_probe",
-    "q_string_funcs",
-    "dedup_exact",
-    "dedup_norm_hash",
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "dedup_clusters",
-    "dedup_minhash_sig",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "sim_topk_cosine",
-    "sim_knn_join",
-    "sim_lsh_ann",
-    "sim_ivf_ann",
-    "sim_ivf_knn_batch",
-    "sim_semantic_dedup",
-    "text_langid",
-    "text_quality",
-    "text_gopher",
-    "text_tokens",
-    "text_fingerprint",
-    "text_chunks",
-    "multimodal_features",
-    "w_tumbling",
-    "w_sessionize",
-    "q1_pricing_summary",
-    "q_json_events",
-]
-
-
-def _prior_driver_artifacts(max_round):
-    """All committed CORRECTNESS_r*.json at or below ``max_round`` —
-    globbed open-endedly and filtered by parsed round number, so a
-    clone of this helper for r12+ automatically includes r11 and later
-    artifacts (the r10 ADVICE: a CORRECTNESS_r0* glob silently
-    excluded double-digit rounds)."""
-    import glob
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = []
-    for f in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", f)
-        if m and int(m.group(1)) <= max_round:
-            out.append(f)
-    return out
-
-
-def _hash_green_union(files):
-    import json
-
-    green: set[str] = set()
-    for f in files:
-        with open(f) as fh:
-            for name, res in json.load(fh).items():
-                if isinstance(res, dict) and res.get("hash_match"):
-                    green.add(name)
-    return green
-
-
-def test_first_50_registration_order_is_pinned():
-    from tabata_spark.battery import _DRIVER_WINDOW_R16
-
-    assert list(QUERIES)[:50] == _DRIVER_WINDOW_R16 == R16_WINDOW
-
-
-def test_historical_windows_are_mutually_disjoint():
-    windows = [R7_WINDOW, R8_WINDOW, R9_WINDOW, R10_WINDOW]
-    assert all(len(w) == 50 for w in windows)
-    for i, a in enumerate(windows):
-        for b in windows[i + 1 :]:
-            assert not set(a) & set(b)
-
-
-def test_r10_window_was_never_before_checked():
-    # Historical pin (VERDICT r9 item 1): every r10 slot was a
-    # first-time hash against the union of the r1-r9 artifacts.
-    files = _prior_driver_artifacts(9)
-    assert len(files) >= 9, "expected the committed r1-r9 artifacts"
-    import json
-
-    checked: set[str] = set()
-    for f in files:
-        with open(f) as fh:
-            checked |= set(json.load(fh).keys())
-    repeats = [n for n in R10_WINDOW if n in checked]
-    assert repeats == [], f"window repeats prior driver hashes: {repeats}"
-
-
-def test_r11_window_covers_every_never_certified_query():
-    # The ledger-closing invariant: after this window runs green, every
-    # registered query has a driver hash. All queries that have never
-    # hash-greened in ANY committed artifact (r1-r10) must be in the
-    # window — and they must lead it, so a driver that audits fewer
-    # slots still hits them first.
-    files = _prior_driver_artifacts(10)
-    assert len(files) >= 10, "expected the committed r1-r10 artifacts"
-    green = _hash_green_union(files)
-    added_after_r11 = {  # r12+ additions are
-        "q_lang_length_deciles",
-        "q_good_turing",
-        "q_ttr_sources",
-        "q_emb_isotropy",
-        "q_trimmed_mean_events",
-        "q_dedup_keep_best",
-        "dedup_minhash_salted",  # r14
-        "q_dp_counts",  # r14
-        "dedup_simhash_salted",  # r15
-        "dedup_minhash_staged",  # r16
-    }
-    never = [  # outside this HISTORICAL invariant's universe
-        n for n in QUERIES if n not in green and n not in added_after_r11
-    ]
-    missing = [n for n in never if n not in R11_WINDOW]
-    assert missing == [], f"never-certified queries left out: {missing}"
-    head = R11_WINDOW[: len(never)]
-    assert sorted(head) == sorted(never), (
-        "the never-certified set must occupy the window head"
-    )
-
-
-def test_r11_window_recheks_every_changed_code_query():
-    # Every query whose implementation changed in round 11 after its
-    # latest green hash must be re-audited: the six exact-rank/ntile/
-    # cumsum consumers (ranking.py rewritten lazy), k-core + assoc
-    # gate consumers, and the txlog/sigidx log-store consumers.
-    changed = [
-        "a_conversion_latency",
-        "q_rfm_segments",
-        "q_lorenz_customers",
-        "q_heaps_fit",
-        "q_skew_report",
-        "pack_length_batches",
-        "q_kcore_parts",
-        "q_assoc_brands",
-        "q_txlog_orders",
-        "q_txlog_merge",
-        "q_txlog_zorder",
-        "dedup_ingest_pipeline",
-        "q_sigidx_probe",
-    ]
-    left_out = [n for n in changed if n not in R11_WINDOW]
-    assert left_out == [], f"changed-code queries not re-audited: {left_out}"
-
 
 def test_rotation_preserves_the_full_battery():
-    # Rotation must reorder, never drop/duplicate, and ORACLES must
-    # stay aligned with QUERIES.
+    # The registry must never drop or duplicate a query, and ORACLES
+    # must stay aligned with QUERIES.
     assert len(QUERIES) == len(set(QUERIES)) == 219
     assert list(ORACLES) == [n for n in QUERIES if n in ORACLES]
 
 
 def test_every_query_has_an_oracle():
-    # Oracle-less queries get only a weaker rows-only driver check;
-    # currently every battery query carries a full value oracle.
+    # Oracle-less queries would get only a rows-only check; every
+    # battery query carries a full value oracle.
     assert [n for n in QUERIES if n not in ORACLES] == []
 
 
 def test_register_lint_rejects_decimal_outputs(spark):
     # The register() wrapper must refuse DECIMAL output columns (the
-    # driver hashes doubles/ints reliably, decimals unreliably —
-    # VERDICT r5). Build a one-off registered query that emits decimal
+    # value hasher canonicalizes doubles/ints reliably, decimals
+    # unreliably). Build a one-off registered query that emits decimal
     # and check the lint fires.
     import pytest
 
@@ -466,587 +48,3 @@ def test_register_lint_rejects_decimal_outputs(spark):
             Q[name](spark, "/root/testdata/sf0.001")
     finally:
         Q.pop(name, None)
-
-
-# The r12 driver window: staleness-only rotation (no reds to chase —
-# the ledger closed 209/209 in r11). Changed-code first, then the
-# whole r7 cohort (the stalest certifications), then r8 fills
-# weighted by shared-helper churn.
-R12_WINDOW = [
-    "q_rfm_segments",
-    "q_lorenz_customers",
-    "q_heaps_fit",
-    "q_skew_report",
-    "a_conversion_latency",
-    "pack_length_batches",
-    "q_kcore_parts",
-    "a_winsorize_events",
-    "sketch_dd_quantiles",
-    "quality_topfrac",
-    "multimodal_features",
-    "vocab_topk",
-    "a_detect_error",
-    "a_out_of_tube",
-    "a_standardize",
-    "a_user_summary",
-    "j_highlight",
-    "j_slice_left",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "q_anti_parts",
-    "q_cube_orders",
-    "q_distinct_parts",
-    "q_except_customers",
-    "q_month_revenue",
-    "q_rollup_nation",
-    "q_semi_customers",
-    "q_setops_customers",
-    "q_topk_orders",
-    "sample_dsir",
-    "w_indicator_full",
-    "w_positions",
-    "w_rev_indicator",
-    "w_running",
-    "w_savgol_interior",
-    "w_segment_ramp",
-    "w_sliding",
-    "q_bloom_join",
-    "q_kmv_overlap",
-    "sketch_cms_tokens",
-    "sketch_bloom_customers",
-    "sketch_join_cardinality",
-    "q_pagerank",
-    "q_shortest_paths",
-    "q_label_propagation",
-    "q_triangles",
-    "q_quantiles",
-    "q_window_rank",
-    "q_gini_sources",
-    "pipeline_end_to_end",
-]
-
-
-def test_r12_window_rechecks_every_changed_code_query():
-    # Every query whose implementation changed in round 12 after its
-    # latest green hash must be re-audited: the five ranking-rewrite
-    # consumers, the with_exact_ntile/k_core internals consumers, the
-    # exact_rank_of_quantile expression consumers, the PNG-codec
-    # query, and the re-registered vocab_topk.
-    changed = [
-        "q_rfm_segments",
-        "q_lorenz_customers",
-        "q_heaps_fit",
-        "q_skew_report",
-        "a_conversion_latency",
-        "pack_length_batches",
-        "q_kcore_parts",
-        "a_winsorize_events",
-        "sketch_dd_quantiles",
-        "quality_topfrac",
-        "multimodal_features",
-        "vocab_topk",
-    ]
-    left_out = [n for n in changed if n not in R12_WINDOW]
-    assert left_out == [], f"changed-code queries not re-audited: {left_out}"
-    # and they occupy the head, so a driver auditing fewer slots
-    # still re-hashes the changed code first
-    assert R12_WINDOW[: len(changed)] == changed
-
-
-def test_r12_window_rechecks_the_stalest_cohort():
-    # Staleness invariant: every slot that is NOT a changed-code
-    # re-check must come from the two oldest certification cohorts
-    # (latest green hash in r7 or r8) — deepest staleness first: the
-    # whole r7 cohort is present.
-    import json
-
-    files = _prior_driver_artifacts(11)
-    assert len(files) >= 11, "expected the committed r1-r11 artifacts"
-    latest: dict[str, int] = {}
-    for f in files:
-        import re as _re
-
-        rnd = int(_re.search(r"CORRECTNESS_r(\d+)\.json$", f).group(1))
-        with open(f) as fh:
-            for name, res in json.load(fh).items():
-                if isinstance(res, dict) and res.get("hash_match"):
-                    latest[name] = max(latest.get(name, 0), rnd)
-    r7_cohort = sorted(n for n, r in latest.items() if r == 7)
-    missing = [n for n in r7_cohort if n not in R12_WINDOW]
-    assert missing == [], f"r7-stale queries left out: {missing}"
-    changed_head = set(R12_WINDOW[:12])
-    for n in R12_WINDOW:
-        if n in changed_head:
-            continue
-        assert latest.get(n) in (7, 8), (n, latest.get(n))
-
-
-# The r13 driver window — the SEVENTH rotation: never-certified head
-# (q_lang_length_deciles — VERDICT r12 next-round #1 — plus this
-# round's four additions), then this round's changed-code re-checks,
-# then the ENTIRE 34-query r8 cohort (stalest certifications), then 4
-# r9 fills from shared-helper families.
-R13_WINDOW = [
-    "q_lang_length_deciles",
-    "q_good_turing",
-    "q_ttr_sources",
-    "q_emb_isotropy",
-    "q_trimmed_mean_events",
-    "q_dedup_keep_best",
-    "q_rfm_segments",
-    "q_lorenz_customers",
-    "q_heaps_fit",
-    "q_skew_report",
-    "a_conversion_latency",
-    "pack_length_batches",
-    "q_kcore_parts",
-    "q_pagerank",
-    "q6_forecast_revenue",
-    "q18_large_orders",
-    "q_pivot_orders",
-    "q_grouping_sets",
-    "q_corr_stats",
-    "j_asof_purchase",
-    "j_interval_attrib",
-    "sample_stratified",
-    "a_salted_agg",
-    "a_normalize",
-    "q8_market_share",
-    "q2_min_cost_supp",
-    "q9_nation_profit",
-    "q12_ship_delay",
-    "q13_order_distribution",
-    "q20_qualified_suppliers",
-    "text_bm25",
-    "text_inverted",
-    "text_bpe_merges",
-    "a_bootstrap_ci",
-    "q_ks_sources",
-    "q_mannwhitney_sources",
-    "q_chi2_source_lang",
-    "q_psi_sources",
-    "text_decontaminate",
-    "q_scd2_customers",
-    "q_pit_orders",
-    "q_snapshot_diff",
-    "q_pagerank_weighted",
-    "q_bitext_margin",
-    "q_conformal_coverage",
-    "q_mutual_info",
-    "q_quantile_normalize",
-    "a_theilsen_trend",
-    "sample_weighted",
-    "sample_domain_cap",
-]
-
-
-def test_r13_window_leads_with_every_never_certified_query():
-    # After this window runs green the cumulative ledger is 215/215.
-    # Every query with no hash-green row in ANY committed artifact
-    # (r1-r12) must lead the window, so a driver auditing fewer slots
-    # still hits them first.
-    files = _prior_driver_artifacts(12)
-    assert len(files) >= 12, "expected the committed r1-r12 artifacts"
-    green = _hash_green_union(files)
-    added_after_r13 = {
-        "dedup_minhash_salted", "q_dp_counts",  # r14
-        "dedup_simhash_salted",  # r15
-        "dedup_minhash_staged",  # r16
-    }
-    never = [
-        n for n in QUERIES if n not in green and n not in added_after_r13
-    ]
-    assert sorted(never) == sorted(R13_WINDOW[: len(never)]), (
-        "never-certified queries must occupy the window head",
-        never,
-    )
-
-
-def test_r13_window_rechecks_every_changed_code_query():
-    # Round-13 changed code: the ranking module (fold take-guard,
-    # grouped-ntile cardinality guard, context-keyed release registry)
-    # and its materializing/fold consumers; k_core (reliable= +
-    # durable pins); q_skew_report (empty-orders guard).
-    changed = [
-        "q_rfm_segments",
-        "q_lorenz_customers",
-        "q_heaps_fit",
-        "q_skew_report",
-        "a_conversion_latency",
-        "pack_length_batches",
-        "q_kcore_parts",
-        "q_pagerank",
-    ]
-    left_out = [n for n in changed if n not in R13_WINDOW]
-    assert left_out == [], f"changed-code queries not re-audited: {left_out}"
-    assert R13_WINDOW[6 : 6 + len(changed)] == changed
-
-
-def test_r13_window_rechecks_the_r8_cohort():
-    # Staleness invariant: every slot that is neither never-certified
-    # nor a changed-code re-check must come from the two oldest
-    # cohorts (latest green in r8 or r9), and the ENTIRE r8 cohort is
-    # present — after r13 the oldest certification moves to r9.
-    import json
-    import re as _re
-
-    files = _prior_driver_artifacts(12)
-    latest: dict[str, int] = {}
-    for f in files:
-        rnd = int(_re.search(r"CORRECTNESS_r(\d+)\.json$", f).group(1))
-        with open(f) as fh:
-            for name, res in json.load(fh).items():
-                if isinstance(res, dict) and res.get("hash_match"):
-                    latest[name] = max(latest.get(name, 0), rnd)
-    r8_cohort = sorted(n for n, r in latest.items() if r == 8)
-    missing = [n for n in r8_cohort if n not in R13_WINDOW]
-    assert missing == [], f"r8-stale queries left out: {missing}"
-    head = set(R13_WINDOW[:14])
-    for n in R13_WINDOW:
-        if n in head:
-            continue
-        assert latest.get(n) in (8, 9), (n, latest.get(n))
-
-
-R14_WINDOW = [
-    # (a) never driver-certified (new this round)
-    "dedup_minhash_salted",
-    "q_dp_counts",
-    # (b) changed code this round (bucket_candidate_pairs: salt_hash +
-    # exact-integer shard count; these two run through it)
-    "dedup_minhash_lsh",
-    "dedup_containment",
-    # (c) the entire r9 cohort
-    "dedup_incremental",
-    "dedup_lines",
-    "dedup_span_stats",
-    "dedup_span_strip",
-    "emb_int8_quant",
-    "mixture_uniform",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_counts",
-    "q17_small_quantity",
-    "q19_discounted_revenue",
-    "q21_waiting_supplier",
-    "q22_global_sales",
-    "q4_priority_check",
-    "q7_volume_shipping",
-    "q_cohort_retention",
-    "q_dau_wau",
-    "q_domain_similarity",
-    "q_logrank_segments",
-    "q_mixing_plan",
-    "q_survival_km",
-    "q_zorder_key",
-    "sample_pareto",
-    "sim_hard_negatives",
-    "sim_neardup_lsh",
-    "sim_neardup_pairs",
-    "sim_pq_adc",
-    "sim_srp_project",
-    "text_fertility",
-    "text_index_search",
-    "text_pii",
-    "text_repetition",
-    "text_unigram_ppl",
-    "w_acf",
-    "w_cusum",
-    "w_ewma",
-    "w_lttb_downsample",
-    "w_m4_downsample",
-    "w_rolling_median",
-    # (d) r10 fills
-    "split_assign",
-    "sample_cluster_cap",
-    "text_novelty",
-    "text_bigram_ppl",
-    "w_gapfill",
-]
-
-
-def test_r14_window_leads_with_every_never_certified_query():
-    # Cumulative ledger was 215/215 after r13; the only never-certified
-    # query is this round's addition and it must lead the window.
-    files = _prior_driver_artifacts(13)
-    assert len(files) >= 13, "expected the committed r1-r13 artifacts"
-    green = _hash_green_union(files)
-    added_after_r14 = {
-        "dedup_simhash_salted",  # r15
-        "dedup_minhash_staged",  # r16
-    }
-    never = [
-        n for n in QUERIES if n not in green and n not in added_after_r14
-    ]
-    assert sorted(never) == sorted(R14_WINDOW[: len(never)]), (
-        "never-certified queries must occupy the window head",
-        never,
-    )
-
-
-def test_r14_window_rechecks_every_changed_code_query():
-    # Round-14 changed code: bucket_candidate_pairs (pluggable
-    # salt_hash, exact-integer ceil(2n/cap) shard count). Certified
-    # queries running through it: dedup_minhash_lsh and
-    # dedup_containment via minhash_candidates. (sim_neardup_lsh and
-    # dedup_incremental also do, and are already in the r9 cohort.)
-    changed = ["dedup_minhash_lsh", "dedup_containment"]
-    left_out = [n for n in changed if n not in R14_WINDOW]
-    assert left_out == [], f"changed-code queries not re-audited: {left_out}"
-    assert R14_WINDOW[2 : 2 + len(changed)] == changed
-
-
-def test_r14_window_rechecks_the_r9_cohort():
-    # Staleness invariant: every slot that is neither never-certified
-    # nor a changed-code re-check must come from the two oldest
-    # cohorts (latest green in r9 or r10), and the ENTIRE r9 cohort is
-    # present — after r14 the oldest certification moves to r10.
-    import json
-    import re as _re
-
-    files = _prior_driver_artifacts(13)
-    latest: dict[str, int] = {}
-    for f in files:
-        rnd = int(_re.search(r"CORRECTNESS_r(\d+)\.json$", f).group(1))
-        with open(f) as fh:
-            for name, res in json.load(fh).items():
-                if isinstance(res, dict) and res.get("hash_match"):
-                    latest[name] = max(latest.get(name, 0), rnd)
-    r9_cohort = sorted(n for n, r in latest.items() if r == 9)
-    missing = [n for n in r9_cohort if n not in R14_WINDOW]
-    assert missing == [], f"r9-stale queries left out: {missing}"
-    head = set(R14_WINDOW[:4])
-    for n in R14_WINDOW:
-        if n in head:
-            continue
-        assert latest.get(n) in (9, 10), (n, latest.get(n))
-
-
-R15_WINDOW = [
-    # (a) never driver-certified (new this round)
-    "dedup_simhash_salted",
-    # (b) changed code this round (dp_release_counts: self-delimiting
-    # noise keys; simhash_near_pairs: salt_hash seam)
-    "q_dp_counts",
-    "dedup_simhash",
-    # (c) the entire r10 cohort
-    "a_attrib_summary",
-    "a_bootstrap_by_type",
-    "a_funnel_depth",
-    "a_label_dispersion",
-    "a_quantile_transform",
-    "a_record_trend",
-    "a_robust_zscore",
-    "a_winsorize",
-    "pack_chunks",
-    "pipeline_crawl",
-    "q_ab_test",
-    "q_dataset_card",
-    "q_dataset_fingerprint",
-    "q_event_transitions",
-    "q_fuzzy_parts",
-    "q_histogram_value",
-    "q_html_extract",
-    "q_k_anonymity",
-    "q_keyness_llr",
-    "q_label_confusability",
-    "q_langid_eval",
-    "q_last_touch",
-    "q_markov_transitions",
-    "q_oov_rate",
-    "q_ppl_buckets",
-    "q_purchase_cadence",
-    "q_revenue_growth",
-    "q_rrf_fusion",
-    "q_seasonal_anomaly",
-    "q_session_sequences",
-    "q_streaks",
-    "q_type_entropy_daily",
-    "q_url_canonical",
-    "q_weighted_median",
-    "q_zipf_fit",
-    "w_rolling_time",
-    # (d) r11 fills
-    "dedup_exact",
-    "dedup_norm_hash",
-    "dedup_ngram_jaccard",
-    "dedup_clusters",
-    "dedup_minhash_sig",
-    "text_tokens",
-    "text_langid",
-    "text_quality",
-    "text_fingerprint",
-    "w_tumbling",
-    "w_sessionize",
-]
-
-
-def test_r15_window_leads_with_every_never_certified_query():
-    # Cumulative ledger was 217/217 after r14; the only never-certified
-    # query is this round's addition and it must lead the window.
-    files = _prior_driver_artifacts(14)
-    assert len(files) >= 14, "expected the committed r1-r14 artifacts"
-    green = _hash_green_union(files)
-    added_after_r15 = {"dedup_minhash_staged"}  # r16
-    never = [
-        n for n in QUERIES if n not in green and n not in added_after_r15
-    ]
-    assert sorted(never) == sorted(R15_WINDOW[: len(never)]), (
-        "never-certified queries must occupy the window head",
-        never,
-    )
-
-
-def test_r15_window_rechecks_every_changed_code_query():
-    # Round-15 changed code: dp_release_counts (self-delimiting noise
-    # key encoding — q_dp_counts' values CHANGE) and simhash_near_pairs
-    # (pluggable salt_hash; dedup_simhash runs through it on the
-    # default path).
-    changed = ["q_dp_counts", "dedup_simhash"]
-    left_out = [n for n in changed if n not in R15_WINDOW]
-    assert left_out == [], f"changed-code queries not re-audited: {left_out}"
-    assert R15_WINDOW[1 : 1 + len(changed)] == changed
-
-
-def test_r15_window_rechecks_the_r10_cohort():
-    # Staleness invariant: every slot that is neither never-certified
-    # nor a changed-code re-check must come from the two oldest
-    # cohorts (latest green in r10 or r11), and the ENTIRE r10 cohort
-    # is present — after r15 the oldest certification moves to r11.
-    import json
-    import re as _re
-
-    files = _prior_driver_artifacts(14)
-    latest: dict[str, int] = {}
-    for f in files:
-        rnd = int(_re.search(r"CORRECTNESS_r(\d+)\.json$", f).group(1))
-        with open(f) as fh:
-            for name, res in json.load(fh).items():
-                if isinstance(res, dict) and res.get("hash_match"):
-                    latest[name] = max(latest.get(name, 0), rnd)
-    r10_cohort = sorted(n for n, r in latest.items() if r == 10)
-    missing = [n for n in r10_cohort if n not in R15_WINDOW]
-    assert missing == [], f"r10-stale queries left out: {missing}"
-    head = set(R15_WINDOW[:3])
-    for n in R15_WINDOW:
-        if n in head:
-            continue
-        assert latest.get(n) in (10, 11), (n, latest.get(n))
-
-
-R16_WINDOW = [
-    # (a) never driver-certified (new this round)
-    "dedup_minhash_staged",
-    # (b) changed code this round: NONE — r16 touched only code
-    # outside every previously registered query's path (near_dup_
-    # pairs_staged, used solely by the new query above; stats.
-    # dp_budget, a pure helper no query calls; compat.Selector;
-    # bench.py)
-    # (c) the entire r11 cohort — stalest certifications
-    "a_label_centroids",
-    "a_quadratic_trend",
-    "decontaminate",
-    "dedup_ingest_pipeline",
-    "mixture_temp",
-    "q1_pricing_summary",
-    "q_assoc_brands",
-    "q_eval_slices",
-    "q_histogram_depth",
-    "q_json_events",
-    "q_sigidx_probe",
-    "q_string_funcs",
-    "q_txlog_merge",
-    "q_txlog_orders",
-    "q_txlog_zorder",
-    "q_type_crosscorr",
-    "sample_domain_cap_weighted",
-    "sim_ivf_ann",
-    "sim_ivf_knn_batch",
-    "sim_knn_join",
-    "sim_lsh_ann",
-    "sim_semantic_dedup",
-    "sim_topk_cosine",
-    "text_bpe_tokens",
-    "text_chunks",
-    "text_collocations",
-    "text_gopher",
-    # (d) r12 fills to 50 — first 22 of the 42-query r12 cohort,
-    # alphabetical (deterministic rule; the other 20 are the r17 floor)
-    "a_detect_error",
-    "a_out_of_tube",
-    "a_standardize",
-    "a_user_summary",
-    "a_winsorize_events",
-    "j_highlight",
-    "j_slice_left",
-    "multimodal_features",
-    "pipeline_end_to_end",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "q_anti_parts",
-    "q_bloom_join",
-    "q_cube_orders",
-    "q_distinct_parts",
-    "q_except_customers",
-    "q_gini_sources",
-    "q_kmv_overlap",
-    "q_label_propagation",
-    "q_month_revenue",
-    "q_quantiles",
-    "q_rollup_nation",
-]
-
-
-def test_r16_window_leads_with_every_never_certified_query():
-    # Cumulative ledger was 218/218 after r15; the only never-certified
-    # query is this round's addition and it must lead the window.
-    files = _prior_driver_artifacts(15)
-    assert len(files) >= 15, "expected the committed r1-r15 artifacts"
-    green = _hash_green_union(files)
-    never = [n for n in QUERIES if n not in green]
-    assert never == ["dedup_minhash_staged"], never
-    assert R16_WINDOW[0] == "dedup_minhash_staged"
-
-
-def test_r16_window_rechecks_the_r11_cohort():
-    # Staleness invariant (VERDICT r15 #1): the ENTIRE 27-query r11
-    # cohort is present, and every slot that is not the never-certified
-    # head comes from the two oldest cohorts (latest green r11 or r12)
-    # — after r16 the oldest certification moves to r12.
-    import json
-    import re as _re
-
-    files = _prior_driver_artifacts(15)
-    latest: dict[str, int] = {}
-    for f in files:
-        rnd = int(_re.search(r"CORRECTNESS_r(\d+)\.json$", f).group(1))
-        with open(f) as fh:
-            for name, res in json.load(fh).items():
-                if isinstance(res, dict) and res.get("hash_match"):
-                    latest[name] = max(latest.get(name, 0), rnd)
-    r11_cohort = sorted(n for n, r in latest.items() if r == 11)
-    assert len(r11_cohort) == 27, r11_cohort
-    missing = [n for n in r11_cohort if n not in R16_WINDOW]
-    assert missing == [], f"r11-stale queries left out: {missing}"
-    for n in R16_WINDOW[1:]:
-        assert latest.get(n) in (11, 12), (n, latest.get(n))
-
-
-def test_r16_r12_fills_follow_the_pinned_rule():
-    # The 22 fills are the first 22 of the r12 cohort alphabetically —
-    # a deterministic, auditable selection rule.
-    import json
-    import re as _re
-
-    files = _prior_driver_artifacts(15)
-    latest: dict[str, int] = {}
-    for f in files:
-        rnd = int(_re.search(r"CORRECTNESS_r(\d+)\.json$", f).group(1))
-        with open(f) as fh:
-            for name, res in json.load(fh).items():
-                if isinstance(res, dict) and res.get("hash_match"):
-                    latest[name] = max(latest.get(name, 0), rnd)
-    r12_cohort = sorted(n for n, r in latest.items() if r == 12)
-    assert R16_WINDOW[28:] == r12_cohort[:22]

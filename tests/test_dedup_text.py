@@ -347,7 +347,7 @@ def test_near_dup_pairs_hot_bucket_passthrough(spark):
 
 def test_near_dup_pairs_staged_matches_lazy(spark):
     """near_dup_pairs_staged is the bounded-memory sequential form of
-    near_dup_pairs (SCALE.md r15 probes): band-group candidate passes
+    near_dup_pairs (SCALE.md rule 31): band-group candidate passes
     are a partition of the one-job candidate set and verify slices a
     partition of the candidates, so the verified pair set must be
     IDENTICAL to the lazy pipeline's — across degenerate (1,1), even,

@@ -131,3 +131,88 @@ def test_put_preserves_other_partitions_under_static_conf(tmp_path, sset, flight
     assert out.records == sset.records  # no partition lost
     assert out.record(sset.records[1]).count() == 30
     assert out.record(sset.records[0]).count() == sset.record(sset.records[0]).count()
+
+
+def test_put_rejects_channel_the_store_lacks(tmp_path, sset, flights):
+    """A stored set keeps its schema: putting a record with a channel
+    the store lacks raises instead of dropping that channel, and the
+    store is left as it was."""
+    import pytest
+
+    from tabata_spark.core.signalset import OpsetError
+
+    spark = sset.df.sparkSession
+    path = str(tmp_path / "sset_alt_only")
+    stored = SignalSet(sset.df.select("record_id", "seq", "ts", "`ALT[m]`")).save(path)
+    name = sset.records[1]
+    with pytest.raises(OpsetError, match=r"TAS\[m/s\]"):
+        stored.put(flights[name][["ALT[m]", "TAS[m/s]"]], record=name)
+    again = SignalSet.load(spark, path)
+    assert again.channels == ["ALT[m]"]
+    assert again.records == sset.records
+    assert again.record(name).count() == len(flights[name])
+    # the in-memory branch keeps the extra channel
+    mem = SignalSet(stored.df).put(flights[name][["ALT[m]", "TAS[m/s]"]], record=name)
+    assert "TAS[m/s]" in mem.channels
+
+
+def _jobs_run_by(spark, fn):
+    """Spark job ids started while ``fn()`` runs. A marker job run
+    afterwards in a second group must show up first: status events
+    arrive in order, so every earlier job has been seen by then."""
+    import time
+
+    sc = spark.sparkContext
+    group = f"probe-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "probe", False)
+    try:
+        fn()
+        sc.setJobGroup(group + "-marker", "marker", False)
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + "-marker"):
+        assert time.monotonic() < deadline, "marker job never reported"
+        time.sleep(0.05)
+    return list(tracker.getJobIdsForGroup(group))
+
+
+def test_put_record_list_starts_no_job(tmp_path, sset, flights):
+    """``put`` on a set whose record list is known builds the new list
+    from it: in memory the upsert starts no job at all, and on a store
+    it starts only the jobs of its own write and reload — no scan of
+    the whole set for record names."""
+    spark = sset.df.sparkSession
+    name = sset.records[1]
+    pdf = flights[name].head(30)
+    assert _jobs_run_by(spark, lambda: sset.put(pdf, record=name).records) == []
+
+    stored = sset.save(str(tmp_path / "sset_records"))
+    assert stored.records == sset.records
+    twin_path = str(tmp_path / "sset_twin")
+    twin = sset.save(twin_path)
+
+    def write_and_reload():
+        frame = SignalSet.from_records(spark, {name: pdf}).df
+        frame.select(*twin.df.columns).write.option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("record_id").mode("overwrite").parquet(twin_path)
+        spark.read.parquet(twin_path)
+
+    own = _jobs_run_by(spark, write_and_reload)
+    assert own != []
+    assert len(_jobs_run_by(spark, lambda: stored.put(pdf, record=name).records)) == len(own)
+
+    for base in (sset, stored):
+        upd = base.put(pdf, record=name)
+        assert upd.records == sset.records
+        assert _jobs_run_by(spark, lambda: upd.records) == []
+        new = upd.put(flights[sset.records[0]].head(20), record="record_10")
+        assert new.records == sorted([*sset.records, "record_10"])
+        assert new.sigpos == new.records.index("record_10")
+        assert new.record("record_10").count() == 20
+    # the positive control: an unknown record list costs a job
+    fresh = SignalSet.load(spark, stored.path)
+    assert _jobs_run_by(spark, lambda: fresh.records) != []

@@ -662,7 +662,7 @@ def test_read_values_large_list_uses_broadcast_join_and_matches(
 ):
     # >64 probe values switch tx_read_values from a literal IN filter
     # to a broadcast semi-join (the 16k-value isin was a measured 2.5x
-    # regression, SCALE.md r8) — results must be identical either way,
+    # regression, SCALE.md rule 27) — results must be identical either way,
     # missing values silently absent, and file pruning still applies.
     from tabata_spark.sources.txlog import tx_files_for_values, tx_read_values
 

@@ -54,13 +54,13 @@ def main():
     print("conversion-latency, pack_length_batches) gained 2-4 exchanges")
     print("each: the range shuffle plus tiny per-partition-stats jobs that")
     print("REPLACED a single-partition global window — more exchanges,")
-    print("no single-task stage (SCALE.md round-9 audit).")
+    print("no single-task stage (SCALE.md rule 23).")
     print("dedup_minhash_staged is the extreme of the lineage class: its")
     print("returned frame unions 8 PERSISTED verify slices, each printing")
     print("the full upstream candidate lineage statically (~1000 exch in")
     print("the tree); executed work is the 12 sequential EAGER passes the")
     print("staged protocol runs at call time (4 band groups + 8 verify")
-    print("slices over persisted inputs — SCALE.md r15/r16 probes), and")
+    print("slices over persisted inputs — SCALE.md rule 31), and")
     print("the post-materialization scan is cache-only.")
     print()
     print("| query | exch | bcast | py | topk | smj |")

@@ -11,7 +11,7 @@
 #      accumulation-order adversarial at 10x the driver gate's volume
 # Sweeps 4-5 need the DEFAULT 8 GiB driver (SPARK_GRAFT_DRIVER_MEM
 # unset): a 1 GiB driver at sf0.1 is PAST the exact-Jaccard verifier
-# family's documented memory floor (SCALE.md r13 boundary probe) —
+# family's documented memory floor (SCALE.md rule 32) —
 # that crash is the documented boundary, not a bug.
 #   tools/run_final_sweeps.sh [tag]    # output files /tmp/oracle_<tag>_*.txt
 set -u
