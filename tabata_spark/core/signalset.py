@@ -79,6 +79,7 @@ class SignalSet:
         phase: str | None = None,
         path: str | None = None,
         records: list[str] | None = None,
+        fmt: str = "parquet",
     ):
         missing = [c for c in ("record_id", "seq") if c not in df.columns]
         if missing:
@@ -88,7 +89,9 @@ class SignalSet:
             )
         self.df = df
         self.path = path
+        self.fmt = fmt  # the store's file format, which ``put`` writes
         self._records = records
+        self._listed = False  # df is the plain scan of the store at path
         # cursor-compat state (reference opset.py:65-72); not used by the engine
         self.sigpos = 0
         self.phase = phase
@@ -107,13 +110,15 @@ class SignalSet:
         """Open a stored signal set (reference Opset.__init__).
         ``fmt``: any Spark batch source — parquet (default) or orc
         both give columnar pruning + predicate pushdown."""
-        return cls(spark.read.format(fmt).load(path), phase=phase, path=path)
+        out = cls(spark.read.format(fmt).load(path), phase=phase, path=path, fmt=fmt)
+        out._listed = True
+        return out
 
     def save(self, path: str, mode: str = "overwrite", fmt: str = "parquet") -> "SignalSet":
         """Materialize partitioned by record_id (partition pruning for
         point-reads; record-local windows need no re-shuffle on read).
         ``fmt='orc'`` for ORC-standardized lakes — same layout, same
-        pushdown."""
+        pushdown; the returned set's ``put`` writes that format too."""
         self.df.write.partitionBy("record_id").mode(mode).format(fmt).save(path)
         spark = self.df.sparkSession
         return SignalSet.load(spark, path, phase=self.phase, fmt=fmt)
@@ -152,11 +157,35 @@ class SignalSet:
     @property
     def records(self) -> list[str]:
         """Record names, alphabetical (reference order contract,
-        opset.py:99-102)."""
+        opset.py:99-102). A loaded store reads them off the file
+        listing its scan already holds, with no Spark job; any other set
+        scans for them once."""
+        if self._records is None:
+            self._records = self._listed_records()
         if self._records is None:
             rows = self.df.select("record_id").distinct().orderBy("record_id").collect()
             self._records = [r[0] for r in rows]
         return self._records
+
+    def _listed_records(self) -> list[str] | None:
+        """The ``record_id=<name>`` directories of a loaded store's data
+        files, or None where the listing cannot tell the names: a set
+        that is not a plain store scan, a record_id not read as a
+        string, a file outside a record directory, a null record."""
+        if not self._listed or self.df.schema["record_id"].dataType != T.StringType():
+            return None
+        from urllib.parse import unquote
+
+        names = set()
+        for f in self.df.inputFiles():
+            # a file URI: percent-decode it to the directory name, which
+            # Spark wrote with its own %XX escapes of the value
+            parent = unquote(f).rsplit("/", 2)[-2] if f.count("/") >= 2 else ""
+            key, _, value = parent.partition("=")
+            if key != "record_id" or value == "__HIVE_DEFAULT_PARTITION__":
+                return None
+            names.add(unquote(value))
+        return sorted(names)
 
     def __len__(self) -> int:
         return len(self.records)
@@ -249,10 +278,11 @@ class SignalSet:
     def put(self, df: Any, record: str | None = None) -> "SignalSet":
         """Upsert one record by name (reference put(), opset.py:229-260).
 
-        Path-backed sets use dynamic partition overwrite — only the
-        written record's partition is replaced, an O(record) write even
-        on a 100 TB set; a record carrying a channel the store lacks
-        raises ``OpsetError`` rather than losing that channel. In-memory
+        Path-backed sets use dynamic partition overwrite in the store's
+        format — only the written record's partition is replaced, an
+        O(record) write even on a 100 TB set; a record carrying a
+        channel the store lacks raises ``OpsetError`` rather than losing
+        that channel. In-memory
         sets rebuild the union lazily. The returned set's record list is
         this set's plus ``name``, so it costs no scan when this set's
         list is known.
@@ -296,8 +326,8 @@ class SignalSet:
             # safe under any user-supplied SparkSession
             new.select(*self.df.columns).write.option(
                 "partitionOverwriteMode", "dynamic"
-            ).partitionBy("record_id").mode("overwrite").parquet(self.path)
-            out = SignalSet.load(spark, self.path, phase=self.phase)
+            ).partitionBy("record_id").mode("overwrite").format(self.fmt).save(self.path)
+            out = SignalSet.load(spark, self.path, phase=self.phase, fmt=self.fmt)
             out._records = records
         else:
             kept = self.df.filter(F.col("record_id") != name)

@@ -15,22 +15,23 @@ Spark-first design:
   position, instants.py:104-127 — an intentional divergence noted in
   SURVEY §7: positional keys don't survive a distributed, unordered
   world; the alphabetical record list makes the mapping bijective);
-- the indicator grid is ONE Arrow-batched ``applyInPandas`` pass per
-  epoch over the labeled records (the grid of ~240 features/variable
-  amortizes the batch transfer; each group is one record);
-- the noise-scale pass (epsilon, instants.py:269-295) is a grouped
-  aggregation: per-record std of the difference of two SG filterings,
-  then a global max per (width, order, variable);
+- ``fit`` is two grouped passes over the labelled records and nothing
+  stays cached. The first computes each record's length and its
+  noise scales (epsilon, instants.py:269-295: std of the difference
+  of two SG filterings), maxed over records on the driver. The second
+  builds each record's indicator grid and draws every tree's
+  with-replacement row sample inside the pass, from a numpy Poisson
+  generator seeded by (seed + tree, record name), so the samples do
+  not depend on partitioning; one ``toPandas`` collects them all;
 - trees are fitted on the driver, like the reference's sklearn trees:
-  each tree's with-replacement row sample of the cached grid is
-  collected in one job (``samples_percent`` of the labeled rows) and
-  grown by a small numpy CART (``_fit_tree``) that reproduces MLlib's
+  a small numpy CART (``_fit_tree``) that reproduces MLlib's
   ``DecisionTreeClassifier`` split finding, stopping and pruning; the
-  fitted tree is plain arrays;
+  fitted tree is plain arrays. A refit reuses the last sample, so no
+  job runs per tree or per refit;
 - belief/predict runs set-oriented over ALL records at once: one
   grouped ``applyInPandas`` per record recomputes the retained
   indicators, takes the tree vote, SG-derivative smooths it and
-  clips/normalizes; the per-record argmax is one ``max_by``;
+  clips/normalizes; ``predict_df`` takes the argmax in that same pass;
 - all randomness is seeded (the reference uses unseeded np.random —
   deliberate determinism divergence, SURVEY §7).
 """
@@ -38,6 +39,7 @@ Spark-first design:
 from __future__ import annotations
 
 import math
+import zlib
 from typing import NamedTuple
 
 import numpy as np
@@ -72,7 +74,7 @@ def _code_name(colname: str, l: int, d: int, s: int, forward: bool) -> str:
 def _indicator_frame_fn(idcodes, deg_poly, struct_cols):
     """Grouped-map kernel: one record in, the indicator matrix out.
 
-    Shared by make_indicators (full grid) and belief (retained codes).
+    Shared by the grid (make_indicators, fit) and belief (retained codes).
     Position features replicate instants.py:306-311; indicator columns
     replicate instants.py:319-348 including the reversed c[-1]-c form.
     """
@@ -281,9 +283,8 @@ class Selector:
         self.computed: dict[str, int] = {}
         self.idcodes: list[tuple] = []
         self.seed = seed
-        self._dsi: DataFrame | None = None
-        self._dsi_key: tuple | None = None
         self._grid_codes: list[tuple] = []
+        self._lengths: dict[str, int] = {}
         self._n_labeled_rows = 0
         self._kept_names: list[str] = []
         self._model: _Tree | None = None
@@ -318,81 +319,78 @@ class Selector:
     def estimate_epsilon(self) -> dict[tuple, float]:
         """Noise scales per (width, order, variable): the max over
         labeled records of std(SG(y) - SG(SG(y))) — reference
-        instants.py:269-295 verbatim semantics, run as one grouped
-        aggregation pass instead of a per-record Python loop.
+        instants.py:269-295 verbatim semantics. One grouped pass over
+        the labelled records, which also records each one's length in
+        ``_lengths``; the maxima over records are taken on the driver.
         """
+        labeled = self._labeled().df
+        if self.feature_params["range_width"] is None:
+            # instants.py:254-256 default width heuristic
+            shortest = labeled.groupBy("record_id").count().agg(F.min("count")).first()[0]
+            L0 = max(10, int(math.floor((shortest or 0) / 100)))
+            self.feature_params["range_width"] = range(L0, 10 * L0 + 1, L0)
         colnames = sorted(self.variables)
-        range_width = self.feature_params["range_width"]
-        max_order = self.feature_params["max_order"]
         deg = self._deg_poly
-        widths = [2 * l + 1 for l in range_width]
-
-        schema = T.StructType(
-            [
-                T.StructField("record_id", T.StringType()),
-                T.StructField("w", T.IntegerType()),
-                T.StructField("d", T.IntegerType()),
-                T.StructField("colname", T.StringType()),
-                T.StructField("r", T.DoubleType()),
-            ]
-        )
+        keys = [
+            (2 * l + 1, d, colname)
+            for colname in colnames
+            for l in self.feature_params["range_width"]
+            for d in range(self.feature_params["max_order"])
+        ]
 
         def fn(pdf):
             import pandas as pd
 
             pdf = pdf.sort_values("seq")
-            rid = pdf["record_id"].iloc[0]
-            rows = []
-            for colname in colnames:
+            r = []
+            for w, d, colname in keys:
                 y = pdf[colname].to_numpy(dtype=float)
-                for w in widths:
-                    for d in range(max_order):
-                        b = savgol_filter_np(y, w, deg, deriv=d + 1)
-                        c = savgol_filter_np(b, 2 * w + 1, deg, deriv=d + 1)
-                        rows.append((rid, w, d, colname, float(np.std(b - c))))
-            return pd.DataFrame(rows, columns=["record_id", "w", "d", "colname", "r"])
+                b = savgol_filter_np(y, w, deg, deriv=d + 1)
+                c = savgol_filter_np(b, 2 * w + 1, deg, deriv=d + 1)
+                r.append(np.std(b - c))
+            # raw float64 bytes: Arrow would turn a NaN in an array into a null
+            return pd.DataFrame(
+                {
+                    "record_id": pdf["record_id"].iloc[:1],
+                    "n": [len(pdf)],
+                    "r": [np.array(r, dtype=np.float64).tobytes()],
+                }
+            )
 
-        labeled = self._labeled().df.select("record_id", "seq", *colnames)
-        agg = (
-            labeled.groupBy("record_id")
-            .applyInPandas(fn, schema)
-            .groupBy("w", "d", "colname")
-            .agg(F.max("r").alias("eps"))
+        rows = (
+            labeled.select("record_id", "seq", *colnames)
+            .groupBy("record_id")
+            .applyInPandas(fn, "record_id string, n long, r binary")
             .collect()
         )
-        return {(r["w"], r["d"], r["colname"]): r["eps"] for r in agg}
+        self._lengths = {row["record_id"]: row["n"] for row in rows}
+        if not rows:
+            return {}
+        eps = np.max([np.frombuffer(row["r"], dtype=np.float64) for row in rows], axis=0)
+        return dict(zip(keys, eps.tolist()))
 
     # ----------------------------------------------------- make_indicators
 
-    def make_indicators(self, path: str | None = None) -> DataFrame:
-        """Materialize the indicator feature grid for labeled records
-        (reference make_indicators, instants.py:211-360).
-
-        Grid: variable × half-width × derivative-order × sigma-multiple
-        × sign, plus the reversed variant — gated by the label-position
-        quantiles Qmin<0.65 / Qmax>0.35 (instants.py:334,341). Returns
-        (and caches) the wide indicator DataFrame; writes Parquet when
-        ``path`` given (the reference's ``_I`` store)."""
+    def _grid(self) -> dict[str, tuple]:
+        """The indicator grid's codes by feature name (reference
+        make_indicators, instants.py:211-360): variable × half-width ×
+        derivative-order × sigma-multiple × sign, plus the reversed
+        variant — gated by the label-position quantiles Qmin<0.65 /
+        Qmax>0.35 (instants.py:334,341). Runs the epsilon pass."""
         if not self.selected:
             raise ValueError("nothing to learn: no selected instants")
-        colnames = sorted(self.variables)
-
-        labeled = self._labeled()
-        lengths = {r["record_id"]: r["n"] for r in labeled.record_lengths().collect()}
+        eps_map = self.estimate_epsilon()
+        lengths = self._lengths
+        missing = sorted(set(self.selected) - set(lengths))
+        if missing:
+            raise ValueError(f"labelled records not in the set: {missing}")
         Q = np.array([self.selected[k] / lengths[k] for k in sorted(self.selected)])
         qmin, qmax = Q.min(), Q.max()
-
-        if self.feature_params["range_width"] is None:
-            # instants.py:254-256 default width heuristic
-            L0 = max(10, int(math.floor(min(lengths.values()) / 100)))
-            self.feature_params["range_width"] = range(L0, 10 * L0 + 1, L0)
-
-        eps_map = self.estimate_epsilon()
 
         idcodes: dict[str, tuple] = {}
         for nm, code in zip(["LEN[pts]", "REV[pts]", "PERCENT[%]"], POSITION_CODES):
             idcodes[nm] = code
-        for colname in colnames:
+        for colname in sorted(self.variables):
             idcodes[colname] = (colname, 0, 0, 0, 0.0)
             for l in self.feature_params["range_width"]:
                 w = 2 * l + 1
@@ -416,80 +414,108 @@ class Selector:
                                     e * s,
                                     eps,
                                 )
-
-        struct_cols = ["record_id", "seq"]
-        base = labeled.df.select(*struct_cols, *colnames)
-        schema = T.StructType(
-            [base.schema[c] for c in struct_cols]
-            + [T.StructField(nm, T.DoubleType()) for nm in idcodes]
-        )
-        if self._dsi is not None:
-            # release the previous grid first: caching an identical
-            # plan would share its cache entry, and unpersisting the
-            # old frame afterwards would drop the new one's too
-            self._dsi.unpersist()
-        fn = _indicator_frame_fn(idcodes, self._deg_poly, struct_cols)
-        dsi = base.groupBy("record_id").applyInPandas(fn, schema)
-        if path:
-            dsi.write.partitionBy("record_id").mode("overwrite").parquet(path)
-            dsi = base.sparkSession.read.parquet(path)
-        else:
-            dsi = dsi.cache()
         self._n_labeled_rows = sum(lengths.values())
         self.idcodes = list(idcodes.values())
         self._grid_codes = list(idcodes.values())
-        self._dsi = dsi
-        self._dsi_key = (tuple(sorted(self.variables)), tuple(sorted(self.selected.items())))
+        return idcodes
+
+    def _grid_pass(self, idcodes: dict[str, tuple]) -> tuple:
+        """What a grouped pass over the labelled records' indicator
+        grid needs: their rows, the per-record grid kernel and the
+        grid's schema (record_id, seq, features)."""
+        colnames = sorted(self.variables)
+        features = _indicator_frame_fn(idcodes, self._deg_poly, ["record_id", "seq"])
+        base = self._labeled().df.select("record_id", "seq", *colnames)
+        schema = T.StructType(
+            [base.schema["record_id"], base.schema["seq"]]
+            + [T.StructField(nm, T.DoubleType()) for nm in idcodes]
+        )
+        return base, features, schema
+
+    def make_indicators(self, path: str | None = None) -> DataFrame:
+        """The indicator feature grid of the labelled records
+        (reference make_indicators, instants.py:211-360), uncached: one
+        grouped pass, planned here and run by the caller. Writes
+        Parquet and returns its read-back when ``path`` is given (the
+        reference's ``_I`` store)."""
+        base, features, schema = self._grid_pass(self._grid())
+        dsi = base.groupBy("record_id").applyInPandas(features, schema)
+        if path:
+            dsi.write.partitionBy("record_id").mode("overwrite").parquet(path)
+            dsi = base.sparkSession.read.parquet(path)
         return dsi
 
     # ---------------------------------------------------------------- fit
 
+    def _tree_samples(self, idcodes: dict[str, tuple], fractions: list[float]):
+        """Every tree's with-replacement row sample of the labelled
+        grid, drawn inside one grouped pass and collected by one
+        ``toPandas``: tree ``t`` repeats each row Poisson(fractions[t])
+        times, from a generator seeded by (seed + t, record name).
+        Returns the rows sorted by (tree, record_id, seq)."""
+        base, features, schema = self._grid_pass(idcodes)
+        seed = self.seed
+
+        def fn(pdf):
+            import pandas as pd
+
+            grid = features(pdf)
+            key = zlib.crc32(str(grid["record_id"].iloc[0]).encode())
+            rows = np.arange(len(grid))
+            parts = []
+            for t, fraction in enumerate(fractions):
+                rng = np.random.default_rng([(seed + t) % 2**64, key])
+                part = grid.iloc[np.repeat(rows, rng.poisson(fraction, len(grid)))]
+                parts.append(part.assign(tree=t))
+            return pd.concat(parts, ignore_index=True)
+
+        schema = T.StructType([T.StructField("tree", T.IntegerType()), *schema.fields])
+        pdf = base.groupBy("record_id").applyInPandas(fn, schema).toPandas()
+        return pdf.sort_values(["tree", "record_id", "seq"], kind="stable", ignore_index=True)
+
     def fit(self) -> "Selector":
         """Reference fit (instants.py:363-466): retry_number sampled
         trees accumulate feature importances; percentile-prune; refit
-        on kept columns until every feature is used. Each tree costs
-        one Spark job, collecting its row sample of the cached grid;
-        the tree itself is grown on the driver (:func:`_fit_tree`)."""
-        key = (tuple(sorted(self.variables)), tuple(sorted(self.selected.items())))
-        if self._dsi is None or self._dsi_key != key:
-            self.make_indicators()
-        dsi = self._dsi
-        all_codes = list(self._grid_codes)
-        feat_names = [c for c in dsi.columns if c not in ("record_id", "seq")]
+        on kept columns until every feature is used. Two Spark passes
+        in all (epsilon, then the grid with every tree's sample); the
+        trees are grown on the driver (:func:`_fit_tree`)."""
+        idcodes = self._grid()
+        feat_names = list(idcodes)
+        all_codes = list(idcodes.values())
 
         p = self.learn_params["samples_percent"]
         split_frac = self.learn_params["min_samples_split"]
         rn = self.learn_params["retry_number"]
+        # rn sampled trees, then the refits on one larger sample
+        fractions = [p] * rn + [min(0.5, p * rn)]
+        pdf = self._tree_samples(idcodes, fractions)
+        X = pdf[feat_names].to_numpy(dtype=float)
+        # instants.py:390: y = 1 - 2*(pos <= ind), here as {0, 1}
+        instant = pdf["record_id"].map(self.selected).to_numpy()
+        y = (pdf["seq"].to_numpy() > instant).astype(np.int64)
+        tree = pdf["tree"].to_numpy()
 
-        def fit_tree(fraction: float, cols: list[str], seed: int):
-            pdf = (
-                dsi.sample(withReplacement=True, fraction=fraction, seed=seed)
-                .select("record_id", "seq", *cols)
-                .toPandas()
-            )
-            # instants.py:390: y = 1 - 2*(pos <= ind), here as {0, 1}
-            instant = pdf["record_id"].map(self.selected).to_numpy()
-            y = (pdf["seq"].to_numpy() > instant).astype(np.int64)
-            n_sample = max(int(self._n_labeled_rows * fraction), 1)
+        def fit_tree(t: int, cols: list[int]):
+            rows = tree == t
+            n_sample = max(int(self._n_labeled_rows * fractions[t]), 1)
             # sklearn min_samples_split=frac gates node *splits* at
             # ceil(frac*n); here each child needs half that many rows
             min_rows = max(1, int(math.ceil(split_frac * n_sample / 2)))
-            return _fit_tree(pdf[cols].to_numpy(dtype=float), y, min_rows)
+            return _fit_tree(X[rows][:, cols], y[rows], min_rows)
 
+        every = list(range(len(feat_names)))
         fi = np.zeros(len(feat_names))
-        for k in range(rn):
-            _, fik = fit_tree(p, feat_names, self.seed + k)
-            fi += fik
+        for t in range(rn):
+            fi += fit_tree(t, every)[1]
 
         seuil = np.percentile(fi, self.learn_params["retry_percentile"])
-        keep = [i for i in range(len(feat_names)) if fi[i] > seuil]
-        p1 = min(0.5, p * rn)
+        keep = [i for i in every if fi[i] > seuil]
         while True:
             if not keep:
                 raise ValueError(
                     "the trees found no split: label more records or raise samples_percent"
                 )
-            model, fi2 = fit_tree(p1, [feat_names[i] for i in keep], self.seed + rn)
+            model, fi2 = fit_tree(rn, keep)
             if np.all(fi2 > 0):
                 break
             keep = [keep[i] for i in range(len(keep)) if fi2[i] > 0]
@@ -514,12 +540,14 @@ class Selector:
 
     # -------------------------------------------------------------- belief
 
-    def belief_frame(self, df: DataFrame | None = None) -> DataFrame:
+    def belief_frame(self, df: DataFrame | None = None, argmax: bool = False) -> DataFrame:
         """Per-row belief for every record at once (reference belief,
         instants.py:483-549, set-oriented), one grouped pass per
         record: recompute retained indicators → tree vote ±1 → SG
         first-derivative smooth → clip ≥ 0 → normalize (Z == 0 → 1).
-        Returns (record_id, seq, p)."""
+        Returns (record_id, seq, p); with ``argmax``, only each
+        record's first row of largest p as (record_id, seq), like
+        np.argmax."""
         if self._model is None:
             raise ValueError("fit() first")
         data = df if df is not None else self.sset.df
@@ -538,18 +566,15 @@ class Selector:
             vote = tree.predict(features(pdf).to_numpy(dtype=float)) * 2 - 1
             p = np.maximum(savgol_filter_np(vote, width, 2, deriv=1), 0.0)
             z = p.sum()
-            return pd.DataFrame(
-                {
-                    "record_id": pdf["record_id"].to_numpy(),
-                    "seq": pdf["seq"].to_numpy(),
-                    "p": p / (z if z != 0.0 else 1.0),
-                }
+            p = p / (z if z != 0.0 else 1.0)
+            out = pd.DataFrame(
+                {"record_id": pdf["record_id"].to_numpy(), "seq": pdf["seq"].to_numpy(), "p": p}
             )
+            return out.iloc[[int(np.argmax(p))], :2] if argmax else out
 
         base = data.select("record_id", "seq", *colnames)
-        return base.groupBy("record_id").applyInPandas(
-            fn, "record_id string, seq long, p double"
-        )
+        schema = "record_id string, seq long" + ("" if argmax else ", p double")
+        return base.groupBy("record_id").applyInPandas(fn, schema)
 
     def record_belief(self, name: str) -> DataFrame:
         """One record's belief curve, (record_id, seq, p) in seq order:
@@ -560,13 +585,11 @@ class Selector:
 
     def predict_df(self, df: DataFrame | None = None) -> DataFrame:
         """Predicted instant per record as a DataFrame — the
-        COLLECT-FREE path (instants.py:546-547,552-580): one
-        aggregation with ``max_by`` on (p, -seq), ties resolving to
-        the first row like np.argmax. At scale this is what the
-        derived-set slicers consume; nothing crosses the driver."""
-        return self.belief_frame(df).groupBy("record_id").agg(
-            F.expr("max_by(seq, struct(p, -seq))").alias("seq")
-        )
+        COLLECT-FREE path (instants.py:546-547,552-580): the belief
+        pass emits each record's argmax, ties resolving to the first
+        row like np.argmax. At scale this is what the derived-set
+        slicers consume; nothing crosses the driver."""
+        return self.belief_frame(df, argmax=True)
 
     def predict(self, df: DataFrame | None = None) -> dict[str, int]:
         """Dict form of :meth:`predict_df` (the reference's in-memory

@@ -11,25 +11,27 @@ per record are the anomaly scores (tubes.py:376-406).
 
 Spark-first design:
 
-- synthetic factors TIME/MEDIAN/CAUSAL (tubes.py:214-219,328-330) are
-  native record-window expressions (row position, exact per-record
-  median, seq-ordered first value) — computed once, reused by every
-  ensemble member;
 - train/test disjointness (tubes.py:224-227) comes from one seeded
   ``rand()`` column per iteration: train = u < p, test = p ≤ u < 2p —
   without-replacement stratification instead of the reference's
-  with-replacement choice (deterministic, one pass, no anti-join);
+  with-replacement choice (deterministic, one pass, no anti-join); the
+  synthetic factors TIME/MEDIAN/CAUSAL (tubes.py:214-219,328-330) are
+  record-window expressions there (row position, exact per-record
+  median, seq-ordered first value);
 - the whole ensemble is ONE Spark job: every iteration's train and
   test moments (count, means, centred cross-products of target and
   factors) are accumulated per partition and merged on the driver
   (Chan et al.'s pairwise update), then each regression is solved by
   least squares on the driver (minimum-norm when rank-deficient) and
   scored by its test R² = 1 − SSE/SST from the test moments;
-- each kept model is stored as plain (intercept, coefs, cols, r2), so
-  ``estimate`` is K inline linear expressions + least/greatest/avg per
-  row — pure codegen, no model.transform, no UDF;
-- ``scores`` is ONE groupBy(record_id) over all records and all
-  targets (the reference loops records in Python).
+- each kept model is stored as plain (intercept, coefs, cols, r2);
+  ``estimate_frame`` and ``scores`` run one numpy bounds kernel
+  (``_bounds_np``: the synthetic factors, K linear predictions,
+  mean/min/max, tube factor, SG-smoothed bounds) per record in one
+  grouped Arrow pass each;
+- ``scores`` is that ONE grouped pass over all records and all
+  targets (the reference loops records in Python), emitting N and the
+  out-of-tube counts per record.
 """
 
 from __future__ import annotations
@@ -39,9 +41,11 @@ import random
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tabata_spark.core.signalset import SignalSet
-from tabata_spark.operators.savgol import savgol
+# ``savgol`` stays importable from here: perfbench's tracer wraps ``tube.savgol``
+from tabata_spark.operators.savgol import savgol, savgol_filter_np  # noqa: F401
 
 SYNTH = ("TIME", "MEDIAN", "CAUSAL")
 
@@ -113,7 +117,9 @@ def _ols(train: tuple, test: tuple, sel: list[int]) -> tuple[float, np.ndarray, 
     (intercept, coefficients, r2)."""
     n, mean, M = train
     if n == 0:
-        raise ValueError("a regression drew no training rows: raise samples_percent")
+        raise ValueError(
+            "a regression drew no training rows: the set is empty or samples_percent too small"
+        )
     idx = [0, *sel]
     if np.isnan(M[np.ix_(idx, idx)]).any() or np.isnan(test[2][np.ix_(idx, idx)]).any():
         raise ValueError("a regression's sampled rows hold null or NaN values")
@@ -142,6 +148,44 @@ def _with_synthetic(df: DataFrame, target: str) -> DataFrame:
         .withColumn("MEDIAN", F.expr(f"percentile(`{target}`, 0.5)").over(frame))
         .withColumn("CAUSAL", F.first(F.col(f"`{target}`")).over(frame))
     )
+
+
+def _synthetic_np(y: np.ndarray) -> dict[str, np.ndarray]:
+    """The numpy twin of :func:`_with_synthetic` for one record's
+    target in seq order: row position, the median of its non-null
+    values, its first value."""
+    n = len(y)
+    known = y[~np.isnan(y)]
+    median = np.median(known) if len(known) else np.nan
+    return {
+        "TIME": np.arange(n, dtype=float),
+        "MEDIAN": np.full(n, median),
+        "CAUSAL": np.full(n, y[0]),
+    }
+
+
+def _bounds_np(pdf, target: str, pop: list[tuple], q: float, width: int) -> tuple:
+    """One record's tube (tubes.py:306-356), rows in seq order: the K
+    linear predictions → z/zmin/zmax = mean/min/max → scaled by the
+    tube factor ``q`` → zmin/zmax SG-smoothed when ``width`` > 0.
+    An empty population gives NaN bounds (tubes.py:318-322)."""
+    n = len(pdf)
+    if not pop:
+        nan = np.full(n, np.nan)
+        return nan, nan, nan
+    synth = _synthetic_np(pdf[target].to_numpy(dtype=float))
+    preds = np.empty((len(pop), n))
+    for j, (b0, coefs, _) in enumerate(pop):
+        preds[j] = b0
+        for c, b in coefs.items():
+            preds[j] += b * (synth[c] if c in SYNTH else pdf[c].to_numpy(dtype=float))
+    z = preds.mean(axis=0)
+    zmin = z - q * (z - preds.min(axis=0))
+    zmax = z + q * (preds.max(axis=0) - z)
+    if width > 0:
+        zmin = savgol_filter_np(zmin, width, 2)
+        zmax = savgol_filter_np(zmax, width, 2)
+    return z, zmin, zmax
 
 
 class Tube:
@@ -189,12 +233,9 @@ class Tube:
         base = _with_synthetic(self.sset.df, target).select(
             "record_id", "seq", F.col(f"`{target}`").alias("__y"),
             *[F.col(f"`{c}`").alias(c) for c in cols],
-        ).cache()  # each rand() split must see the same rows in the same order
-        try:
-            seeds = [self.seed * 1000 + i for i in range(len(draws))]
-            moments = _split_moments(base, cols, seeds, lp["samples_percent"])
-        finally:
-            base.unpersist()
+        )
+        seeds = [self.seed * 1000 + i for i in range(len(draws))]
+        moments = _split_moments(base, cols, seeds, lp["samples_percent"])
 
         pop: list[tuple] = []  # (intercept, {col: coef}, r2)
         miss = 0
@@ -215,9 +256,7 @@ class Tube:
         return pop
 
     def fit(self) -> "Tube":
-        """Fit every target (tubes.py:276-303)."""
-        if len(self.sset) == 0:
-            raise ValueError("no data")
+        """Fit every target (tubes.py:276-303), one Spark job each."""
         for target in sorted(self.variables):
             self._reg[target] = self.build_tube(target)
         return self
@@ -235,67 +274,68 @@ class Tube:
 
     # ------------------------------------------------------------ estimate
 
+    def _bounds_args(self, target: str) -> tuple:
+        """(population, tube factor, SG width or 0) of ``_bounds_np``."""
+        w = self.tube_params["filter_width"]
+        width = 2 * w + 1 if w > 0 else 0
+        return self._reg.get(target) or [], self.tube_params["tube_factor"], width
+
     def estimate_frame(self, target: str, df: DataFrame | None = None) -> DataFrame:
         """Tube bounds for every row of every record at once
-        (tubes.py:306-356): K inline linear predictions → z/zmin/zmax =
-        avg/least/greatest → scale by tube_factor → SG-smooth bounds.
+        (tubes.py:306-356), one grouped pass of :func:`_bounds_np`.
 
         Returns the input plus columns ``z, zmin, zmax``. Unknown
         target → NaN columns (tubes.py:318-322)."""
         data = df if df is not None else self.sset.df
-        pop = self._reg.get(target)
+        pop, q, width = self._bounds_args(target)
         if not pop:
             nan = F.lit(float("nan"))
             return data.withColumn("z", nan).withColumn("zmin", nan).withColumn("zmax", nan)
+        fields = {f.name: f for f in data.schema}
+        for c in ("z", "zmin", "zmax"):
+            fields[c] = T.StructField(c, T.DoubleType())
 
-        needed = sorted({c for _, coefs, _ in pop for c in coefs})
-        out = _with_synthetic(data, target) if any(c in SYNTH for c in needed) else data
+        def fn(pdf):
+            pdf = pdf.sort_values("seq", ignore_index=True)
+            z, zmin, zmax = _bounds_np(pdf, target, pop, q, width)
+            return pdf.assign(z=z, zmin=zmin, zmax=zmax)
 
-        preds = []
-        for j, (b0, coefs, _) in enumerate(pop):
-            expr = F.lit(b0)
-            for c, b in coefs.items():
-                expr = expr + F.lit(b) * F.col(f"`{c}`")
-            preds.append(expr.alias(f"__p{j}"))
-        out = out.select("*", *preds)
-        pcols = [F.col(f"__p{j}") for j in range(len(pop))]
-        z = sum(pcols[1:], pcols[0]) / F.lit(float(len(pop)))
-        zmin = pcols[0] if len(pcols) == 1 else F.least(*pcols)
-        zmax = pcols[0] if len(pcols) == 1 else F.greatest(*pcols)
-        q = self.tube_params["tube_factor"]
-        out = (
-            out.withColumn("z", z)
-            .withColumn("zmin", F.col("z") - q * (F.col("z") - zmin))
-            .withColumn("zmax", F.col("z") + q * (zmax - F.col("z")))
-            .drop(*[f"__p{j}" for j in range(len(pop))])
-        )
-        w = self.tube_params["filter_width"]
-        if w > 0:
-            width = 2 * w + 1
-            out = savgol(out, ["zmin", "zmax"], ["zmin", "zmax"], width, 2, 0)
-        return out.drop(*[c for c in SYNTH if c in out.columns and c not in data.columns])
+        return data.groupBy("record_id").applyInPandas(fn, T.StructType(list(fields.values())))
 
     # -------------------------------------------------------------- scores
 
     def scores(self, df: DataFrame | None = None) -> DataFrame:
-        """Out-of-tube counts per record × target in one aggregation
-        per target (tubes.py:392-406). Returns
-        (record_id, N, <target count columns…>)."""
+        """Out-of-tube counts per record × target (tubes.py:392-406) in
+        one grouped pass over every record and target. Returns
+        (record_id, N, <target count columns…>) ordered by record_id."""
+        import pandas as pd
+
         data = df if df is not None else self.sset.df
-        result = data.groupBy("record_id").agg(F.count(F.lit(1)).alias("N"))
-        for target in sorted(self._reg):
-            est = self.estimate_frame(target, data)
-            y = F.col(f"`{target}`")
-            cnt = (
-                est.groupBy("record_id")
-                .agg(
-                    F.count(
-                        F.when((y > F.col("zmax")) | (y < F.col("zmin")), 1)
-                    ).alias(f"score_{target}")
-                )
-            )
-            result = result.join(cnt, "record_id", "left")
-        return result.orderBy("record_id")
+        targets = {t: self._bounds_args(t) for t in sorted(self._reg)}
+        factors = {c for pop, _, _ in targets.values() for _, coefs, _ in pop for c in coefs}
+        needed = sorted((set(targets) | factors) - set(SYNTH))
+
+        def fn(pdf):
+            pdf = pdf.sort_values("seq", ignore_index=True)
+            row = {"record_id": pdf["record_id"].iloc[:1].to_numpy(), "N": [len(pdf)]}
+            for t, (pop, q, width) in targets.items():
+                _, zmin, zmax = _bounds_np(pdf, t, pop, q, width)
+                y = pdf[t].to_numpy(dtype=float)
+                row[f"score_{t}"] = [int(np.count_nonzero((y > zmax) | (y < zmin)))]
+            return pd.DataFrame(row)
+
+        schema = T.StructType(
+            [data.schema["record_id"], T.StructField("N", T.LongType())]
+            + [T.StructField(f"score_{t}", T.LongType()) for t in targets]
+        )
+        per_record = (
+            data.select("record_id", "seq", *[F.col(f"`{c}`") for c in needed])
+            .groupBy("record_id")
+            .applyInPandas(fn, schema)
+        )
+        # one partition, then sorted: an orderBy's range sampling would
+        # run the grouped pass a second time
+        return per_record.repartition(1).sortWithinPartitions("record_id")
 
     def score_proportions(self, df: DataFrame | None = None) -> DataFrame:
         """scr[col]/N (tubes.py:417)."""

@@ -9,9 +9,10 @@ base is 0 if the first crossing is rising, else 1; a record with no
 crossing is all zeros).
 
 ``indicator_np = segment_ramp_np(savgol_filter_np(...))`` are the numpy
-kernels. ``indicator_col`` and ``segment_ramp`` run them per record in
-one Arrow grouped-map pass each (the savgol module's ``_per_record``);
-``reversed_indicator`` is one native window.
+kernels. ``indicator_col``, ``segment_ramp`` and ``reversed_indicator``
+(``c[-1] - c``) run them per record through the savgol module's
+``_per_record``, so a chain of them, with ``savgol`` too, is one Arrow
+grouped-map pass.
 """
 
 from __future__ import annotations
@@ -19,8 +20,7 @@ from __future__ import annotations
 from functools import partial
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 # ``savgol`` is re-exported: callers reach it as ``indicator.savgol``
 from tabata_spark.operators.savgol import _per_record, savgol, savgol_filter_np  # noqa: F401
@@ -76,13 +76,11 @@ def indicator_col(
     return _per_record(df, [(col, out, kernel)])
 
 
+def _reversed_np(c: np.ndarray) -> np.ndarray:
+    return c[-1] - c
+
+
 def reversed_indicator(df: DataFrame, col: str, out: str) -> DataFrame:
     """W7: distance from the final count, ``c[-1] - c``
-    (instants.py:343,528-529)."""
-    frame = (
-        Window.partitionBy("record_id")
-        .orderBy("seq")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    c = F.col(f"`{col}`")
-    return df.withColumn(out, F.last(c).over(frame) - c)
+    (instants.py:343,528-529), as a double column."""
+    return _per_record(df, [(col, out, _reversed_np)])

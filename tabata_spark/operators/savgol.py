@@ -16,10 +16,13 @@ principles (pinv of the Vandermonde design matrix), and
 ``mode='interp'`` semantics.
 
 One execution path: ``savgol`` runs ``savgol_filter_np`` per record in
-a single Arrow-batched grouped-map pass (``_per_record``, shared with
-the indicator operators). A lag/lead SQL formulation with a
-broadcast edge map was measured slower at every shape tried and
-deleted (SCALE.md rule 4).
+an Arrow-batched grouped-map pass (``_per_record``, shared with the
+indicator operators). A kernel call on the direct output of another
+extends that pass instead of planning a second one, so a chain such as
+``savgol -> indicator_col -> reversed_indicator`` is one grouped map
+behind one exchange. A lag/lead SQL formulation with a broadcast edge
+map was measured slower at every shape tried and deleted (SCALE.md
+rule 4).
 """
 
 from __future__ import annotations
@@ -124,20 +127,31 @@ def _per_record(
 
     An existing column named ``out`` is replaced in place (same
     position, now double); any other ``out`` is appended. Every
-    kernel reads the input columns and runs in the same pass, so many
-    outputs cost one exchange."""
+    kernel of one call reads that call's input columns, so many
+    outputs cost one exchange. On the uncached direct output of
+    another ``_per_record`` call, the kernels run as one more stage of
+    that call's pass, reading its outputs: a chain of calls plans one
+    grouped map, not one pass and one exchange per call."""
     fields = {f.name: f for f in df.schema}
     for _, out, _ in kernels:
         fields[out] = T.StructField(out, T.DoubleType())
     schema = T.StructType(list(fields.values()))
+    source, stages = vars(df).get("_record_stages", (df, []))
+    if df.is_cached:  # the caller kept this output: read it, do not redo it
+        source, stages = df, []
+    stages = [*stages, kernels]
 
     def fn(pdf):
         pdf = pdf.sort_values("seq", ignore_index=True)
-        return pdf.assign(
-            **{out: kernel(pdf[col].to_numpy(dtype=float)) for col, out, kernel in kernels}
-        )
+        for stage in stages:
+            pdf = pdf.assign(
+                **{out: kernel(pdf[col].to_numpy(dtype=float)) for col, out, kernel in stage}
+            )
+        return pdf
 
-    return df.groupBy("record_id").applyInPandas(fn, schema)
+    out = source.groupBy("record_id").applyInPandas(fn, schema)
+    out._record_stages = (source, stages)
+    return out
 
 
 def savgol(

@@ -36,3 +36,31 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_TEST_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def _jobs_run_by(spark, fn):
+    """Spark job ids started while ``fn()`` runs. A marker job run
+    afterwards in a second group must show up first: status events
+    arrive in order, so every earlier job has been seen by then."""
+    import time
+
+    sc = spark.sparkContext
+    group = f"probe-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "probe", False)
+    try:
+        fn()
+        sc.setJobGroup(group + "-marker", "marker", False)
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + "-marker"):
+        assert time.monotonic() < deadline, "marker job never reported"
+        time.sleep(0.05)
+    return list(tracker.getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def jobs_run_by():
+    return _jobs_run_by

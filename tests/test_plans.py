@@ -106,6 +106,57 @@ def test_indicator_single_exchange(spark, sf):
     _assert_one_arrow_pass(battery.QUERIES["w_indicator_full"](spark, sf))
 
 
+def _features_chain(df):
+    """The benchmark's feature pass: positions, SG width 21, indicator
+    width 41, reversed indicator, left of each record's argmax."""
+    from tabata_spark.operators import indicator, positions, savgol, slicing
+
+    instants = df.groupBy("record_id").agg(F.expr("max_by(seq, `ALT[m]`)").alias("seq"))
+    out = positions.with_positions(df)
+    out = savgol.savgol(out, "ALT[m]", "ALT_sg", 21)
+    out = indicator.indicator_col(out, "ALT[m]", "ALT_ind", 41, 1, 5.0)
+    out = indicator.reversed_indicator(out, "ALT_ind", "ALT_rev")
+    return out, slicing.left_of(out, instants)
+
+
+def test_features_chain_is_one_arrow_pass(spark, sset, flights):
+    """savgol -> indicator_col -> reversed_indicator on each other's
+    direct output fuse into one FlatMapGroupsInPandas, with the values
+    of the numpy kernels applied one after the other."""
+    import numpy as np
+
+    from tabata_spark.operators.indicator import indicator_np
+    from tabata_spark.operators.savgol import savgol_filter_np
+    from tabata_spark.plans.inspect import explain_str
+
+    chain, left = _features_chain(sset.df)
+    for df in (chain, left):
+        s = explain_str(df, "simple")
+        assert s.count("FlatMapGroupsInPandas") == 1, s
+    name = sset.records[0]
+    got = chain.filter(F.col("record_id") == name).orderBy("seq").toPandas()
+    y = flights[name]["ALT[m]"].to_numpy()
+    ind = indicator_np(y, 41, 1, 5.0)
+    np.testing.assert_allclose(got["ALT_sg"], savgol_filter_np(y, 21, 2), rtol=1e-12)
+    np.testing.assert_allclose(got["ALT_ind"], ind, rtol=1e-12)
+    np.testing.assert_allclose(got["ALT_rev"], ind[-1] - ind, rtol=1e-12, atol=1e-12)
+
+
+def test_cached_kernel_output_is_read_not_redone(spark, sset):
+    """A kernel call on a persisted kernel output reads the cache: its
+    pass stacks on the InMemoryRelation instead of redoing the first."""
+    from tabata_spark.operators.indicator import reversed_indicator
+    from tabata_spark.operators.savgol import savgol
+    from tabata_spark.plans.inspect import explain_str
+
+    sg = savgol(sset.df, "ALT[m]", "sg", 11).persist()
+    try:
+        s = explain_str(reversed_indicator(sg, "sg", "rev"), "simple")
+        assert s.count("FlatMapGroupsInPandas") == 2 and "InMemoryRelation" in s, s
+    finally:
+        sg.unpersist()
+
+
 def test_record_belief_filters_below_grouped_map(spark, sset, tmp_path):
     """A per-record belief view of a stored set scores only that
     record: its record_id predicate sits below the

@@ -149,9 +149,7 @@ def test_tree_matches_mllib_on_grid_samples(spark, labeled_selector, seed, fract
     every grid row, weighs every feature and counts its nodes as
     MLlib's DecisionTreeClassifier does."""
     sel = labeled_selector
-    if sel._dsi is None:
-        sel.make_indicators()
-    dsi = sel._dsi
+    dsi = sel.make_indicators()
     cols = [c for c in dsi.columns if c not in ("record_id", "seq")]
     if reduced:
         cols = cols[::5]
@@ -190,24 +188,77 @@ def test_tree_matches_mllib_edge_cases(spark, name):
         assert 0 not in tree.feature
 
 
-def test_refit_releases_previous_grid(spark, sset):
-    """Relabelling and refitting caches a new indicator grid and
-    releases the old one."""
-    from pyspark import StorageLevel
-
-    sel = Selector(sset, seed=3)
+def _small_selector(sset, seed=3):
+    sel = Selector(sset, seed=seed)
     sel.variables = {"ALT[m]"}
     sel.feature_params = dict(range_width=[10], range_sigma=[5], max_order=1)
     sel.learn_params = dict(
         retry_number=1, retry_percentile=50, samples_percent=0.2, min_samples_split=0.05
     )
+    return sel
+
+
+def test_refit_releases_previous_grid(spark, sset):
+    """Fitting, relabelling and refitting leaves nothing cached: the
+    indicator grid lives only inside fit's passes."""
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    sel = _small_selector(sset)
     names = sset.records
     sel.selected = {names[0]: 200, names[1]: 250}
     sel.fit()
-    old = sel._dsi
-    assert old.storageLevel != StorageLevel.NONE
     sel.selected[names[2]] = 220
     sel.fit()
-    assert sel._dsi is not old
-    assert old.storageLevel == StorageLevel.NONE
-    assert sel._dsi.storageLevel != StorageLevel.NONE
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+
+
+def test_fit_runs_two_passes(spark, labeled_selector, jobs_run_by):
+    """Selector.fit is two grouped passes (epsilon, then the grid and
+    every tree's sample), whatever the number of trees and refits:
+    at most 4 Spark jobs with AQE's map-stage jobs."""
+    import copy
+
+    sel = copy.copy(labeled_selector)
+    sel.learn_params = dict(sel.learn_params, retry_number=6)
+    assert len(jobs_run_by(spark, sel.fit)) <= 4
+
+
+def test_fit_does_not_depend_on_partitioning(spark, labeled_selector):
+    """The same labels fit the same trees and predict the same
+    instants at 4 and at 2 shuffle partitions: every sample is drawn
+    per record from a generator seeded by (seed + tree, record name)."""
+    import copy
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    runs = []
+    try:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        for partitions in ("4", "2"):
+            spark.conf.set("spark.sql.shuffle.partitions", partitions)
+            spark.catalog.clearCache()
+            sel = copy.copy(labeled_selector).fit()
+            runs.append((sel._kept_names, sel.describe(), sel.predict()))
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert runs[0] == runs[1]
+
+
+def test_predict_df_is_belief_argmax(labeled_selector):
+    """The argmax taken inside the belief pass is the first row of
+    largest belief, as ``max_by`` on (p, -seq) over belief_frame."""
+    sel = labeled_selector
+    if sel._model is None:
+        sel.fit()
+    want = {
+        r["record_id"]: r["seq"]
+        for r in sel.belief_frame()
+        .groupBy("record_id")
+        .agg(F.expr("max_by(seq, struct(p, -seq))").alias("seq"))
+        .collect()
+    }
+    got = {r["record_id"]: r["seq"] for r in sel.predict_df().collect()}
+    assert got == want and set(got) == set(sel.sset.records)

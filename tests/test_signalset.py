@@ -156,38 +156,16 @@ def test_put_rejects_channel_the_store_lacks(tmp_path, sset, flights):
     assert "TAS[m/s]" in mem.channels
 
 
-def _jobs_run_by(spark, fn):
-    """Spark job ids started while ``fn()`` runs. A marker job run
-    afterwards in a second group must show up first: status events
-    arrive in order, so every earlier job has been seen by then."""
-    import time
-
-    sc = spark.sparkContext
-    group = f"probe-{time.monotonic_ns()}"
-    sc.setJobGroup(group, "probe", False)
-    try:
-        fn()
-        sc.setJobGroup(group + "-marker", "marker", False)
-        spark.range(1).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(group + "-marker"):
-        assert time.monotonic() < deadline, "marker job never reported"
-        time.sleep(0.05)
-    return list(tracker.getJobIdsForGroup(group))
-
-
-def test_put_record_list_starts_no_job(tmp_path, sset, flights):
+def test_put_record_list_starts_no_job(tmp_path, sset, flights, jobs_run_by):
     """``put`` on a set whose record list is known builds the new list
     from it: in memory the upsert starts no job at all, and on a store
     it starts only the jobs of its own write and reload — no scan of
-    the whole set for record names."""
+    the whole set for record names. A freshly loaded store reads its
+    list off its file listing, also with no job."""
     spark = sset.df.sparkSession
     name = sset.records[1]
     pdf = flights[name].head(30)
-    assert _jobs_run_by(spark, lambda: sset.put(pdf, record=name).records) == []
+    assert jobs_run_by(spark, lambda: sset.put(pdf, record=name).records) == []
 
     stored = sset.save(str(tmp_path / "sset_records"))
     assert stored.records == sset.records
@@ -201,18 +179,50 @@ def test_put_record_list_starts_no_job(tmp_path, sset, flights):
         ).partitionBy("record_id").mode("overwrite").parquet(twin_path)
         spark.read.parquet(twin_path)
 
-    own = _jobs_run_by(spark, write_and_reload)
+    own = jobs_run_by(spark, write_and_reload)
     assert own != []
-    assert len(_jobs_run_by(spark, lambda: stored.put(pdf, record=name).records)) == len(own)
+    assert len(jobs_run_by(spark, lambda: stored.put(pdf, record=name).records)) == len(own)
 
     for base in (sset, stored):
         upd = base.put(pdf, record=name)
         assert upd.records == sset.records
-        assert _jobs_run_by(spark, lambda: upd.records) == []
+        assert jobs_run_by(spark, lambda: upd.records) == []
         new = upd.put(flights[sset.records[0]].head(20), record="record_10")
         assert new.records == sorted([*sset.records, "record_10"])
         assert new.sigpos == new.records.index("record_10")
         assert new.record("record_10").count() == 20
-    # the positive control: an unknown record list costs a job
+    fresh = SignalSet.load(spark, stored.path)  # the loop put record_10 in it
+    assert jobs_run_by(spark, lambda: fresh.records) == []
+    assert fresh.records == sorted([*sset.records, "record_10"])
+    # the positive control: a set with no file listing scans for its list
+    unlisted = SignalSet(fresh.df)
+    assert jobs_run_by(spark, lambda: unlisted.records) != []
+    assert unlisted.records == fresh.records
+
+
+def test_listed_records_decode_escaped_names(tmp_path, spark, jobs_run_by):
+    """Record names that Spark escapes in partition directory names
+    (and the file URI escapes again) read back from a store's listing
+    exactly as a scan of its record_id column returns them."""
+    names = ["a b", "a#b", "a%b", "a:b", "a=b", "b/c", "k{1}", "x?y", "z'q", "é", "001"]
+    recs = {n: pd.DataFrame({"ALT[m]": [1.0, 2.0]}) for n in names}
+    stored = SignalSet.from_records(spark, recs).save(str(tmp_path / "escaped"))
     fresh = SignalSet.load(spark, stored.path)
-    assert _jobs_run_by(spark, lambda: fresh.records) != []
+    assert jobs_run_by(spark, lambda: fresh.records) == []
+    scanned = fresh.df.select("record_id").distinct().orderBy("record_id").collect()
+    assert fresh.records == [r[0] for r in scanned] == sorted(names)
+
+
+def test_orc_store_put_keeps_format(tmp_path, sset, flights):
+    """A store saved as ORC takes upserts as ORC: every file stays ORC,
+    so the store still loads, and the upserted record reads back."""
+    spark = sset.df.sparkSession
+    path = str(tmp_path / "sset_orc_put")
+    stored = sset.save(path, fmt="orc")
+    name = sset.records[1]
+    out = stored.put(flights[name].head(30), record=name)
+    again = SignalSet.load(spark, path, fmt="orc")
+    assert {f.rsplit(".", 1)[-1] for f in again.df.inputFiles()} == {"orc"}
+    assert again.record(name).count() == 30
+    assert out.record(sset.records[0]).count() == sset.record(sset.records[0]).count()
+    assert again.records == sset.records

@@ -104,6 +104,94 @@ def test_scores_with_wide_filter(fitted_tube):
     assert all(0 <= r["score_Tisa[K]"] <= r["N"] for r in rows)
 
 
+def test_synthetic_np_equals_window_factors(spark, flights, sset):
+    """The numpy TIME/MEDIAN/CAUSAL factors of the bounds kernel equal
+    the record-window columns of ``_with_synthetic``, on every record
+    (the fixture's short and gappy records included) and on a record
+    of nulls."""
+    from tabata_spark.ml.tube import SYNTH, _synthetic_np, _with_synthetic
+
+    recs = dict(flights)
+    recs["zz_gappy"] = flights[sset.records[0]].head(40).assign(
+        **{"Tisa[K]": [np.nan if i % 3 else float(i) for i in range(40)]}
+    )
+    recs["zz_nulls"] = flights[sset.records[0]].head(7).assign(**{"Tisa[K]": np.nan})
+    frame = SignalSet.from_records(spark, recs).df
+    pdf = (
+        _with_synthetic(frame, "Tisa[K]")
+        .select("record_id", "seq", "`Tisa[K]`", *SYNTH)
+        .toPandas()
+        .sort_values(["record_id", "seq"])
+    )
+    for _, g in pdf.groupby("record_id"):
+        got = _synthetic_np(g["Tisa[K]"].to_numpy(dtype=float))
+        for c in SYNTH:
+            np.testing.assert_array_equal(got[c], g[c].to_numpy(dtype=float), err_msg=c)
+
+
+def test_scores_is_one_grouped_pass(fitted_tube):
+    """scores() plans one grouped pass over all records and targets:
+    one FlatMapGroupsInPandas, no join, no second kernel pass."""
+    from tabata_spark.plans.inspect import explain_str, plan_counts
+
+    df = fitted_tube.scores()
+    s = explain_str(df, "simple")
+    assert s.count("FlatMapGroupsInPandas") == 1, s
+    assert plan_counts(df)["python_evals"] == 1, s
+    assert "Join" not in s and "Window" not in s, s
+
+
+def test_fit_runs_one_job(spark, sset, jobs_run_by):
+    """Tube.fit is one Spark job per target (two with AQE's map-stage
+    job), with no scan of the record names."""
+    tube = Tube(sset, seed=42)
+    tube.variables = {"Tisa[K]"}
+    tube.factors = {"ALT[m]", "TAS[m/s]", "Tisa[K]"}
+    tube.feature_params = dict(local_value="Median", use_time="Yes")
+    tube.learn_params = dict(
+        retry_number=4, keep_best_number=2, samples_percent=0.05, max_features=3
+    )
+    assert len(jobs_run_by(spark, tube.fit)) <= 2
+
+
+def test_synthetic_factor_bounds_match_window_estimate(spark, sset):
+    """With MEDIAN and TIME factors, the bounds kernel's predictions
+    equal the inline linear model over ``_with_synthetic``'s columns."""
+    from tabata_spark.ml.tube import _with_synthetic
+
+    tube = Tube(sset, seed=42)
+    tube.variables = {"Tisa[K]"}
+    tube.factors = {"ALT[m]", "Tisa[K]"}
+    tube.feature_params = dict(local_value="Median", use_time="Yes")
+    tube.learn_params = dict(
+        retry_number=4, keep_best_number=4, samples_percent=0.05, max_features=3
+    )
+    tube.tube_params = dict(tube_factor=10.0, filter_width=0)
+    tube.fit()
+    pop = tube._reg["Tisa[K]"]
+    assert any(c in ("MEDIAN", "TIME") for _, coefs, _ in pop for c in coefs)
+    preds = []
+    for j, (b0, coefs, _) in enumerate(pop):
+        expr = F.lit(b0)
+        for c, b in coefs.items():
+            expr = expr + F.lit(b) * F.col(f"`{c}`")
+        preds.append(expr.alias(f"p{j}"))
+    want = (
+        _with_synthetic(sset.df, "Tisa[K]")
+        .select("record_id", "seq", *preds)
+        .toPandas()
+        .sort_values(["record_id", "seq"])
+    )
+    got = tube.estimate_frame("Tisa[K]").toPandas().sort_values(["record_id", "seq"])
+    P = want[[f"p{j}" for j in range(len(pop))]].to_numpy()
+    np.testing.assert_allclose(got["z"].to_numpy(), P.mean(axis=1), rtol=1e-12)
+    np.testing.assert_allclose(
+        got["zmax"].to_numpy(),
+        got["z"].to_numpy() + 10.0 * (P.max(axis=1) - got["z"].to_numpy()),
+        rtol=1e-12,
+    )
+
+
 # ---------------------------------------------------- MLlib as the oracle
 
 

@@ -12,11 +12,12 @@ times are operator cost, not generation.
 The model probes fit a Selector on 64 labelled records (the
 benchmark's small indicator grid and sampling) and predict every
 record, then fit a Tube on ALT[m] and score every record. They report
-the Spark jobs each fit runs and the rows each Selector tree collects
-to the driver: a tree collects its with-replacement sample of the
-labelled rows, ``samples_percent`` of them for the first
-``retry_number`` trees and ``min(0.5, samples_percent *
-retry_number)`` for the refits.
+the Spark jobs each call runs (counted per job group) and the rows
+each Selector tree is grown on: one pass draws every tree's
+with-replacement sample of the labelled rows, ``samples_percent`` of
+them for the first ``retry_number`` trees and ``min(0.5,
+samples_percent * retry_number)`` for the refits, which reuse one
+sample.
 
     python tools/scale_probe.py components [n_nodes] [chain_n]
 
