@@ -106,11 +106,18 @@ class SignalSet:
         path: str,
         phase: str | None = None,
         fmt: str = "parquet",
+        schema: T.StructType | None = None,
     ) -> "SignalSet":
         """Open a stored signal set (reference Opset.__init__).
         ``fmt``: any Spark batch source — parquet (default) or orc
-        both give columnar pruning + predicate pushdown."""
-        out = cls(spark.read.format(fmt).load(path), phase=phase, path=path, fmt=fmt)
+        both give columnar pruning + predicate pushdown. ``schema``:
+        the store's schema when the caller knows it (``save`` and
+        ``put`` do), which skips Spark's inference job and keeps the
+        ``record_id`` type (a record named "123" stays a string)."""
+        reader = spark.read.format(fmt)
+        if schema is not None:
+            reader = reader.schema(schema)
+        out = cls(reader.load(path), phase=phase, path=path, fmt=fmt)
         out._listed = True
         return out
 
@@ -121,7 +128,7 @@ class SignalSet:
         pushdown; the returned set's ``put`` writes that format too."""
         self.df.write.partitionBy("record_id").mode(mode).format(fmt).save(path)
         spark = self.df.sparkSession
-        return SignalSet.load(spark, path, phase=self.phase, fmt=fmt)
+        return SignalSet.load(spark, path, phase=self.phase, fmt=fmt, schema=self.df.schema)
 
     @classmethod
     def from_records(
@@ -327,7 +334,9 @@ class SignalSet:
             new.select(*self.df.columns).write.option(
                 "partitionOverwriteMode", "dynamic"
             ).partitionBy("record_id").mode("overwrite").format(self.fmt).save(self.path)
-            out = SignalSet.load(spark, self.path, phase=self.phase, fmt=self.fmt)
+            out = SignalSet.load(
+                spark, self.path, phase=self.phase, fmt=self.fmt, schema=self.df.schema
+            )
             out._records = records
         else:
             kept = self.df.filter(F.col("record_id") != name)

@@ -6,11 +6,12 @@ Five tiers, all designed for the 100 TB regime:
 - exact: content-hash groupBy — one shuffle on a 128-bit hash, no
   skew (hashes are uniform), survivor = min id;
 - minhash (native): shingle → k seeded xxhash64 min-aggregations →
-  banded LSH bucket join → candidate pairs → exact Jaccard verify.
+  banded LSH buckets → candidate pairs → exact Jaccard verify.
   Everything JVM-side: one explode + one groupBy for signatures, one
-  self-join on (band, hash) for candidates. The band join is the
-  classic near-dup pipeline (cf. MapReduce minhash literature): at
-  100 TB the candidate set, not the corpus square, bounds the cost;
+  bucket aggregation on (band, hash) with in-array pair expansion for
+  candidates. Banding is the classic near-dup pipeline (cf.
+  MapReduce minhash literature): at 100 TB the candidate set, not
+  the corpus square, bounds the cost;
 - minhash (MLlib): HashingTF + MinHashLSH approxSimilarityJoin — the
   library path, kept for parity/validation;
 - simhash: 64-bit sign-of-weighted-bit-sums fingerprint; near-dups =
@@ -18,6 +19,13 @@ Five tiers, all designed for the 100 TB regime:
 - n-gram Jaccard: exact token-shingle Jaccard via shingle-equi-join —
   quadratic in candidates, used as the small-scale oracle for the
   approximate tiers.
+
+Small inputs do not pay for those plans: the bucket pairing of the
+MinHash and SimHash tiers and the connected components finish on the
+driver (one collect, then numpy) once their rows are broadcast-sized,
+by one cut-over (:func:`_driver_rows`, gated by Spark's own plan size
+estimate). Larger inputs, streaming frames and a broadcast threshold
+<= 0 keep the distributed plans.
 """
 
 from __future__ import annotations
@@ -26,7 +34,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 
 def _materialize(df: DataFrame, mode: str | None) -> DataFrame:
@@ -49,6 +57,80 @@ def _materialize(df: DataFrame, mode: str | None) -> DataFrame:
     if mode == "checkpoint":
         return df.localCheckpoint(eager=False)
     raise ValueError(f"unknown materialize mode: {mode!r}")
+
+
+def _driver_row_limit(df: DataFrame) -> int:
+    """L, the most rows of ``df`` a driver finish takes:
+    ``spark.sql.autoBroadcastJoinThreshold`` bytes over Spark's
+    default size of one row of ``df`` (8 per long, 4 per int, 20 per
+    string), so 655,360 (long, long) edges at the default 10 MB. 0 —
+    stay distributed — for a threshold <= 0 or a streaming frame."""
+    threshold = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if threshold <= 0 or df.isStreaming:
+        return 0
+    return threshold // max(df._jdf.schema().defaultSize(), 1)
+
+
+def _driver_rows(df: DataFrame, sized: DataFrame | None = None) -> pd.DataFrame | None:
+    """The cut-over of :func:`connected_components`,
+    :func:`bucket_candidate_pairs` and :func:`simhash_near_pairs`:
+    ``df``'s rows as a pandas frame when they fit on the driver, else
+    None and the caller keeps its distributed plan.
+
+    They fit when Spark's plan estimate of ``sized`` (default ``df``;
+    pass the frame ``df`` keeps one row for one from, where a join
+    hides that from the estimate) is within the broadcast threshold,
+    and ``limit(L + 1)`` then yields at most L rows
+    (:func:`_driver_row_limit`). The estimate needs no job, so a large
+    input never pays the collect; an explode can make it read low,
+    which the row limit catches."""
+    limit = _driver_row_limit(df)
+    if limit <= 0:
+        return None
+    threshold = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    plan = (df if sized is None else sized)._jdf.queryExecution().optimizedPlan()
+    if plan.stats().sizeInBytes() > threshold:
+        return None
+    rows = df.limit(limit + 1).toPandas()
+    return rows if len(rows) <= limit else None
+
+
+def _local_bucket_pairs(
+    rows: pd.DataFrame, key_cols: list[str], sort_cols: list[str], cap: int, limit: int
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """Driver form of the bucket aggregation + in-array pair expansion:
+    row-index pairs (i, j) of ``rows`` that share every key (nulls
+    group together, as in ``groupBy``), i before j by ``sort_cols`` —
+    what ``array_sort(collect_list(...))`` per bucket expanded pairwise
+    emits — buckets of more than ``cap`` rows left out when ``cap``
+    is set. None when there would be more than ``limit`` pairs, so a
+    driver finish only ever returns a broadcast-sized frame."""
+    n = len(rows)
+    if n == 0:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    g = rows.groupby(key_cols, sort=False, dropna=False).ngroup().to_numpy()
+    by_key = rows[sort_cols].assign(__g=g)
+    order = by_key.sort_values(["__g", *sort_cols], kind="stable").index.to_numpy()
+    g = g[order]
+    starts = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
+    sizes = np.diff(np.r_[starts, n])
+    kept = np.where(sizes <= cap, sizes, 0) if cap else sizes
+    # element at local index r of a kept bucket of size s pairs with
+    # the s - 1 - r elements after it
+    local = np.arange(n) - np.repeat(starts, sizes)
+    reps = np.maximum(np.repeat(kept, sizes) - 1 - local, 0)
+    total = int(reps.sum())
+    if total > limit:
+        return None
+    a = np.repeat(np.arange(n), reps)
+    b = a + 1 + np.arange(total) - np.repeat(np.cumsum(reps) - reps, reps)
+    return order[a], order[b]
+
+
+def _local_frame(spark, pdf: pd.DataFrame, fields: list[tuple[str, object]]) -> DataFrame:
+    """A driver finish's result as a local relation with ``fields``'
+    (name, Spark type) schema."""
+    return spark.createDataFrame(pdf, StructType([StructField(c, t) for c, t in fields]))
 
 
 def exact_dedup(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -218,6 +300,15 @@ def bucket_candidate_pairs(
     pair generation + distinct. No self-join, no window sort — two
     shuffles total (bucket agg + distinct) regardless of band count.
 
+    Once the bucket rows fit on the driver (:func:`_driver_rows`: the
+    plan estimate of ``keyed`` within the broadcast threshold and at
+    most L rows), they are collected in one query and the group → cap
+    → pairs → distinct tail runs in numpy instead, returning a local
+    frame of the same pairs with ``id_col``'s type; so does it only
+    while the pairs number at most L. The hot-bucket keying below
+    (salt shards, precap's anti-join) runs in Spark before that
+    collect, so every policy means the same on both paths.
+
     ``max_bucket_size`` guards the quadratic blowup on hot buckets
     (boilerplate / low-entropy content): a 10k-doc bucket alone would
     emit 5·10⁷ pairs. ``hot_bucket`` picks the policy:
@@ -248,6 +339,7 @@ def bucket_candidate_pairs(
     float-representation boundary.
     """
     group_cols: list = list(key_cols)
+    sized = keyed
     # NOTE (r16, measured and REJECTED — do not re-attempt): persisting
     # `keyed` here because the salt census + bucket pass consume it
     # twice. The static plan does show two signature towers
@@ -290,6 +382,21 @@ def bucket_candidate_pairs(
             .select(*key_cols)
         )
         keyed = keyed.join(F.broadcast(hot), key_cols, "left_anti")
+    # collect_list skips null ids, so the driver finish never sees them
+    rows = keyed.select(*group_cols, id_col).filter(F.col(id_col).isNotNull())
+    local = _driver_rows(rows, sized=sized)
+    if local is not None:
+        pairs = _local_bucket_pairs(
+            local, group_cols, [id_col], max_bucket_size, _driver_row_limit(rows)
+        )
+        if pairs is not None:
+            i, j = pairs
+            ids = local[id_col].to_numpy()
+            out = pd.DataFrame({"id_a": ids[i], "id_b": ids[j]})
+            t = keyed.schema[id_col].dataType
+            return _local_frame(
+                keyed.sparkSession, out.drop_duplicates(), [("id_a", t), ("id_b", t)]
+            )
     bucket = keyed.groupBy(*group_cols).agg(
         F.array_sort(F.collect_list(id_col)).alias("__ids")
     )
@@ -931,7 +1038,14 @@ def simhash_near_pairs(
     census + the bucket pass) — without it the ENTIRE upstream
     fingerprint aggregation executed twice (r16 plan audit; guide §5
     "cache a frame reused by more than one subtree"); the drop branch
-    consumes nothing twice and caches nothing."""
+    consumes nothing twice and caches nothing.
+
+    The bucket tail has the driver cut-over of
+    :func:`bucket_candidate_pairs`: once the (blk, bv[, salt], id,
+    simhash) rows fit (:func:`_driver_rows`), one query collects them
+    and numpy groups, caps, pairs, dedups and popcount-filters them,
+    returning a local (id_a, id_b, hamming) frame; salt shards are
+    keyed in Spark before that collect."""
     width = 64 // blocks
     block_vals = F.expr(
         "array("
@@ -942,11 +1056,11 @@ def simhash_near_pairs(
         + ")"
     )
     b = fp.select(
-        F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("h")).alias(
-            "item"
-        ),
+        F.col(id_col).alias("id"),
+        F.col("simhash").alias("h"),
         F.posexplode(block_vals).alias("blk", "bv"),
     )
+    sized = b
     group_cols = ["blk", "bv"]
     if max_bucket_size and hot_block == "salt":
         # the exploded block frame feeds BOTH the shard census and the
@@ -968,9 +1082,9 @@ def simhash_near_pairs(
             )
         )
         if salt_hash is None:
-            base = F.xxhash64(F.col("item.id"), F.col("blk"), F.col("bv"))
+            base = F.xxhash64(F.col("id"), F.col("blk"), F.col("bv"))
         else:
-            base = salt_hash(F.col("item.id"), [F.col("blk"), F.col("bv")])
+            base = salt_hash(F.col("id"), [F.col("blk"), F.col("bv")])
         b = b.join(F.broadcast(shards), ["blk", "bv"], "left").withColumn(
             "__salt",
             F.when(F.col("__nsub").isNull(), F.lit(0)).otherwise(
@@ -978,12 +1092,33 @@ def simhash_near_pairs(
             ),
         )
         group_cols.append("__salt")
+    rows = b.select(*group_cols, "id", "h")
+    local = _driver_rows(rows, sized=sized)
+    if local is not None:
+        pairs = _local_bucket_pairs(
+            local, group_cols, ["id", "h"], max_bucket_size, _driver_row_limit(rows)
+        )
+        if pairs is not None:
+            i, j = pairs
+            ids, h = local["id"].to_numpy(), local["h"].to_numpy(np.int64)
+            out = pd.DataFrame(
+                {"id_a": ids[i], "id_b": ids[j], "ha": h[i], "hb": h[j]}
+            ).drop_duplicates()
+            xor = out["ha"].to_numpy() ^ out["hb"].to_numpy()
+            bits = np.unpackbits(xor.view(np.uint8).reshape(-1, 8), axis=1)
+            out["hamming"] = bits.sum(axis=1).astype(np.int32)
+            t = fp.schema[id_col].dataType
+            return _local_frame(
+                fp.sparkSession,
+                out.loc[out["hamming"] <= max_hamming, ["id_a", "id_b", "hamming"]],
+                [("id_a", t), ("id_b", t), ("hamming", IntegerType())],
+            )
     # one aggregation per block bucket (sorted by id since id is the
     # struct's first field), size-capped, then in-array pair expansion
     # — no self-join, no window sort (same shape as
     # bucket_candidate_pairs, structs carry the fingerprints along)
     bucket = b.groupBy(*group_cols).agg(
-        F.array_sort(F.collect_list("item")).alias("__items")
+        F.array_sort(F.collect_list(F.struct("id", "h"))).alias("__items")
     )
     if max_bucket_size:
         bucket = bucket.filter(F.size("__items") <= max_bucket_size)
@@ -1046,10 +1181,12 @@ def connected_components(
     is a star rooted at its min id and the labels read off the edges.
 
     Once the edge set has at most L rows it is collected in one query
-    and finished on the driver by a numpy union-find. Before the first
-    round the collect is the size test (it fetches at most L + 1 rows);
-    after a round the signature's count decides, so no round adds a
-    count job. L is
+    and finished on the driver by a numpy union-find. Before the rounds
+    the cut-over of :func:`_driver_rows` decides: only an edge set
+    whose plan estimate is within the broadcast threshold is collected
+    (at most L + 1 rows), so a large one starts its rounds without
+    paying that collect; from the first signature on, its count
+    decides, so no round adds a count job. L is
     ``spark.sql.autoBroadcastJoinThreshold`` bytes / 16 (two longs per
     edge): about 655k edges at the default 10 MB, and a threshold <= 0
     keeps every round distributed. A dedup graph of LSH clusters
@@ -1060,7 +1197,6 @@ def connected_components(
     deterministic (DuckDB recursive-CTE oracle-able).
     """
     spark = pairs.sparkSession
-    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold() // 16
     ce = (
         pairs.select(
             F.least("id_a", "id_b").alias("a"), F.greatest("id_a", "id_b").alias("b")
@@ -1068,6 +1204,7 @@ def connected_components(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
+    limit = _driver_row_limit(ce)
 
     def cut(df: DataFrame) -> DataFrame:
         return df if materialize in (None, "none") else df.localCheckpoint(eager=True)
@@ -1082,21 +1219,15 @@ def connected_components(
         ).collect()[0]
         return (row["n"], row["h"])
 
-    sig = None  # (rows, hash) of ce, once the rounds have started
+    edges = _driver_rows(ce)
+    if edges is None:
+        ce = cut(ce)
+        sig = signature(ce)  # (rows, hash) of ce
     for _ in range(max_iter):
-        if limit > 0 and (sig is None or sig[0] <= limit):
-            edges = ce.limit(limit + 1).toPandas()
-            if len(edges) <= limit:
-                ids, comp = _min_id_labels(edges["a"].to_numpy(), edges["b"].to_numpy())
-                t = ce.schema["a"].dataType
-                labels = spark.createDataFrame(
-                    pd.DataFrame({"id": ids, "comp": comp}),
-                    StructType([StructField("id", t), StructField("comp", t)]),
-                )
-                break
-        if sig is None:
-            ce = cut(ce)
-            sig = signature(ce)
+        if edges is None and limit > 0 and sig[0] <= limit:
+            edges = ce.toPandas()
+        if edges is not None:
+            break
         # large-star
         sym = ce.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
             ce.select(F.col("b").alias("src"), F.col("a").alias("dst"))
@@ -1140,6 +1271,12 @@ def connected_components(
             f"connected_components did not converge in {max_iter} rounds; "
             "raise max_iter (star contraction needs O(log n) rounds, so a "
             "miss usually means the edge input is unstable between scans)"
+        )
+    if edges is not None:
+        ids, comp = _min_id_labels(edges["a"].to_numpy(), edges["b"].to_numpy())
+        t = ce.schema["a"].dataType
+        labels = _local_frame(
+            spark, pd.DataFrame({"id": ids, "comp": comp}), [("id", t), ("comp", t)]
         )
     if nodes is not None:
         base = nodes.select(F.col(id_col).alias("id")).distinct()

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -64,3 +65,22 @@ def _jobs_run_by(spark, fn):
 @pytest.fixture
 def jobs_run_by():
     return _jobs_run_by
+
+
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value):
+    """Set spark.sql.autoBroadcastJoinThreshold for one block: -1 keeps
+    connected components and near-dup bucket pairing distributed (no
+    driver finish)."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.fixture
+def broadcast_threshold():
+    return _broadcast_threshold

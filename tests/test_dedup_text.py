@@ -1,4 +1,3 @@
-import contextlib
 import itertools
 
 import numpy as np
@@ -473,19 +472,6 @@ def test_repetition_columns(spark):
     assert rows[3]["dbf"] == 0.6  # 2 distinct bigrams of 5
 
 
-@contextlib.contextmanager
-def _broadcast_threshold(spark, value):
-    """Set spark.sql.autoBroadcastJoinThreshold for one block: -1 keeps
-    every connected_components round distributed (no driver finish)."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 def _union_find_labels(edges, nodes=None):
     """Driver oracle: {id: least id of its component} over the edge
     endpoints (self-loops alone do not make a node), or over ``nodes``."""
@@ -506,12 +492,13 @@ def _union_find_labels(edges, nodes=None):
     return {x: find(x) if x in parent else x for x in ids}
 
 
-def test_connected_components_matches_union_find(spark):
+def test_connected_components_matches_union_find(spark, broadcast_threshold):
     """Property: component assignment equals a driver union-find on
     random graphs (seeded), including min-id canonical labels, on both
-    paths: the default threshold (the edge set fits, so one collect and
-    the driver finish) and threshold -1 (star rounds to the fixed
-    point). Inputs carry self-loops, duplicate and reversed edges and
+    paths: the default threshold (the edge set fits, so the driver
+    finish: these list-built inputs carry no size estimate, so it
+    follows the first signature) and threshold -1 (star rounds to the
+    fixed point). Inputs carry self-loops, duplicate and reversed edges and
     negative ids; ``nodes=`` adds singletons; empty pairs give no rows."""
     import random
 
@@ -528,7 +515,7 @@ def test_connected_components_matches_union_find(spark):
     default = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     for threshold, trial in itertools.product([default, "-1"], range(len(cases))):
         edges = cases[trial]
-        with _broadcast_threshold(spark, threshold):
+        with broadcast_threshold(spark, threshold):
             pairs = spark.createDataFrame(edges, "id_a long, id_b long")
             # persist matters here: without it every round recomputes
             # the whole lineage and chain-heavy random graphs go
@@ -866,7 +853,7 @@ def test_semantic_dedup_blocked_equals_expression_path(spark):
     assert sum(1 for _, k in a if not k) == 50  # every planted copy dropped
 
 
-def test_star_cc_equals_label_propagation(spark):
+def test_star_cc_equals_label_propagation(spark, broadcast_threshold):
     """The driver finish (default threshold) and the distributed star
     rounds (threshold -1) give the same components."""
     from tabata_spark.operators.dedup import connected_components
@@ -892,7 +879,7 @@ def test_star_cc_equals_label_propagation(spark):
             pairs, nodes=nodes, id_col="doc_id"
         ).collect()
     }
-    with _broadcast_threshold(spark, "-1"):
+    with broadcast_threshold(spark, "-1"):
         b = {
             (r["id"], r["comp"])
             for r in connected_components(
@@ -902,7 +889,7 @@ def test_star_cc_equals_label_propagation(spark):
     assert a == b
 
 
-def test_star_cc_converges_on_chain_where_label_prop_cannot(spark):
+def test_star_cc_converges_on_chain_where_label_prop_cannot(spark, broadcast_threshold):
     """A 200-node chain (diameter 199) resolves exactly on both paths
     within 12 rounds; star rounds that run out of ``max_iter`` raise
     instead of returning partial labels."""
@@ -917,7 +904,7 @@ def test_star_cc_converges_on_chain_where_label_prop_cannot(spark):
         for r in connected_components(pairs, max_iter=12).collect()
     }
     assert star == {(i, 0) for i in range(n)}
-    with _broadcast_threshold(spark, "-1"):
+    with broadcast_threshold(spark, "-1"):
         rounds = {
             (r["id"], r["comp"])
             for r in connected_components(pairs, max_iter=12).collect()
@@ -925,6 +912,210 @@ def test_star_cc_converges_on_chain_where_label_prop_cannot(spark):
         assert rounds == star
         with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
             connected_components(pairs, max_iter=2)
+
+
+def _optimized(df):
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _sized(spark, rows, schema):
+    """A frame of ``rows`` whose plan carries its size: built from
+    pandas it is a local relation, while a frame built from a Python
+    list is an RDD scan Spark cannot size, which no driver finish
+    collects before it has been counted."""
+    import pandas as pd
+
+    names = [f.split()[0] for f in schema.split(", ")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
+
+
+def _types(df):
+    return [(f.name, f.dataType) for f in df.schema]
+
+
+def _on_both_paths(spark, broadcast_threshold, build):
+    """``build()`` at the session's threshold and at -1: (rows, frame)
+    of each, rows sorted."""
+    here = build()
+    got = sorted(map(tuple, here.collect()))
+    with broadcast_threshold(spark, "-1"):
+        dist = build()
+        want = sorted(map(tuple, dist.collect()))
+    return (got, here), (want, dist)
+
+
+def _hot_sigs(spark, id_type="long"):
+    """60 signatures over 3 values a slot: 9 hashes per band, so
+    buckets average ~7 ids and many exceed a cap of 8."""
+    import random
+
+    rng = random.Random(7)
+    ids = [i if id_type == "long" else f"d{i:02d}" for i in range(60)]
+    return _sized(
+        spark,
+        [(i, [rng.randrange(3) for _ in range(8)]) for i in ids],
+        f"doc_id {id_type}, sig array<bigint>",
+    )
+
+
+def test_minhash_candidates_driver_finish_equals_distributed(spark, broadcast_threshold):
+    """Every hot-bucket policy, with buckets over the cap: the driver
+    finish (a local relation at the default threshold) returns exactly
+    the distributed plan's pairs (threshold -1), with the same schema,
+    for long and string ids."""
+    from tabata_spark.operators.dedup import minhash_candidates
+
+    for id_type in ("long", "string"):
+        sig = _hot_sigs(spark, id_type)
+        uncapped = minhash_candidates(sig, bands=4, rows=2, max_bucket_size=None).count()
+        for kw in ({}, {"precap": True}, {"hot_bucket": "salt"}):
+            (got, here), (want, dist) = _on_both_paths(
+                spark,
+                broadcast_threshold,
+                lambda: minhash_candidates(sig, bands=4, rows=2, max_bucket_size=8, **kw),
+            )
+            assert got == want and 0 < len(got) < uncapped, (id_type, kw)
+            assert all(a < b for a, b in got)
+            assert _types(here) == _types(dist), (id_type, kw)
+            assert "Aggregate" not in _optimized(here), kw
+            assert "Aggregate" in _optimized(dist), kw
+
+
+def test_simhash_pairs_driver_finish_equals_distributed(spark, broadcast_threshold):
+    """simhash_near_pairs under drop and salt, with blocks over the
+    cap and negative fingerprints: both paths give the same
+    (id_a, id_b, hamming) rows and schema."""
+    import random
+
+    from tabata_spark.operators.dedup import simhash_near_pairs
+
+    rng = random.Random(3)
+    heads = [0, 1, 3, 7, 255, 1 << 40, -1, -5]
+    fp = _sized(
+        spark,
+        [(i, rng.choice(heads) ^ rng.randrange(16)) for i in range(80)],
+        "doc_id long, simhash long",
+    )
+    for kw in ({}, {"hot_block": "salt"}):
+        (got, here), (want, dist) = _on_both_paths(
+            spark,
+            broadcast_threshold,
+            lambda: simhash_near_pairs(fp, max_hamming=3, max_bucket_size=10, **kw),
+        )
+        assert got == want and got, kw
+        assert _types(here) == _types(dist)
+        assert "Aggregate" not in _optimized(here), kw
+
+
+def test_staged_and_embedding_pairs_driver_finish_equals_distributed(
+    spark, docs, broadcast_threshold, monkeypatch
+):
+    """The other callers of bucket_candidate_pairs: the staged near-dup
+    passes and the embedding LSH of similarity.py give the same pairs
+    on both paths, and the default threshold does finish on the
+    driver."""
+    from tabata_spark.operators import dedup
+    from tabata_spark.operators.similarity import lsh_neardup_pairs, random_planes
+
+    finishes = []
+
+    def counted(*a):
+        finishes.append(a)
+        return local_frame(*a)
+
+    local_frame = dedup._local_frame
+    monkeypatch.setattr(dedup, "_local_frame", counted)
+    corpus = spark.createDataFrame(docs.toPandas(), docs.schema)
+
+    def staged():
+        return dedup.near_dup_pairs_staged(
+            corpus, threshold=0.5, band_groups=2, verify_slices=2
+        )
+
+    finishes.clear()
+    (got, _), (want, _) = _on_both_paths(spark, broadcast_threshold, staged)
+    assert got == want and {(0, 1), (3, 5)} <= {(a, b) for a, b, _ in got}
+    assert len(finishes) == 2  # one per band group, none at -1
+    rng = np.random.default_rng(5)
+    base = rng.standard_normal((30, 8))
+    rows = [(i, [float(x) for x in base[i % 20]]) for i in range(30)]
+    emb = _sized(spark, rows, "vec_id long, embedding array<float>")
+    planes = random_planes(8, n_planes=12, seed=4)
+    finishes.clear()
+    (got, _), (want, _) = _on_both_paths(
+        spark,
+        broadcast_threshold,
+        lambda: lsh_neardup_pairs(emb, planes, bands=3, threshold=0.9, max_bucket_size=6),
+    )
+    assert got == want and {(i, i + 20) for i in range(10)} <= {(a, b) for a, b, _ in got}
+    assert len(finishes) == 1
+
+
+def test_bucket_pairs_driver_cut_over_edges(spark, broadcast_threshold, jobs_run_by):
+    """The cut-over's edges. Empty input: both paths empty. A streaming
+    frame stays distributed and is never collected. An estimate over
+    the threshold costs no job. An estimate under the threshold whose
+    rows exceed L, or whose bucket pairs would exceed L, falls back to
+    the distributed plan, with the same pairs."""
+    from tabata_spark.operators.dedup import (
+        _driver_rows,
+        bucket_candidate_pairs,
+        minhash_candidates,
+        simhash_near_pairs,
+    )
+
+    empty = _sized(spark, [], "doc_id long, sig array<bigint>")
+    (got, here), (want, dist) = _on_both_paths(
+        spark, broadcast_threshold, lambda: minhash_candidates(empty, bands=4, rows=2)
+    )
+    assert got == want == [] and _types(here) == _types(dist)
+
+    stream = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+    keyed = stream.select(
+        (F.col("value") % 3).cast("int").alias("band"),
+        (F.col("value") % 5).alias("bh"),
+        F.col("value").alias("__id"),
+    )
+    assert jobs_run_by(spark, lambda: _driver_rows(keyed)) == []
+    assert _driver_rows(keyed) is None
+    assert bucket_candidate_pairs(keyed, ["band", "bh"], "__id").isStreaming
+    fp = stream.select(F.col("value").alias("doc_id"), (F.col("value") * 7919).alias("simhash"))
+    assert simhash_near_pairs(fp).isStreaming
+
+    huge = spark.range(10**10)
+    assert jobs_run_by(spark, lambda: _driver_rows(huge)) == []
+    assert _driver_rows(huge) is None
+
+    # 4,000 rows of (int, long, long) = 20 bytes each from an explode
+    # the estimate does not see: at a 20,000-byte threshold L = 1,000
+    ids = spark.range(1).select(F.explode(F.sequence(F.lit(0), F.lit(3999))).alias("__id"))
+    many = ids.select(
+        (F.col("__id") % 2).cast("int").alias("band"), (F.col("__id") % 500).alias("bh"), "__id"
+    )
+    # one 400-row bucket: 400 rows fit L, its 79,800 pairs do not
+    one = ids.filter(F.col("__id") < 400).select(
+        F.lit(0).alias("band"), F.lit(0).cast("long").alias("bh"), "__id"
+    )
+    for keyed, cap in ((many, 100), (one, None)):
+        with broadcast_threshold(spark, "20000"):
+            est = keyed._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+            assert est <= 20000
+            here = bucket_candidate_pairs(keyed, ["band", "bh"], "__id", max_bucket_size=cap)
+            assert "Aggregate" in _optimized(here)
+            got = sorted(map(tuple, here.collect()))
+        with broadcast_threshold(spark, "-1"):
+            want = sorted(
+                map(
+                    tuple,
+                    bucket_candidate_pairs(
+                        keyed, ["band", "bh"], "__id", max_bucket_size=cap
+                    ).collect(),
+                )
+            )
+        assert got == want and got
+    with broadcast_threshold(spark, "20000"):
+        assert _driver_rows(many) is None
+        assert len(_driver_rows(one)) == 400
 
 
 def test_bm25_ranking_properties(spark):
@@ -998,7 +1189,7 @@ def test_session_sequences_gap_and_order(spark):
     assert out[(2, 1)]["seq"] == "x y"
 
 
-def test_new_ops_empty_input_paths(spark, tmp_path):
+def test_new_ops_empty_input_paths(spark, tmp_path, broadcast_threshold):
     from tabata_spark.core.maintenance import zorder_write
     from tabata_spark.operators.dedup import connected_components
     from tabata_spark.operators.sampling import domain_cap
@@ -1013,7 +1204,7 @@ def test_new_ops_empty_input_paths(spark, tmp_path):
     one = spark.createDataFrame([(1, "a"), (2, "a")], "doc_id long, source string")
     assert domain_cap(one, cap=1, shards=1).count() == 1
     empty_pairs = spark.createDataFrame([], "id_a long, id_b long")
-    with _broadcast_threshold(spark, "-1"):
+    with broadcast_threshold(spark, "-1"):
         assert connected_components(empty_pairs).count() == 0
     zp = str(tmp_path / "z_empty")
     ze = spark.createDataFrame([], "rid long, x long, y long")

@@ -381,17 +381,82 @@ def test_q6_pushes_every_predicate_to_scan(spark, sf):
     assert c["python_evals"] == 0, c
 
 
-def test_lsh_candidates_no_self_join(spark):
-    """Candidate generation is one bucket aggregation + in-array pair
-    expansion — NO join of any kind and no window sort in the plan."""
+def test_lsh_candidates_no_self_join(spark, broadcast_threshold):
+    """Distributed candidate generation (threshold -1: no driver
+    finish) is one bucket aggregation + in-array pair expansion — NO
+    join of any kind and no window sort in the plan."""
     from tabata_spark.operators.dedup import minhash_candidates
 
     sig = spark.createDataFrame(
         [(i, list(range(8))) for i in range(4)], "doc_id long, sig array<bigint>"
     )
-    c = plan_counts(minhash_candidates(sig, bands=4, rows=2))
+    with broadcast_threshold(spark, "-1"):
+        c = plan_counts(minhash_candidates(sig, bands=4, rows=2))
     assert c["broadcast_joins"] + c["sortmerge_joins"] + c["shuffle_hash_joins"] == 0
     assert c["windows"] == 0
+
+
+def test_small_bucket_pairs_are_a_local_relation(spark):
+    """At the default threshold a small, sized input finishes its
+    bucket pairing on the driver: the MinHash candidates and the
+    SimHash pairs come back as a local relation — no aggregation,
+    exchange or join left to plan."""
+    import pandas as pd
+
+    from tabata_spark.operators.dedup import minhash_candidates, simhash_near_pairs
+
+    sig = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(4), "sig": [list(range(8))] * 4}),
+        "doc_id long, sig array<bigint>",
+    )
+    fp = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(4), "simhash": [0, 1, 3, 1 << 40]}),
+        "doc_id long, simhash long",
+    )
+    for df in (minhash_candidates(sig, bands=4, rows=2), simhash_near_pairs(fp)):
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.nodeName() == "LocalRelation", plan.toString()
+        assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+        assert df.count() == 6  # every pair of the 4 docs
+
+
+def test_near_dup_then_components_job_budget(spark, jobs_run_by, tmp_path):
+    """A small stored corpus through near_dup_pairs, then
+    connected_components, then SimHash pairs (the corpus_neardup op's
+    shape) runs at most 12 Spark jobs: the MinHash and SimHash bucket
+    pairing and the components each finish on the driver after one
+    collect (the distributed tails ran 17 here)."""
+    from tabata_spark.operators.dedup import (
+        connected_components,
+        near_dup_pairs,
+        simhash,
+        simhash_near_pairs,
+    )
+
+    words = [f"w{i}" for i in range(400)]
+    rows = [(i, " ".join(words[(7 * i + k) % 400] for k in range(30))) for i in range(40)]
+    rows += [(100 + i, rows[i][1] + " tail") for i in range(0, 40, 4)]
+    path = str(tmp_path / "corpus")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
+    df = spark.read.parquet(path)
+
+    def op():
+        pairs = near_dup_pairs(df, threshold=0.8).persist()
+        got = pairs.collect()
+        comps = connected_components(pairs.select("id_a", "id_b")).collect()
+        pairs.unpersist()
+        fp = simhash(df).persist()
+        sim = simhash_near_pairs(fp).collect()
+        fp.unpersist()
+        return got, comps, sim
+
+    out = []
+    jobs = jobs_run_by(spark, lambda: out.append(op()))
+    got, comps, sim = out[0]
+    assert sim and all(r["hamming"] <= 3 for r in sim)
+    assert {(r["id_a"], r["id_b"]) for r in got} >= {(i, 100 + i) for i in range(0, 40, 4)}
+    assert len(comps) == 20
+    assert len(jobs) <= 12, len(jobs)
 
 
 def test_mixture_rebalance_never_shuffles_fact_rows(spark, sf):
@@ -431,10 +496,14 @@ def test_line_dedup_shuffles_hashes_not_text(spark, sf):
     assert c["python_evals"] == 0, c
 
 
-def test_lsh_neardup_arrow_only_python(spark, sf):
+def test_lsh_neardup_arrow_only_python(spark, sf, broadcast_threshold):
     """The ONLY Python stage is the Arrow signature matmul; the
-    verification joins stay JVM-side."""
-    df = battery.QUERIES["sim_neardup_lsh"](spark, sf)
+    verification joins stay JVM-side. The query is built at threshold
+    -1, so its bucket pairing stays in the plan (a driver finish would
+    run the matmul when it collects the buckets), and planned at the
+    session's threshold."""
+    with broadcast_threshold(spark, "-1"):
+        df = battery.QUERIES["sim_neardup_lsh"](spark, sf)
     c = plan_counts(df)
     assert c["python_evals"] == 1, c  # exactly the mapInPandas matmul
     assert c["sortmerge_joins"] == 0, c
@@ -753,23 +822,25 @@ def test_fact_scale_queries_have_no_global_window(spark, sf, name):
     assert bad == [], bad
 
 
-def test_salted_candidates_broadcast_shards_no_self_join(spark):
-    """The hot_bucket='salt' path adds exactly one small frame — the
-    per-hot-key shard count — and it must meet the banded rows as a
-    BROADCAST join (the hot-key set is tiny by construction: over-cap
-    keys only). Pair generation stays the in-array expansion: no
-    sort-merge/shuffle-hash join, no window sort, anywhere in the
-    plan."""
+def test_salted_candidates_broadcast_shards_no_self_join(spark, broadcast_threshold):
+    """The distributed (threshold -1) hot_bucket='salt' path adds
+    exactly one small frame — the per-hot-key shard count — and it
+    must meet the banded rows as a BROADCAST join (the hot-key set is
+    tiny by construction: over-cap keys only; the explicit hint
+    broadcasts at any threshold). Pair generation stays the in-array
+    expansion: no sort-merge/shuffle-hash join, no window sort,
+    anywhere in the plan."""
     from tabata_spark.operators.dedup import minhash_candidates
 
     sig = spark.createDataFrame(
         [(i, list(range(8))) for i in range(40)],
         "doc_id long, sig array<bigint>",
     )
-    df = minhash_candidates(
-        sig, bands=4, rows=2, max_bucket_size=8, hot_bucket="salt"
-    )
-    c = plan_counts(df)
+    with broadcast_threshold(spark, "-1"):
+        df = minhash_candidates(
+            sig, bands=4, rows=2, max_bucket_size=8, hot_bucket="salt"
+        )
+        c = plan_counts(df)
     assert c["sortmerge_joins"] == 0 and c["shuffle_hash_joins"] == 0, c
     assert c["broadcast_joins"] >= 1, c  # the shard-count map
     assert c["windows"] == 0, c

@@ -1,5 +1,6 @@
 import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tabata_spark.core.signalset import SignalSet
 
@@ -160,8 +161,10 @@ def test_put_record_list_starts_no_job(tmp_path, sset, flights, jobs_run_by):
     """``put`` on a set whose record list is known builds the new list
     from it: in memory the upsert starts no job at all, and on a store
     it starts only the jobs of its own write and reload — no scan of
-    the whole set for record names. A freshly loaded store reads its
-    list off its file listing, also with no job."""
+    the whole set for record names, and the reload, with the schema
+    the store already has, infers nothing: one job in all. A freshly
+    loaded store reads its list off its file listing, also with no
+    job."""
     spark = sset.df.sparkSession
     name = sset.records[1]
     pdf = flights[name].head(30)
@@ -177,11 +180,12 @@ def test_put_record_list_starts_no_job(tmp_path, sset, flights, jobs_run_by):
         frame.select(*twin.df.columns).write.option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("record_id").mode("overwrite").parquet(twin_path)
-        spark.read.parquet(twin_path)
+        spark.read.schema(twin.df.schema).parquet(twin_path)
 
     own = jobs_run_by(spark, write_and_reload)
     assert own != []
-    assert len(jobs_run_by(spark, lambda: stored.put(pdf, record=name).records)) == len(own)
+    put_jobs = jobs_run_by(spark, lambda: stored.put(pdf, record=name).records)
+    assert len(put_jobs) == len(own) == 1
 
     for base in (sset, stored):
         upd = base.put(pdf, record=name)
@@ -198,6 +202,27 @@ def test_put_record_list_starts_no_job(tmp_path, sset, flights, jobs_run_by):
     unlisted = SignalSet(fresh.df)
     assert jobs_run_by(spark, lambda: unlisted.records) != []
     assert unlisted.records == fresh.records
+
+
+def test_numeric_record_name_stays_a_string(tmp_path, spark, jobs_run_by):
+    """A record named like a number keeps a string ``record_id`` through
+    ``save`` and ``put``: both reload with the schema they hold, where
+    Spark's partition inference would read the directory ``123`` as an
+    integer. The reload after ``save`` runs no job."""
+    recs = {"123": pd.DataFrame({"ALT[m]": [1.0, 2.0]})}
+    mem = SignalSet.from_records(spark, recs)
+    stored = []
+    jobs = jobs_run_by(spark, lambda: stored.append(mem.save(str(tmp_path / "numeric"))))
+    assert len(jobs) == 1  # the write
+    stored = stored[0]
+    assert stored.df.schema["record_id"].dataType == T.StringType()
+    upd = stored.put(pd.DataFrame({"ALT[m]": [3.0]}), record="456")
+    assert upd.df.schema["record_id"].dataType == T.StringType()
+    assert upd.records == ["123", "456"]
+    got = sorted((r["record_id"], r["ALT[m]"]) for r in upd.df.collect())
+    assert got == [("123", 1.0), ("123", 2.0), ("456", 3.0)]
+    # the positive control: inference reads the names as integers
+    assert SignalSet.load(spark, stored.path).df.schema["record_id"].dataType != T.StringType()
 
 
 def test_listed_records_decode_escaped_names(tmp_path, spark, jobs_run_by):

@@ -10,6 +10,11 @@ The corpus is generated distributed (no driver data): each doc is
 fraction of docs are exact copies of a base doc (clustered ids), so
 the pipeline has real work to find and the recall is checkable.
 Everything is measured AFTER the corpus is materialized to Parquet.
+
+Each stage also reports ``<stage>_jobs``, the Spark jobs it ran, and
+``<stage>_finish``: ``driver`` when its result's plan holds a local
+relation (a bucket pairing or the components finished on the driver;
+the corpus itself is a Parquet scan), else ``distributed``.
 """
 
 from __future__ import annotations
@@ -64,29 +69,49 @@ def main():
     out["generate_write_s"] = round(time.perf_counter() - t0, 2)
     docs = spark.read.parquet(path)
 
-    def probe(name, thunk):
-        t = time.perf_counter()
-        n = thunk()
-        out[name] = round(time.perf_counter() - t, 2)
-        print(f"# {name}: {out[name]}s ({n} rows)", file=sys.stderr)
-        return n
+    sc = spark.sparkContext
 
-    probe("exact_dedup", lambda: exact_dedup(docs).count())
-    pairs = near_dup_pairs(
-        docs, num_hashes=32, bands=16, rows=2, threshold=0.8, max_bucket_size=50
+    def probe(name, build, value=lambda df: df.count()):
+        """Time ``value(build())`` under its own job group; the frame
+        is built inside the timing, since a driver finish collects at
+        build time."""
+        sc.setJobGroup(name, name)
+        t = time.perf_counter()
+        df = build()
+        n = value(df)
+        out[name] = round(time.perf_counter() - t, 2)
+        # a marker job in a later group: once it is reported, every
+        # job of this stage has been
+        sc.setJobGroup(name + "-marker", "marker")
+        spark.range(1).collect()
+        while not sc.statusTracker().getJobIdsForGroup(name + "-marker"):
+            time.sleep(0.05)
+        out[name + "_jobs"] = len(sc.statusTracker().getJobIdsForGroup(name))
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        local = "LocalRelation" in plan or "LocalTableScan" in plan  # cached: physical
+        out[name + "_finish"] = "driver" if local else "distributed"
+        print(
+            f"# {name}: {out[name]}s ({n} rows, {out[name + '_jobs']} jobs,"
+            f" {out[name + '_finish']} finish)",
+            file=sys.stderr,
+        )
+        return df, n
+
+    probe("exact_dedup", lambda: exact_dedup(docs))
+    pairs, n_pairs = probe(
+        "minhash_verified_pairs",
+        lambda: near_dup_pairs(
+            docs, num_hashes=32, bands=16, rows=2, threshold=0.8, max_bucket_size=50
+        ).persist(),
     )
-    pairs = pairs.persist()
-    n_pairs = probe("minhash_verified_pairs", lambda: pairs.count())
     probe(
         "cluster_resolution",
-        lambda: connected_components(
-            pairs.select("id_a", "id_b"), materialize="persist"
-        ).count(),
+        lambda: connected_components(pairs.select("id_a", "id_b"), materialize="persist"),
     )
     fp = simhash(docs)
     probe(
         "simhash_pairs",
-        lambda: simhash_near_pairs(fp, max_hamming=3, max_bucket_size=50).count(),
+        lambda: simhash_near_pairs(fp, max_hamming=3, max_bucket_size=50),
     )
 
     # line-level boilerplate removal: lines = 8-token chunks (5/doc);
@@ -101,9 +126,8 @@ def main():
     lined = docs.select("doc_id", chunks.alias("lines"))
     probe(
         "line_dedup",
-        lambda: line_dedup(lined, max_docs=3)
-        .agg(F.sum("n_removed"))
-        .collect()[0][0],
+        lambda: line_dedup(lined, max_docs=3).agg(F.sum("n_removed")),
+        value=lambda df: df.collect()[0][0],
     )
 
     # embedding near-dup: deterministic 32-dim embeddings from the
@@ -140,7 +164,7 @@ def main():
             threshold=0.99,
             id_col="doc_id",
             max_bucket_size=50,
-        ).count(),
+        ),
     )
 
     # incremental ingest: a 50k-doc batch (re-arrivals of corpus docs
@@ -152,16 +176,13 @@ def main():
         minhash_signatures,
     )
 
-    sigs = minhash_signatures(docs).persist()
-    probe("corpus_signatures_once", lambda: sigs.count())
+    sigs, _ = probe("corpus_signatures_once", lambda: minhash_signatures(docs).persist())
     batch = docs.filter(F.col("doc_id") % 20 == 0).select(
         (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
     )
     probe(
         "incremental_50k_batch",
-        lambda: incremental_near_dup(
-            docs, batch, corpus_sigs=sigs, max_bucket_size=50
-        ).count(),
+        lambda: incremental_near_dup(docs, batch, corpus_sigs=sigs, max_bucket_size=50),
     )
 
     out.update(
